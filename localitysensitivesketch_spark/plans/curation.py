@@ -56,6 +56,7 @@ from ..operators.dedup import (
 )
 from ..operators.signatures import with_doc_id
 from ..operators.urls import normalize_urls
+from ..session import local_frame
 from .pipeline import DedupPipeline
 
 
@@ -718,6 +719,6 @@ class CurationPipeline:
             n = df.count()
             rows.append((name, n_prev, n))
             n_prev = n
-        return self.spark.createDataFrame(
-            rows, "stage string, n_in long, n_out long"
+        return local_frame(
+            self.spark, rows, "stage string, n_in long, n_out long"
         ).withColumn("dropped", F.col("n_in") - F.col("n_out"))

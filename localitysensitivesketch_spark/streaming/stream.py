@@ -29,12 +29,15 @@ from pyspark.sql.streaming import StreamingQuery
 from ..config import SketchConfig
 from ..operators.candidates import pairs_by_key
 from ..operators.signatures import compute_signatures
+from ..session import local_frame
 
 
 DOC_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
-def _write_by_batch(df: DataFrame, path: str, batch_id: int) -> None:
+def _write_by_batch(
+    df: DataFrame, path: str, batch_id: int, empty: bool | None = None
+) -> None:
     """Idempotent per-batch store write: partitioned by batch_id with
     DYNAMIC partition overwrite, so a Structured Streaming replay of the
     same batch rewrites its own partition instead of appending.
@@ -45,8 +48,14 @@ def _write_by_batch(df: DataFrame, path: str, batch_id: int) -> None:
     schema inference) — skipping the very first write is replay-equivalent
     (absent directory == no state).  Once the directory exists its schema
     is pinned by earlier footers, and the empty dynamic overwrite touches
-    no partitions, so it is skipped too (pure no-op either way)."""
-    if df.isEmpty():
+    no partitions, so it is skipped too (pure no-op either way).
+
+    ``empty`` is what the caller already knows from a count it took
+    anyway; only when it is ``None`` (no count exists) does the write
+    probe ``df`` with ``isEmpty()``, which costs one Spark job."""
+    if empty is None:
+        empty = df.isEmpty()
+    if empty:
         return
     df.withColumn("batch_id", F.lit(batch_id)).write.mode(
         "overwrite"
@@ -210,13 +219,20 @@ def process_incremental_batch(
     sees exactly the pre-batch store state — without this, the batch's own
     signatures (written by the failed attempt) would re-enter through the
     uncapped new-vs-old join and re-add intra-batch pairs the width cap
-    deliberately dropped.
+    deliberately dropped.  An empty batch is a no-op after its signature
+    pass.
     """
     sig_path = os.path.join(store_root, "sigs")
     pair_path = os.path.join(store_root, "pairs")
     sigs = compute_signatures(
         batch_df, cfg, id_col=id_col, text_col=text_col
     ).localCheckpoint(eager=True)
+    # one signature row per batch row: an empty batch (e.g. an all-dropped
+    # curation batch) adds no state, so it returns before candidates,
+    # verify and CC run over zero rows and rewrite an unchanged snapshot;
+    # the probe also settles the emptiness of the sigs and docs writes
+    if sigs.isEmpty():
+        return
     new_keys = sigs.filter(F.col("n_shingles") > 0).select(
         "doc_id", F.explode("band_keys").alias("key")
     )
@@ -246,7 +262,7 @@ def process_incremental_batch(
     pairs = pairs.localCheckpoint(eager=True)  # plan may read pair/sig dirs
 
     _write_by_batch(pairs, pair_path, batch_id)
-    _write_by_batch(sigs, sig_path, batch_id)
+    _write_by_batch(sigs, sig_path, batch_id, empty=False)
 
     if not full_pipeline:
         return
@@ -307,7 +323,7 @@ def process_incremental_batch(
         clusters = connected_components(
             all_docs.select("doc_id"), all_edges
         ).localCheckpoint(eager=True)
-    _write_by_batch(batch_docs, doc_path, batch_id)
+    _write_by_batch(batch_docs, doc_path, batch_id, empty=False)
     _write_by_batch(new_edges, edge_path, batch_id)
     # global snapshot via staged write + rename swap: a bare
     # mode("overwrite") clears the old directory BEFORE the new data
@@ -435,16 +451,20 @@ def process_curation_batch(
     curated = curated.localCheckpoint(eager=True)  # write + caller chain
     n_curated = curated.count()
 
-    _write_by_batch(keepers, hash_path, batch_id)
-    _write_by_batch(curated, curated_path, batch_id)
+    # every keeper's doc_id is a row of ``passed`` (the semi join above
+    # drops null ids), so keepers is empty exactly when curated is
+    _write_by_batch(keepers, hash_path, batch_id, empty=n_curated == 0)
+    _write_by_batch(curated, curated_path, batch_id, empty=n_curated == 0)
     _write_by_batch(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(n_in, n_unblocked, n_quality, n_curated)],
             "n_in long, n_unblocked long, n_quality_kept long, "
             "n_curated long",
         ),
         metrics_path,
         batch_id,
+        empty=False,
     )
     return curated
 
@@ -470,8 +490,9 @@ def stream_curation(
     the full near-dup pipeline (:func:`process_incremental_batch`
     ``full_pipeline=True`` — sigs → incremental candidates → verify →
     incremental CC) over the CURATED survivors only, under
-    ``store_root/dedup``.  Restart resumes from the stream checkpoint;
-    every per-batch write is replay-idempotent."""
+    ``store_root/dedup``; an all-dropped batch leaves that state
+    untouched.  Restart resumes from the stream checkpoint; every
+    per-batch write is replay-idempotent."""
     ckpt = os.path.join(store_root, "_curation_checkpoint")
     # same multilingual default as plans.curation.CurationPipeline: a web
     # crawl stream is multilingual and the English-stopword rule would

@@ -731,3 +731,22 @@ def test_merge_documents_null_text_and_custom_text_col(spark, tmp_path):
     want = sorted((r["url"], r["body"]) for r in ref.survivors.collect())
     assert got == want
     assert not any(u == nul_url for u, _ in got)
+
+
+def test_funnel_audit_is_built_jvm_side(spark, tmp_path):
+    """The funnel audit plans as a LocalRelation/Range, never a LogicalRDD
+    over a Python list (every action on which runs Python-worker tasks),
+    with the audit schema and values unchanged."""
+    pipe = CurationPipeline(spark, str(tmp_path / "funnel_plan"))
+    raw = spark.range(10)
+    audit = pipe._funnel(raw, [("exact", raw.filter("id < 7")),
+                               ("quality", raw.filter("id < 4"))])
+    plan = audit._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in plan
+    assert "LocalRelation" in plan or "Range" in plan
+    assert audit.schema.simpleString() == (
+        "struct<stage:string,n_in:bigint,n_out:bigint,dropped:bigint>"
+    )
+    assert [tuple(r) for r in audit.collect()] == [
+        ("raw", 10, 10, 0), ("exact", 10, 7, 3), ("quality", 7, 4, 3),
+    ]

@@ -599,3 +599,120 @@ def test_curation_all_dropped_first_batch_does_not_poison_store(spark, tmp_path)
     ST.process_curation_batch(spark, junk, 2, store, gopher_kwargs=_GQ)
     again = sorted(r["doc_id"] for r in ST.read_curated(spark, store).collect())
     assert again == [10, 11]
+
+
+def test_curation_bookkeeping_is_jvm_side_and_unprobed(spark, tmp_path, monkeypatch):
+    """The per-batch metrics row plans as a LocalRelation/Range (never a
+    LogicalRDD over a Python list, whose every action runs Python-worker
+    tasks), keeps its values and schema, and a non-empty batch takes no
+    isEmpty() probe: every write's emptiness follows from counts the
+    batch already took."""
+    written = {}
+    real_write = ST._write_by_batch
+
+    def capture(df, path, batch_id, empty=None):
+        written[path.rsplit("/", 1)[-1]] = df
+        real_write(df, path, batch_id, empty)
+
+    probes = []
+    frame_cls = type(spark.range(1))
+    real_is_empty = frame_cls.isEmpty
+
+    def counting_is_empty(self):
+        probes.append(1)
+        return real_is_empty(self)
+
+    monkeypatch.setattr(ST, "_write_by_batch", capture)
+    monkeypatch.setattr(frame_cls, "isEmpty", counting_is_empty)
+    store = str(tmp_path / "bookkeeping_store")
+    ST.process_curation_batch(
+        spark, _curation_batches(spark)[0], 0, store, gopher_kwargs=_GQ
+    )
+    assert probes == []
+
+    plan = written["curation_metrics"]._jdf.queryExecution().optimizedPlan()
+    plan = plan.toString()
+    assert "LogicalRDD" not in plan
+    assert "LocalRelation" in plan or "Range" in plan
+    m = spark.read.parquet(f"{store}/curation_metrics")
+    assert m.schema.simpleString() == (
+        "struct<n_in:bigint,n_unblocked:bigint,n_quality_kept:bigint,"
+        "n_curated:bigint,batch_id:int>"
+    )
+    assert [tuple(r) for r in m.collect()] == [(4, 4, 3, 3, 0)]
+
+
+def test_stream_curation_all_dropped_first_batch_skips_near_dup_tier(
+    spark, tmp_path
+):
+    """An all-dropped micro-batch leaves the near-dup state untouched (no
+    dedup store is created for it); the next good batch then ends with
+    the batch reference's clusters, and a replay of that batch (its
+    commit removed from the stream checkpoint) is a no-op."""
+    import os as _os
+
+    from localitysensitivesketch_spark.operators.corpus import gopher_filter
+    from localitysensitivesketch_spark.operators.dedup import (
+        exact_dedup,
+        minhash_lsh_dedup,
+    )
+
+    gq = {"min_chars_per_token": 0.0, "max_chars_per_token": 100.0, **_GQ}
+    path = str(tmp_path / "drop_first_docs")
+    store = str(tmp_path / "drop_first_store")
+
+    def run_stream():
+        stream = ST.read_document_stream(
+            spark, path, schema="doc_id long, text string",
+            max_files_per_trigger=1,
+        )
+        ST.stream_curation(
+            spark, stream, store, cfg=CFG, gopher_kwargs=gq, dedup=True
+        ).awaitTermination(300)
+
+    junk = spark.createDataFrame(
+        [(0, _JUNK), (1, _JUNK)], "doc_id long, text string"
+    )
+    junk.coalesce(1).write.mode("append").parquet(path)
+    run_stream()
+    assert not _os.path.exists(f"{store}/curated")
+    assert not _os.path.exists(f"{store}/dedup")  # the tier did not run
+
+    good = with_doc_id(
+        corpus_to_spark(
+            spark, generate_corpus(n_docs=40, seed=5, min_tokens=40, max_tokens=120)
+        )
+    ).select("doc_id", "text")
+    good.coalesce(1).write.mode("append").parquet(path)
+    run_stream()  # a restart picks up the new file as batch 1
+
+    kept = exact_dedup(good)
+    survivors = kept.join(
+        gopher_filter(kept, min_stopword_ratio=0.0, **gq)
+        .filter("keep")
+        .select("doc_id"),
+        "doc_id",
+        "left_semi",
+    )
+    want = sorted(
+        (r["doc_id"], r["cluster_id"])
+        for r in minhash_lsh_dedup(survivors, CFG)["clusters"].collect()
+    )
+
+    def clusters():
+        return sorted(
+            (r["doc_id"], r["cluster_id"])
+            for r in spark.read.parquet(f"{store}/dedup/clusters").collect()
+        )
+
+    got = clusters()
+    assert got == want
+    assert len({c for _, c in got}) < len(got)  # some near-dups clustered
+
+    commits = f"{store}/_curation_checkpoint/commits"
+    _os.remove(f"{commits}/1")
+    _os.remove(f"{commits}/.1.crc")
+    run_stream()  # Structured Streaming replays batch 1
+    assert clusters() == want
+    assert spark.read.parquet(f"{store}/dedup/docs").count() == len(want)
+    assert ST.read_curated(spark, store).count() == len(want)

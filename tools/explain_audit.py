@@ -8,7 +8,10 @@ Checks, per representative operator:
   * small dimensions broadcast (BroadcastHashJoin, not SortMergeJoin);
   * no Python row UDFs (BatchEvalPython must never appear; ArrowEvalPython /
     MapInPandas are the only Python operators allowed);
-  * whole-stage codegen present in JVM-side pipelines.
+  * whole-stage codegen present in JVM-side pipelines;
+  * no Python-list scans in the bookkeeping tables (the stream's per-batch
+    metrics row and the curation funnel audit must plan as LocalRelation
+    or Range, never as a LogicalRDD whose every action runs Python tasks).
 
 Usage: python tools/explain_audit.py [sf_dir]
 """
@@ -132,6 +135,38 @@ def main() -> int:
         "percentile-approx-path",
         "percentile_approx" in p or "approx_percentile" in p,
     )
+
+    # 9. bookkeeping tables plan JVM-side: capture the metrics row one
+    # micro-batch writes, and build a funnel audit over tiny tiers
+    import tempfile
+
+    from localitysensitivesketch_spark.plans.curation import CurationPipeline
+    from localitysensitivesketch_spark.streaming import stream as ST
+
+    written = {}
+    real_write = ST._write_by_batch
+
+    def capture(df, path, batch_id, empty=None):
+        written[os.path.basename(path)] = df
+        real_write(df, path, batch_id, empty)
+
+    batch = docs.select("doc_id", "text").limit(20)
+    with tempfile.TemporaryDirectory() as tmp:
+        ST._write_by_batch = capture
+        try:
+            ST.process_curation_batch(spark, batch, 0, os.path.join(tmp, "s"))
+        finally:
+            ST._write_by_batch = real_write
+        audit = CurationPipeline(spark, os.path.join(tmp, "c"))._funnel(
+            batch, [("exact", batch)]
+        )
+        bad = [
+            name
+            for name, df in (("curation_metrics", written["curation_metrics"]),
+                             ("funnel", audit))
+            if "LogicalRDD" in df._jdf.queryExecution().optimizedPlan().toString()
+        ]
+    check("no-python-list-scans", not bad, ", ".join(bad))
 
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nall green")
     spark.stop()

@@ -5,7 +5,8 @@ Runs ``stream_curation`` (quality gate + exact tier per micro-batch,
 over a REAL file stream of the shared bench corpus, split into N parquet
 files consumed one per trigger, and records:
 
-* per-micro-batch wall (from the query's progress events) + total wall;
+* per-micro-batch wall (from the query's progress events) and Spark job
+  count (from the application status store) + total wall;
 * end-state equality with the batch funnel on the same input —
   (a) curated text-md5 set == batch exact+quality survivors' md5 set,
   (b) near-dup cluster PARTITION (sets of member doc_ids) == a batch
@@ -24,6 +25,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import shutil
 import sys
 import time
@@ -50,6 +52,27 @@ SCRATCH = (
 )
 
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
+
+
+def jobs_per_batch(spark, run_id: str) -> dict[int, int]:
+    """Spark jobs each micro-batch of the query run ``run_id`` ran.
+
+    Read from the application status store, which runs no job: a streaming
+    query runs its jobs in the job group named by its run id, with a job
+    description ending in ``batch = <id>``."""
+    sc = spark.sparkContext._jsc.sc()
+    jvm = spark.sparkContext._jvm
+    sc.listenerBus().waitUntilEmpty(60_000)  # every job end has landed
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    mapper.registerModule(jvm.com.fasterxml.jackson.module.scala.DefaultScalaModule())
+    jobs = json.loads(mapper.writeValueAsString(sc.statusStore().jobsList(None)))
+    counts: dict[int, int] = {}
+    for job in jobs:
+        m = re.search(r"batch = (\d+)", job.get("description") or "")
+        if job.get("jobGroup") == run_id and m:
+            batch_id = int(m.group(1))
+            counts[batch_id] = counts.get(batch_id, 0) + 1
+    return counts
 
 
 def main() -> None:
@@ -124,11 +147,13 @@ def main() -> None:
     # numInputRows counts every source read during the trigger — the
     # foreachBatch body takes several actions over the (uncached) batch
     # file, so this is a multiple of the file's row count, reported as-is
+    jobs = jobs_per_batch(spark, str(q.runId))
     batch_walls = [
         {
             "batch_id": p["batchId"],
             "source_rows_read": p["numInputRows"],
             "wall_s": round(p["durationMs"]["triggerExecution"] / 1000.0, 2),
+            "jobs": jobs.get(p["batchId"], 0),
         }
         for p in q.recentProgress
         if p["numInputRows"] > 0
