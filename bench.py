@@ -205,27 +205,6 @@ def main() -> None:
             "lossless": cev["lossless"],
             "evidence_file": os.path.basename(cont_ev),
         }
-    # narrow-vs-wide stage-format A/B (store-write IO vs wall, matched
-    # interleaved pairs at local[16]/800k — BENCH/BASELINE.md "Narrow
-    # stage format")
-    for name in ("funnel_800k_format_ab_r5.json",
-                 "funnel_800k_format_ab_r4.json"):
-        ab_ev = os.path.join(bench_dir, name)
-        if os.path.exists(ab_ev):
-            break
-    if os.path.exists(ab_ev):
-        with open(ab_ev) as f:
-            ab = json.load(f)["summary"]
-        scaling = scaling or {}
-        scaling["funnel_stage_format_ab"] = {
-            "wide_store_gb": ab["wide_store_gb"],
-            "narrow_store_gb": ab["narrow_store_gb"],
-            "store_write_reduction": ab["store_write_reduction"],
-            "matched_pair_wall_ratios_narrow_over_wide":
-                ab["matched_pair_wall_ratios_narrow_over_wide"],
-            "funnel_audits_identical": ab["funnel_audits_identical"],
-            "evidence_file": os.path.basename(ab_ev),
-        }
 
     total = round(sum(timings.values()), 3)
     full_record = {

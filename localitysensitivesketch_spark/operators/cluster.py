@@ -3,17 +3,17 @@
 The reference's end product is a cluster assignment per key (the paper's
 "clustering-preserving" guarantee — keys grouped by value similarity,
 ``Sketching/LSSFingerprintAtomic.java:474-498``).  Ours is the duplicate
-cluster label per doc.  Two interchangeable algorithms behind one
-interface (SURVEY §4.2 item 2):
+cluster label per doc (SURVEY §4.2 item 2):
 
-* ``algorithm="label"`` (default) — iterative min-label propagation:
+* :func:`connected_components` — iterative min-label propagation:
   ``label(v) ← min(label(v), min over neighbors u of label(u))`` to
   fixpoint.  O(diameter) rounds — duplicate clusters from LSH banding are
   near-cliques, so 2-3 rounds in practice.
-* ``algorithm="star"`` — alternating large-star / small-star (Kiveris et
-  al., "Connected Components in MapReduce and Beyond", SoCC 2014):
-  O(log n) rounds regardless of diameter — the fallback for chain-shaped
-  graphs (boilerplate A↔B↔C…) where label propagation needs O(n) rounds.
+* :func:`connected_components_star` — alternating large-star / small-star
+  (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
+  2014): O(log n) rounds regardless of diameter — the fallback
+  :func:`connected_components` switches to when a chain-shaped graph
+  (boilerplate A↔B↔C…) does not converge within ``max_iter`` rounds.
 
 Both are deterministic and order-independent (min is commutative/
 associative), so labels are identical at any parallelism level — the
@@ -75,7 +75,6 @@ def connected_components(
     edges: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 50,
-    algorithm: str = "label",
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """vertices(id), edges(id1, id2) → (doc_id, cluster_id).
@@ -84,14 +83,10 @@ def connected_components(
     vertices label themselves (outside the iteration).  ``checkpoint_dir``
     switches round truncation from executor-local ``localCheckpoint`` to
     reliable ``checkpoint()`` (survives executor loss on a cluster).
+    Label propagation that has not converged after ``max_iter`` rounds
+    (a chain longer than ~``max_iter``) hands the same inputs to
+    :func:`connected_components_star` instead of returning wrong labels.
     """
-    if algorithm == "star":
-        return connected_components_star(
-            vertices, edges, id_col, max_iter, checkpoint_dir
-        )
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r} (label|star)")
-
     ck = _ckpt_fn(edges, checkpoint_dir)
     verts = vertices.select(F.col(id_col).cast("long").alias("id")).distinct()
     # pin the (often expensive — a whole candidate join) edge plan BEFORE
@@ -111,7 +106,7 @@ def connected_components(
     )
     labels = ck(labels)
 
-    for it in range(max_iter):
+    for _ in range(max_iter):
         nbr_min = (
             sym.join(labels, sym.src == labels.id)
             .groupBy("dst")
@@ -139,6 +134,14 @@ def connected_components(
         changed = new_labels.filter(F.col("label") != F.col("old_label")).count()
         if changed == 0:
             break
+    else:
+        logger.warning(
+            "connected_components: label propagation did not converge in "
+            "%d rounds — falling back to large-star/small-star", max_iter
+        )
+        return connected_components_star(
+            vertices, edges, id_col, max_iter, checkpoint_dir
+        )
 
     return verts.join(labels, "id", "left").select(
         F.col("id").alias("doc_id"),

@@ -30,11 +30,10 @@ tiers and the state is the committed stage tables.
 Scale notes: each tier only ever shuffles ids/hashes (the wide
 ``html``/``text`` payload moves once, in the final left-semi join that
 materializes survivors); the near-dup tier inherits the spine's
-salted/capped band joins and doc-parallel verify.  With the default
-``stage_format="narrow"`` the store WRITES are narrow too: the page
-payload is committed once (``captures``) and every later tier commits a
-keep-list (span tier: affected rows only), so total funnel write IO is
-~1× corpus bytes instead of ~5× — see ``CurationPipeline.run``.
+salted/capped band joins and doc-parallel verify.  The store WRITES
+are narrow too: the page payload is committed once (``captures``) and
+every later tier commits a keep-list (span tier: affected rows only), so
+total funnel write IO is ~1× corpus bytes — see ``CurationPipeline.run``.
 """
 
 from __future__ import annotations
@@ -58,6 +57,10 @@ from ..operators.signatures import with_doc_id
 from ..operators.urls import normalize_urls
 from ..session import local_frame
 from .pipeline import DedupPipeline
+
+
+# in every keep-list key: old stores resume, old full-row commits never match
+_FMT = {"fmt": "ids"}
 
 
 def _params_sig(params: dict) -> str:
@@ -145,7 +148,6 @@ class CurationPipeline:
         containment_threshold: float | None = None,
         exactsubstr_window: int | None = None,
         exactsubstr_min_remaining: int = 0,
-        stage_format: str = "narrow",
         auto_partition: bool = False,
     ) -> CurationResult:
         """``auto_partition=True`` scopes ``spark.sql.shuffle.partitions``
@@ -161,31 +163,21 @@ class CurationPipeline:
         it on, the per-url byte-identity invariant is keyed by canonical
         url.
 
-        ``stage_format`` — what the filter tiers COMMIT to the store:
-
-        * ``"narrow"`` (default): the wide page payload (``html`` +
-          ``text``) is written exactly once, at the ``captures`` stage.
-          Every later tier commits only its keep-list ``(doc_id)`` (the
-          span tier: only the AFFECTED docs' ``(doc_id, spans,
-          clean_text, tokens_removed, kept)`` rows), and the wide view
-          each downstream tier consumes is reconstructed lazily as a
-          ``left_semi`` join against ``captures`` — AQE turns it into a
-          broadcast when the list is small; at cluster scale the
-          bucketed-store path (`sources/bucketed_store.py`) makes it
-          exchange-free.  At 100 TB this is the only viable shape: the
-          wide format rewrites the corpus through the store once per
-          tier (~5× corpus bytes of write IO for the full funnel), a
-          keep-list is ~16 bytes/doc.
-        * ``"wide"``: round-3 behavior — every tier commits its full
-          surviving rows.  Stage keys are unchanged from round 3, so
-          existing checkpoints resume; reads of a committed tier need no
-          reconstruction join.
-
-        Both formats produce identical CurationResult contents (the
-        result fields are always the wide views) and identical funnel
-        audits; the narrow span view reproduces ``clean_text``
-        byte-identically, including the whitespace normalization
-        ``remove_duplicate_spans`` applies to unaffected docs."""
+        What the tiers COMMIT to the store: the wide page payload
+        (``html`` + ``text``) is written exactly once, at the
+        ``captures`` stage.  Every later tier commits only its keep-list
+        ``(doc_id)`` (the span tier: only the AFFECTED docs' ``(doc_id,
+        spans, clean_text, tokens_removed, kept)`` rows), and the wide
+        view each downstream tier consumes is reconstructed lazily as a
+        ``left_semi`` join against ``captures`` — AQE turns it into a
+        broadcast when the list is small; at cluster scale the
+        bucketed-store path (`sources/bucketed_store.py`) makes it
+        exchange-free.  A keep-list is ~16 bytes/doc, so the full funnel
+        writes ~1× corpus bytes instead of rewriting the corpus once per
+        tier.  The result fields are always the wide views; the span
+        view reproduces ``clean_text`` byte-identically, including the
+        whitespace normalization ``remove_duplicate_spans`` applies to
+        unaffected docs."""
         from contextlib import nullcontext
 
         from ..session import partition_policy
@@ -199,7 +191,7 @@ class CurationPipeline:
             return self._run_stages(
                 raw, resume, url_col, ts_col, text_col, canonicalize,
                 containment_threshold, exactsubstr_window,
-                exactsubstr_min_remaining, stage_format,
+                exactsubstr_min_remaining,
             )
 
     def _run_stages(
@@ -213,16 +205,7 @@ class CurationPipeline:
         containment_threshold: float | None,
         exactsubstr_window: int | None,
         exactsubstr_min_remaining: int,
-        stage_format: str,
     ) -> CurationResult:
-        if stage_format not in ("narrow", "wide"):
-            raise ValueError(
-                f"stage_format must be 'narrow' or 'wide', got {stage_format!r}"
-            )
-        narrow = stage_format == "narrow"
-        # narrow commits are re-keyed so resume never hands a keep-list
-        # to a reader expecting round-3 wide rows (or vice versa)
-        fmt = {"fmt": "ids"} if narrow else {}
         ran: list[str] = []
         reused: list[str] = []
 
@@ -242,21 +225,14 @@ class CurationPipeline:
                  "canonicalize": canonicalize}
         k_cap = _qualify("captures", p_cap)
         captures = self._stage(k_cap, _captures, resume, ran, reused, deps=[])
-        p_exact = {"text_col": text_col, "in": k_cap, **fmt}
+        p_exact = {"text_col": text_col, "in": k_cap, **_FMT}
         k_exact = _qualify("exact_kept", p_exact)
-        if narrow:
-            exact_ids = self._stage(
-                k_exact,
-                lambda: exact_dedup(captures, text_col=text_col, ids_only=True),
-                resume, ran, reused, deps=[k_cap],
-            )
-            exact_kept = captures.join(exact_ids, "doc_id", "left_semi")
-        else:
-            exact_kept = self._stage(
-                k_exact,
-                lambda: exact_dedup(captures, text_col=text_col),
-                resume, ran, reused, deps=[k_cap],
-            )
+        exact_ids = self._stage(
+            k_exact,
+            lambda: exact_dedup(captures, text_col=text_col, ids_only=True),
+            resume, ran, reused, deps=[k_cap],
+        )
+        exact_kept = captures.join(exact_ids, "doc_id", "left_semi")
         p_quality = {"text_col": text_col, "gopher": self.gopher_kwargs,
                      "in": k_exact}
         k_quality = _qualify("quality", p_quality)
@@ -268,10 +244,10 @@ class CurationPipeline:
             resume, ran, reused, deps=[k_exact],
         )
         # quality was computed over the exact-kept view, so its keep-set
-        # is already ⊆ the exact keep-set — in narrow mode join it
-        # straight against `captures` (ONE reconstruction semi-join for
-        # the near-dup spine's input instead of two stacked ones)
-        passed = (captures if narrow else exact_kept).join(
+        # is already ⊆ the exact keep-set — join it straight against
+        # `captures` (ONE reconstruction semi-join for the near-dup
+        # spine's input instead of two stacked ones)
+        passed = captures.join(
             quality.filter("keep").select("doc_id"), "doc_id", "left_semi"
         )
         # the embedded near-dup spine inherits the upstream lineage hash:
@@ -290,33 +266,19 @@ class CurationPipeline:
         reused += near.stages_resumed
         k_surv = _qualify(
             "survivors",
-            {"text_col": text_col, "in": [k_quality, dedup_sfx], **fmt},
+            {"text_col": text_col, "in": [k_quality, dedup_sfx], **_FMT},
         )
-        if narrow:
-            # clusters covers exactly the docs in `passed`, so the
-            # canonical-label filter alone IS the keep-list — no join
-            surv_ids = self._stage(
-                k_surv,
-                lambda: near.clusters.filter(
-                    F.col("doc_id") == F.col("cluster_id")
-                ).select("doc_id"),
-                resume, ran, reused,
-                deps=[k_quality, "clusters" + dedup_sfx],
-            )
-            survivors = captures.join(surv_ids, "doc_id", "left_semi")
-        else:
-            survivors = self._stage(
-                k_surv,
-                lambda: passed.join(
-                    near.clusters.filter(
-                        F.col("doc_id") == F.col("cluster_id")
-                    ).select("doc_id"),
-                    "doc_id",
-                    "left_semi",
-                ),
-                resume, ran, reused,
-                deps=[k_quality, "clusters" + dedup_sfx],
-            )
+        # clusters covers exactly the docs in `passed`, so the
+        # canonical-label filter alone IS the keep-list — no join
+        surv_ids = self._stage(
+            k_surv,
+            lambda: near.clusters.filter(
+                F.col("doc_id") == F.col("cluster_id")
+            ).select("doc_id"),
+            resume, ran, reused,
+            deps=[k_quality, "clusters" + dedup_sfx],
+        )
+        survivors = captures.join(surv_ids, "doc_id", "left_semi")
         tiers = [
             ("latest_capture", captures),
             ("exact_dedup", exact_kept),
@@ -373,32 +335,23 @@ class CurationPipeline:
 
             k_cont = _qualify(
                 "containment_kept",
-                {"text_col": text_col, "threshold": t, "in": k_surv, **fmt},
+                {"text_col": text_col, "threshold": t, "in": k_surv, **_FMT},
             )
-            if narrow:
-                cont_ids = self._stage(
-                    k_cont,
-                    lambda: survivors.select("doc_id").join(
-                        _containment_dropped(), "doc_id", "left_anti"
-                    ),
-                    resume, ran, reused, deps=[k_surv],
-                )
-                survivors = captures.join(cont_ids, "doc_id", "left_semi")
-            else:
-                survivors = self._stage(
-                    k_cont,
-                    lambda: survivors.join(
-                        _containment_dropped(), "doc_id", "left_anti"
-                    ),
-                    resume, ran, reused, deps=[k_surv],
-                )
+            cont_ids = self._stage(
+                k_cont,
+                lambda: survivors.select("doc_id").join(
+                    _containment_dropped(), "doc_id", "left_anti"
+                ),
+                resume, ran, reused, deps=[k_surv],
+            )
+            survivors = captures.join(cont_ids, "doc_id", "left_semi")
             k_prev = k_cont
             tiers.append(("containment", survivors))
         if exactsubstr_window is not None:
             w = int(exactsubstr_window)
             min_rem = int(exactsubstr_min_remaining)
 
-            def _span_cleaned():
+            def _span_affected():
                 # ExactSubstr tier (Lee et al. ACL'22; the RefinedWeb
                 # funnel runs it after document-level near-dup for the
                 # same reason we do: document dedup cannot see a
@@ -408,18 +361,7 @@ class CurationPipeline:
                 # ``clean_text``/``spans``/``tokens_removed``, and docs
                 # left with fewer than ``exactsubstr_min_remaining``
                 # tokens outside duplicated spans are dropped.
-                cleaned = remove_duplicate_spans(
-                    survivors, window_tokens=w, text_col=text_col
-                )
-                if min_rem > 0:
-                    n = F.size(_tokens(text_col))
-                    cleaned = cleaned.filter(
-                        (n - F.col("tokens_removed")) >= min_rem
-                    )
-                return cleaned
-
-            def _span_affected():
-                # narrow commit: only docs the cut actually touched —
+                # The commit holds only docs the cut actually touched —
                 # on real web corpora the overwhelming minority — plus
                 # any untouched doc the min_remaining rule drops (it
                 # drops short docs even with zero spans cut, so the view
@@ -432,9 +374,9 @@ class CurationPipeline:
                 # null-safe verdict: a null-text doc has n = NULL, so the
                 # raw comparison is NULL and the row would silently fall
                 # out of the affected commit, then be resurrected by the
-                # reconstruction's coalesce(kept, True) — diverging from
-                # the wide path, whose filter drops the NULL row.  Pin it
-                # to kept=false so both formats drop it identically.
+                # reconstruction's coalesce(kept, True).  Pin it to
+                # kept=false so the doc is dropped, as a plain
+                # min_remaining filter over the cleaned rows drops it.
                 kept = (
                     F.lit(True) if min_rem <= 0
                     else F.coalesce(
@@ -452,38 +394,32 @@ class CurationPipeline:
             k_span = _qualify(
                 "span_cleaned",
                 {"text_col": text_col, "window": w,
-                 "min_remaining": min_rem, "in": k_prev, **fmt},
+                 "min_remaining": min_rem, "in": k_prev, **_FMT},
             )
-            if narrow:
-                affected = self._stage(
-                    k_span, _span_affected, resume, ran, reused,
-                    deps=[k_prev],
-                )
-                prev_cols = survivors.columns
-                joined = survivors.join(affected, "doc_id", "left").filter(
-                    F.coalesce(F.col("kept"), F.lit(True))
-                )
-                # unaffected docs still get the tokenizer's whitespace
-                # normalization in clean_text, byte-identical to the
-                # wide path's array_join over _tokens
-                survivors = joined.select(
-                    *[F.col(c) for c in prev_cols],
-                    F.coalesce(
-                        F.col("spans"),
-                        F.array().cast("array<struct<start:int,end:int>>"),
-                    ).alias("spans"),
-                    F.coalesce(
-                        F.col("clean_text"),
-                        F.array_join(_tokens(text_col), " "),
-                    ).alias("clean_text"),
-                    F.coalesce(
-                        F.col("tokens_removed"), F.lit(0).cast("long")
-                    ).alias("tokens_removed"),
-                )
-            else:
-                survivors = self._stage(
-                    k_span, _span_cleaned, resume, ran, reused, deps=[k_prev]
-                )
+            affected = self._stage(
+                k_span, _span_affected, resume, ran, reused, deps=[k_prev],
+            )
+            prev_cols = survivors.columns
+            joined = survivors.join(affected, "doc_id", "left").filter(
+                F.coalesce(F.col("kept"), F.lit(True))
+            )
+            # unaffected docs still get the tokenizer's whitespace
+            # normalization in clean_text, byte-identical to
+            # remove_duplicate_spans' array_join over _tokens
+            survivors = joined.select(
+                *[F.col(c) for c in prev_cols],
+                F.coalesce(
+                    F.col("spans"),
+                    F.array().cast("array<struct<start:int,end:int>>"),
+                ).alias("spans"),
+                F.coalesce(
+                    F.col("clean_text"),
+                    F.array_join(_tokens(text_col), " "),
+                ).alias("clean_text"),
+                F.coalesce(
+                    F.col("tokens_removed"), F.lit(0).cast("long")
+                ).alias("tokens_removed"),
+            )
             k_prev = k_span
             tiers.append(("exactsubstr", survivors))
         funnel = self._stage(
@@ -515,7 +451,6 @@ class CurationPipeline:
         containment_threshold: float | None = None,
         exactsubstr_window: int | None = None,
         exactsubstr_min_remaining: int = 0,
-        stage_format: str = "narrow",
     ) -> CurationResult:
         """Append-only incremental curation: merge a new crawl batch into a
         COMPLETED funnel checkpoint and return the updated
@@ -575,16 +510,10 @@ class CurationPipeline:
         keep-list recomputation."""
         from .incremental import incremental_update
 
-        if stage_format not in ("narrow", "wide"):
-            raise ValueError(
-                f"stage_format must be 'narrow' or 'wide', got {stage_format!r}"
-            )
-        narrow = stage_format == "narrow"
-        fmt = {"fmt": "ids"} if narrow else {}
         p_cap = {"url_col": url_col, "ts_col": ts_col,
                  "canonicalize": canonicalize}
         k_cap = _qualify("captures", p_cap)
-        k_exact = _qualify("exact_kept", {"text_col": text_col, "in": k_cap, **fmt})
+        k_exact = _qualify("exact_kept", {"text_col": text_col, "in": k_cap, **_FMT})
         k_quality = _qualify(
             "quality",
             {"text_col": text_col, "gopher": self.gopher_kwargs, "in": k_exact},
@@ -662,12 +591,7 @@ class CurationPipeline:
         merged_caps = captures.unionByName(new_caps)
         old_exact = self.store.read(k_exact)
         exact_upd = self.store.write(
-            k_exact,
-            old_exact.unionByName(
-                new_keep_ids if narrow
-                else new_exact_kept.select(*old_exact.columns)
-            ),
-            operation="merge-append",
+            k_exact, old_exact.unionByName(new_keep_ids), operation="merge-append"
         )
         old_quality = self.store.read(k_quality)
         quality_upd = self.store.write(
@@ -678,11 +602,9 @@ class CurationPipeline:
         # spine merge over the updated gate views (same reconstruction
         # shapes as run())
         passed_ids = quality_upd.filter("keep").select("doc_id")
-        exact_view = (
-            merged_caps.join(exact_upd, "doc_id", "left_semi")
-            if narrow else exact_upd
+        all_passed = merged_caps.join(exact_upd, "doc_id", "left_semi").join(
+            passed_ids, "doc_id", "left_semi"
         )
-        all_passed = exact_view.join(passed_ids, "doc_id", "left_semi")
         new_passed = new_exact_kept.join(
             new_quality.filter("keep").select("doc_id"), "doc_id", "left_semi"
         )
@@ -706,7 +628,6 @@ class CurationPipeline:
             containment_threshold=containment_threshold,
             exactsubstr_window=exactsubstr_window,
             exactsubstr_min_remaining=exactsubstr_min_remaining,
-            stage_format=stage_format,
         )
 
     def _funnel(self, raw, tiers):

@@ -80,7 +80,6 @@ class CheckpointStore:
         root: str,
         cfg: SketchConfig,
         snapshot_retention: int = 2,
-        gc_per_commit: bool = True,
     ):
         self.spark = spark
         self.root = root
@@ -90,15 +89,6 @@ class CheckpointStore:
         # (Iceberg's expire_snapshots retention; the current version is
         # always readable and never counts against this)
         self.snapshot_retention = snapshot_retention
-        # a stage commit is the natural point where the PREVIOUS stage's
-        # dropped DataFrames stop being reachable, but their
-        # localCheckpoint blocks stay pinned on the executors until the
-        # driver's Python GC releases the py4j refs (only then does
-        # Spark's ContextCleaner unpersist them).  One gc.collect() per
-        # commit (a handful per pipeline run, driver-side, no Spark job)
-        # keeps long multi-stage runs from dragging a growing tail of
-        # dead blocks into every later tier's memory budget.
-        self.gc_per_commit = gc_per_commit
         os.makedirs(root, exist_ok=True)
 
     # -- commit protocol ----------------------------------------------------
@@ -200,10 +190,15 @@ class CheckpointStore:
         with open(os.path.join(self.root, "lineage.jsonl"), "a") as f:
             f.write(json.dumps(meta) + "\n")
         self.expire_snapshots(stage)
-        if self.gc_per_commit:
-            # release the finished stage's dead checkpoint blocks (see
-            # __init__); driver-side only, no Spark job
-            gc.collect()
+        # a stage commit is the natural point where the PREVIOUS stage's
+        # dropped DataFrames stop being reachable, but their
+        # localCheckpoint blocks stay pinned on the executors until the
+        # driver's Python GC releases the py4j refs (only then does
+        # Spark's ContextCleaner unpersist them).  One gc.collect() per
+        # commit (a handful per pipeline run, driver-side, no Spark job)
+        # keeps long multi-stage runs from dragging a growing tail of
+        # dead blocks into every later tier's memory budget.
+        gc.collect()
         return out
 
     def _finalize(self, stage: str, out: DataFrame, wall_sec: float,

@@ -5,10 +5,21 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from localitysensitivesketch_spark.fixtures import corpus_to_spark, generate_corpus
+from localitysensitivesketch_spark.operators.corpus import (
+    gopher_filter,
+    remove_duplicate_spans,
+)
+from localitysensitivesketch_spark.operators.dedup import (
+    containment_pairs,
+    exact_dedup,
+    latest_capture,
+)
+from localitysensitivesketch_spark.operators.signatures import with_doc_id
 from localitysensitivesketch_spark.plans.curation import CurationPipeline
 
 GOPHER = dict(min_tokens=5, min_stopword_ratio=0.0)  # fixture corpus is gibberish
@@ -403,98 +414,149 @@ def test_incremental_update_invalidates_downstream_curation_stages(
     assert res2.survivors.count() == n_surv_before
 
 
-def _dir_bytes(path):
-    import os
+def _reference_funnel(raw, clusters, gopher, window, min_remaining=0,
+                      containment_threshold=None):
+    """Store-free reference for ``CurationPipeline.run``: the public
+    operators composed tier by tier, nothing committed, nothing
+    reconstructed.  The near-dup tier takes the run's own ``clusters``
+    (the spine has its own parity tests).  Returns (survivor rows,
+    funnel rows) in the shape :func:`_survivor_rows`/:func:`_funnel_rows`
+    give for a run."""
+    captures = with_doc_id(latest_capture(raw, key_col="url", ts_col="warc_ts"))
+    exact = exact_dedup(captures)
+    keep = gopher_filter(exact, **gopher).filter("keep").select("doc_id")
+    passed = exact.join(keep, "doc_id", "left_semi")
+    canon = clusters.filter(F.col("doc_id") == F.col("cluster_id"))
+    survivors = passed.join(canon.select("doc_id"), "doc_id", "left_semi")
+    tiers = [("latest_capture", captures), ("exact_dedup", exact),
+             ("quality_gate", passed), ("near_dup", survivors)]
+    if containment_threshold is not None:
+        # drop a doc contained in a strictly larger one, (size, -id) order
+        n_toks = F.size(
+            F.array_distinct(F.split(F.lower(F.trim("text")), r"\s+"))
+        )
+        size = {
+            r["doc_id"]: r["n"]
+            for r in survivors.select("doc_id", n_toks.alias("n")).collect()
+        }
+        pairs = containment_pairs(survivors, threshold=containment_threshold)
+        dropped = {
+            a for a, b in pairs.select("id_contained", "id_container").collect()
+            if (size[b], -b) > (size[a], -a)
+        }
+        survivors = survivors.filter(~F.col("doc_id").isin(list(dropped)))
+        tiers.append(("containment", survivors))
+    survivors = remove_duplicate_spans(survivors, window_tokens=window)
+    if min_remaining > 0:
+        n = F.size(F.split(F.trim("text"), r"\s+"))
+        survivors = survivors.filter(
+            (n - F.col("tokens_removed")) >= min_remaining
+        )
+    tiers.append(("exactsubstr", survivors))
+    funnel, n_prev = [], raw.count()
+    funnel.append(("raw", n_prev, n_prev, 0))
+    for name, df in tiers:
+        n = df.count()
+        funnel.append((name, n_prev, n, n_prev - n))
+        n_prev = n
+    return _survivor_rows(survivors), sorted(funnel)
 
-    total = 0
-    for dirpath, _, files in os.walk(path):
-        for f in files:
-            total += os.path.getsize(os.path.join(dirpath, f))
-    return total
+
+def _survivor_rows(df):
+    return sorted(
+        (r["url"], r["text"], r["clean_text"], r["tokens_removed"],
+         tuple((s["start"], s["end"]) for s in r["spans"]))
+        for r in df.collect()
+    )
 
 
-def test_narrow_and_wide_stage_formats_produce_identical_results(
-    spark, tmp_path
-):
-    """stage_format='narrow' (keep-list commits) and 'wide' (round-3
-    full-row commits) must agree on every output row — including the
-    span tier's clean_text/spans/tokens_removed and the funnel audit —
-    while the narrow store writes a fraction of the bytes (the page
-    payload is committed once instead of once per tier)."""
+def _funnel_rows(res):
+    return sorted(map(tuple, res.funnel.collect()))
+
+
+MESSY_TEXT = ("alpha  beta\tgamma\n delta epsilon zeta\teta  theta iota\n"
+              " kappa lambda mu")
+ALL_TIERS = dict(containment_threshold=0.9, exactsubstr_window=5,
+                 exactsubstr_min_remaining=2)
+
+
+@pytest.fixture(scope="module")
+def all_tiers(spark, tmp_path_factory):
+    """One all-tiers run over the fixture corpus plus a messy-whitespace
+    doc that passes every gate (exercises the clean_text normalization
+    the span view rebuilds for UNAFFECTED docs): (raw, store root,
+    pipeline, result)."""
     raw, _ = _raw(spark)
-    # messy whitespace doc: exercises the clean_text normalization the
-    # narrow view must reproduce for UNAFFECTED docs
-    from datetime import datetime as _dt
-
     messy = spark.createDataFrame(
-        [Row(url="http://messy.example/1", warc_ts=_dt(2024, 1, 1),
-             html=b"<m>", text="alpha  beta\tgamma\n delta " * 3 + "end",
-             lang="en")],
+        [Row(url="http://messy.example/1", warc_ts=datetime(2024, 1, 1),
+             html=b"<m>", text=MESSY_TEXT, lang="en")],
         raw.schema,
     )
     raw = raw.unionByName(messy)
-    kw = dict(containment_threshold=0.9, exactsubstr_window=5,
-              exactsubstr_min_remaining=2)
-
-    roots = {}
-    results = {}
-    for fmt in ("narrow", "wide"):
-        root = str(tmp_path / f"cur_{fmt}")
-        roots[fmt] = root
-        pipe = CurationPipeline(spark, root, gopher_kwargs=GOPHER)
-        results[fmt] = pipe.run(raw, stage_format=fmt, **kw)
-
-    n, w = results["narrow"], results["wide"]
-    assert n.survivors.columns == w.survivors.columns
-
-    def rows(df):
-        return sorted(
-            (r["url"], r["text"], r["clean_text"], r["tokens_removed"],
-             tuple((s["start"], s["end"]) for s in r["spans"]))
-            for r in df.survivors.collect()
-        )
-
-    assert rows(n) == rows(w)
-    assert sorted(map(tuple, n.funnel.collect())) == sorted(
-        map(tuple, w.funnel.collect())
-    )
-    # the whole point: narrow writes materially fewer bytes
-    nb, wb = _dir_bytes(roots["narrow"]), _dir_bytes(roots["wide"])
-    assert nb < wb, (nb, wb)
-
-    # narrow resumes from its own keep-list commits
-    again = CurationPipeline(
-        spark, roots["narrow"], gopher_kwargs=GOPHER
-    ).run(raw, stage_format="narrow", **kw)
-    assert not again.stages_run, again.stages_run
-    assert rows(again) == rows(w)
-
-
-def test_narrow_and_wide_stage_keys_never_collide(spark, tmp_path):
-    """Switching stage_format on the same store root must recompute the
-    re-formatted tiers (keys carry fmt), never hand a keep-list to a
-    reader expecting wide rows."""
-    raw, _ = _raw(spark)
-    root = str(tmp_path / "cur_fmt_switch")
+    root = str(tmp_path_factory.mktemp("cur_all_tiers"))
     pipe = CurationPipeline(spark, root, gopher_kwargs=GOPHER)
-    r_wide = pipe.run(raw, stage_format="wide")
-    r_narrow = pipe.run(raw, stage_format="narrow")
-    # captures (format-independent) is reused; the re-formatted tiers run
-    assert _has(r_narrow.stages_resumed, "captures")
-    assert _has(r_narrow.stages_run, "exact_kept")
-    assert _has(r_narrow.stages_run, "survivors")
-    a = sorted(map(tuple, r_wide.survivors.select("url", "text").collect()))
-    b = sorted(map(tuple, r_narrow.survivors.select("url", "text").collect()))
-    assert a == b
+    return raw, root, pipe, pipe.run(raw, **ALL_TIERS)
 
 
-def test_narrow_wide_parity_with_null_and_empty_text(spark, tmp_path):
+def test_run_matches_store_free_reference(spark, all_tiers):
+    """Every output row — including the span tier's clean_text/spans/
+    tokens_removed — and the funnel audit equal the store-free operator
+    composition, both on the first run and when every stage resumes from
+    its keep-list commit."""
+    raw, root, _, res = all_tiers
+    ref_rows, ref_funnel = _reference_funnel(
+        raw, res.clusters, GOPHER, window=5, min_remaining=2,
+        containment_threshold=0.9,
+    )
+    assert _survivor_rows(res.survivors) == ref_rows
+    assert _funnel_rows(res) == ref_funnel
+    messy = [r for r in ref_rows if r[0] == "http://messy.example/1"]
+    assert messy == [(
+        "http://messy.example/1", MESSY_TEXT,
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu",
+        0, (),
+    )]
+
+    again = CurationPipeline(spark, root, gopher_kwargs=GOPHER).run(
+        raw, **ALL_TIERS
+    )
+    assert not again.stages_run, again.stages_run
+    assert _survivor_rows(again.survivors) == ref_rows
+    assert _funnel_rows(again) == ref_funnel
+
+
+def test_page_payload_is_committed_once(all_tiers):
+    """Only ``captures`` commits the page payload; the filter tiers commit
+    single-column keep-lists and the span tier its affected rows."""
+    _, _, pipe, res = all_tiers
+    cols = {k.split("@")[0]: pipe.store.read(k).columns for k in res.stages_run}
+    assert "html" in cols.pop("captures")
+    assert all("html" not in c for c in cols.values()), cols
+    for stage in ("exact_kept", "survivors", "containment_kept"):
+        assert cols[stage] == ["doc_id"], (stage, cols[stage])
+    assert cols["span_cleaned"] == [
+        "doc_id", "spans", "clean_text", "tokens_removed", "kept",
+    ]
+
+
+def test_stage_keys_are_stable(all_tiers):
+    """Stage keys are pinned, so every store committed by earlier
+    releases resumes, and a full-row commit from the removed wide format
+    (its keys lacked the ``fmt`` param) can never be read as a keep-list."""
+    assert sorted(all_tiers[3].stages_run) == [
+        "candidates@4775d8d4", "captures@6cc9cb4c", "cluster_stats@4775d8d4",
+        "clusters@4775d8d4", "containment_kept@3e7be0a7", "edges@4775d8d4",
+        "exact_kept@6a5f2cf7", "funnel@adfb2c68", "quality@c30fe20d",
+        "signatures@4775d8d4", "skew_metrics@4775d8d4",
+        "span_cleaned@6e81b90b", "survivors@f9d8dda0", "verified@4775d8d4",
+    ]
+
+
+def test_run_matches_reference_with_null_and_empty_text(spark, tmp_path):
     """Null-/empty-/whitespace-text rows that survive a permissive
-    quality gate must flow through the narrow span-tier view exactly as
-    through the wide path (the narrow view rebuilds clean_text for
-    unaffected docs with a replica expression — nulls must agree)."""
-    from datetime import datetime as _dt
-
+    quality gate must flow through the span-tier view exactly as through
+    the store-free reference (the view rebuilds clean_text for unaffected
+    docs with a replica expression — nulls must agree)."""
     from pyspark.sql.types import (
         BinaryType, StringType, StructField, StructType, TimestampType,
     )
@@ -511,11 +573,11 @@ def test_narrow_wide_parity_with_null_and_empty_text(spark, tmp_path):
     )
     oddballs = spark.createDataFrame(
         [
-            Row(url="http://odd.example/null", warc_ts=_dt(2024, 1, 1),
+            Row(url="http://odd.example/null", warc_ts=datetime(2024, 1, 1),
                 html=b"", text=None, lang="en"),
-            Row(url="http://odd.example/empty", warc_ts=_dt(2024, 1, 1),
+            Row(url="http://odd.example/empty", warc_ts=datetime(2024, 1, 1),
                 html=b"", text="", lang="en"),
-            Row(url="http://odd.example/ws", warc_ts=_dt(2024, 1, 1),
+            Row(url="http://odd.example/ws", warc_ts=datetime(2024, 1, 1),
                 html=b"", text="  \t \n ", lang="en"),
         ],
         nullable_schema,
@@ -526,41 +588,28 @@ def test_narrow_wide_parity_with_null_and_empty_text(spark, tmp_path):
     gopher = dict(min_tokens=0, min_stopword_ratio=0.0,
                   min_chars_per_token=0.0, max_chars_per_token=1e9)
 
-    def rows(res):
-        return sorted(
-            (r["url"], r["text"], r["clean_text"], r["tokens_removed"],
-             tuple((s["start"], s["end"]) for s in r["spans"]))
-            for r in res.survivors.collect()
-        )
-
     # min_remaining=0 exercises the clean_text-rebuild replica; 2
     # exercises the null-safe kept verdict (a null-text doc has
-    # size(_tokens(NULL)) = NULL — the wide filter drops it, and the
-    # narrow view must commit kept=false instead of dropping the row
+    # size(_tokens(NULL)) = NULL — the reference's filter drops it, and
+    # the span tier must commit kept=false instead of dropping the row
     # from the affected commit and resurrecting it at reconstruction)
     for min_rem in (0, 2):
-        results = {}
-        for fmt in ("narrow", "wide"):
-            pipe = CurationPipeline(
-                spark, str(tmp_path / f"odd_{fmt}_{min_rem}"),
-                gopher_kwargs=gopher,
-            )
-            results[fmt] = pipe.run(
-                raw, stage_format=fmt, exactsubstr_window=5,
-                exactsubstr_min_remaining=min_rem,
-            )
-
-        n, w = rows(results["narrow"]), rows(results["wide"])
-        assert n == w, f"narrow/wide diverge at min_remaining={min_rem}"
-        urls = {r[0] for r in n}
+        res = CurationPipeline(
+            spark, str(tmp_path / f"odd_{min_rem}"), gopher_kwargs=gopher
+        ).run(raw, exactsubstr_window=5, exactsubstr_min_remaining=min_rem)
+        ref_rows, ref_funnel = _reference_funnel(
+            raw, res.clusters, gopher, window=5, min_remaining=min_rem
+        )
+        got = _survivor_rows(res.survivors)
+        assert got == ref_rows, f"diverges at min_remaining={min_rem}"
+        assert _funnel_rows(res) == ref_funnel
+        urls = {r[0] for r in got}
         if min_rem == 0:
             # the oddballs actually made it through (the test is vacuous
             # if the gate dropped them)
             assert ("http://odd.example/null" in urls
                     or "http://odd.example/empty" in urls)
         else:
-            # both formats must drop the null-text doc (NULL verdict
-            # pinned to kept=false on the narrow path)
             assert "http://odd.example/null" not in urls
             assert "http://odd.example/empty" not in urls
 
@@ -667,8 +716,6 @@ def test_merge_documents_matches_from_scratch_run(spark, tmp_path):
 def test_merge_documents_rejects_recrawled_urls(spark, tmp_path):
     """Content replacement needs delete+reinsert on the spine — a new
     capture of a committed url must be refused, not silently merged."""
-    import pytest
-
     raw, corpus = _raw(spark)
     pipe = CurationPipeline(spark, str(tmp_path / "rej"), gopher_kwargs=GOPHER)
     pipe.run(raw)

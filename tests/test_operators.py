@@ -626,8 +626,44 @@ def test_cc_star_path_graph_converges_in_log_rounds(spark):
     assert all(r["cluster_id"] == 0 for r in out) and len(out) == n
 
 
+def test_cc_falls_back_to_star_when_label_propagation_runs_out(
+    spark, monkeypatch, caplog
+):
+    """A path longer than ``max_iter`` rounds of min-label propagation
+    can reach must still get correct labels (via the large-star /
+    small-star fallback, with a warning), and a graph that converges in
+    time must never pay for the fallback."""
+    import logging
+
+    from localitysensitivesketch_spark.operators import cluster
+
+    def path(n):
+        verts = spark.range(n).withColumnRenamed("id", "doc_id")
+        edges = spark.range(n - 1).select(
+            F.col("id").alias("id1"), (F.col("id") + 1).alias("id2")
+        )
+        return verts, edges
+
+    n = 40
+    with caplog.at_level(logging.WARNING, logger=cluster.__name__):
+        out = cluster.connected_components(*path(n), max_iter=8).collect()
+    assert len(out) == n
+    assert [r["doc_id"] for r in out if r["cluster_id"] != 0] == []
+    assert "did not converge" in caplog.text
+
+    def _no_star(*a, **k):
+        raise AssertionError("fallback taken on a converging graph")
+
+    monkeypatch.setattr(cluster, "connected_components_star", _no_star)
+    out = cluster.connected_components(*path(6), max_iter=8).collect()
+    assert {r["cluster_id"] for r in out} == {0} and len(out) == 6
+
+
 def test_cc_label_and_star_agree_on_random_graph(spark):
-    from localitysensitivesketch_spark.operators.cluster import connected_components
+    from localitysensitivesketch_spark.operators.cluster import (
+        connected_components,
+        connected_components_star,
+    )
 
     rng = np.random.default_rng(7)
     n = 300
@@ -640,11 +676,11 @@ def test_cc_label_and_star_agree_on_random_graph(spark):
     edf = spark.createDataFrame(edges, "id1 long, id2 long")
     lab = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components(verts, edf, algorithm="label").collect()
+        for r in connected_components(verts, edf).collect()
     }
     star = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components(verts, edf, algorithm="star").collect()
+        for r in connected_components_star(verts, edf).collect()
     }
     assert lab == star and len(lab) == n
 
@@ -742,24 +778,23 @@ def test_cc_reliable_checkpoint_same_labels(spark, tmp_path):
 
     from localitysensitivesketch_spark.operators.cluster import (
         connected_components,
+        connected_components_star,
     )
 
     edges = [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (10, 30)]
     edf = spark.createDataFrame(edges, "id1 long, id2 long")
     verts = spark.range(45).select(F.col("id").alias("doc_id"))
     ckdir = str(tmp_path / "cc_reliable")
-    for algo in ("label", "star"):
+    for cc in (connected_components, connected_components_star):
         base = {
             r["doc_id"]: r["cluster_id"]
-            for r in connected_components(verts, edf, algorithm=algo).collect()
+            for r in cc(verts, edf).collect()
         }
         rel = {
             r["doc_id"]: r["cluster_id"]
-            for r in connected_components(
-                verts, edf, algorithm=algo, checkpoint_dir=ckdir
-            ).collect()
+            for r in cc(verts, edf, checkpoint_dir=ckdir).collect()
         }
-        assert base == rel, algo
+        assert base == rel, cc.__name__
     assert os.listdir(ckdir)  # reliable checkpoint files actually landed
 
 

@@ -65,16 +65,6 @@ os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
 SHUFFLE_PARTITIONS = int(os.environ.get("FUNNEL_SHUFFLE_PARTITIONS", "256"))
 
 
-# what the filter tiers COMMIT (see CurationPipeline.run): "narrow"
-# (library default) writes keep-lists, ~1x corpus bytes of store IO for
-# the whole funnel — the only viable shape against a real object store;
-# "wide" rewrites surviving rows per tier (~5x corpus bytes) but skips
-# the view-reconstruction reads, which is the better trade on THIS
-# sandbox's RAM-backed store where writes are nearly free.  Overridable
-# per run for format A/B pairs (funnel_800k_format_ab_r4.json).
-STAGE_FORMAT = os.environ.get("FUNNEL_STAGE_FORMAT", "narrow")
-
-
 def _run_funnel(spark, docs, store_root: str, resume: bool):
     from localitysensitivesketch_spark.plans.curation import CurationPipeline
 
@@ -86,7 +76,6 @@ def _run_funnel(spark, docs, store_root: str, resume: bool):
         resume=resume,
         containment_threshold=CONTAINMENT_T,
         exactsubstr_window=SPAN_WINDOW,
-        stage_format=STAGE_FORMAT,
     )
 
 
@@ -146,9 +135,7 @@ def run_level(cpus: int, data: str, store_root: str | None = None) -> dict:
         "funnel": funnel,
         "tier_walls_s": _tier_walls(store),
         "stages_run": len(res.stages_run),
-        "stage_format": STAGE_FORMAT,
-        # direct evidence for the narrow-vs-wide store-IO claim: every
-        # byte the funnel committed through the store this run
+        # every byte the funnel committed through the store this run
         "store_bytes_written": _dir_bytes(store),
     }
     spark.stop()
@@ -318,7 +305,6 @@ def main() -> None:
         },
         "speedup": round(best[args.low] / best[args.high], 3),
         "scaling_efficiency": round(eff, 3),
-        "stage_format": STAGE_FORMAT,
         "store_bytes_written": runs[args.high][0].get("store_bytes_written"),
         "funnel": runs[args.high][0]["funnel"],
         "method": "interleaved attempts, per-level best wall, fresh JVM and "
