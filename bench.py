@@ -72,12 +72,18 @@ def main() -> None:
     # charging ~8 s of one-time JVM warmup to whichever query runs
     # first.  Documented in BENCH/BASELINE.md; the warmup input is the
     # driver's own sf0.001 fixture, never the measured table.
+    # Whether it ran, and its wall, go into the full record: a run whose
+    # warmup was skipped or failed charges that warmup to its first query.
     warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    warmed_up = False
+    t_warm = time.time()
     if os.path.isdir(warm_dir):
         try:
             qs["dedup_cluster_stats"](spark, warm_dir).count()
-        except Exception:  # noqa: BLE001 — warmup is best-effort
-            pass
+            warmed_up = True
+        except Exception as e:  # noqa: BLE001 — warmup is best-effort
+            print(f"# warmup failed: {e!r}", file=sys.stderr)
+    warmup_s = round(time.time() - t_warm, 3)
 
     timings: dict[str, float] = {}
     for name in bench_queries:
@@ -216,6 +222,8 @@ def main() -> None:
         "n_docs": n_docs,
         "docs_per_sec_minhash_lsh": docs_per_sec,
         "cpus": cpus,
+        "warmed_up": warmed_up,
+        "warmup_s": warmup_s,
         "scaling_evidence": scaling,
         "config": json.loads(cfg.to_json()),
     }

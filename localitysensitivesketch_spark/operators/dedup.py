@@ -178,11 +178,6 @@ def ngram_jaccard_pairs(
             "toks"
         ),
     ).withColumn("n", F.size("toks"))
-    # the downstream work is per-row quadratic (block strategy: the
-    # in-block intersect join probes ride the stream side's partitions)
-    # or a fan-out explode (prefix) — a narrow small-file scan must not
-    # serialize it on one core; no-op whenever the scan is already wide
-    base = ensure_min_partitions(base)
 
     if strategy == "auto":
         # deterministic hash-membership sample (~1/16 of docs): independent
@@ -202,6 +197,15 @@ def ngram_jaccard_pairs(
             or (row["rows"] / row["vocab"]) / row["docs"] > 0.05
         )
         strategy = "block" if dense else "prefix"
+
+    # the downstream work is per-row quadratic (block strategy: the
+    # in-block intersect join probes ride the stream side's partitions)
+    # or a fan-out explode (prefix) — a narrow small-file scan must not
+    # serialize it on one core; no-op whenever the scan is already wide.
+    # Widened only after the sample above: the sample's aggregate is
+    # cheap on one core, and an action over the widened plan would run
+    # its round-robin shuffle once more than the pair job needs.
+    base = ensure_min_partitions(base)
 
     if strategy == "prefix":
         tok = base.select("doc_id", "blk", "n", F.explode("toks").alias("tok"))

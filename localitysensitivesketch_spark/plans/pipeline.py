@@ -44,6 +44,7 @@ from ..operators.candidates import band_candidates
 from ..operators.cluster import connected_components
 from ..operators.signatures import compute_signatures
 from ..operators.verify import duplicate_edges, verify_pairs
+from ..session import local_frame
 
 LINEAGE_SCHEMA = (
     "run_id string, stage string, status string, rows long, n_partitions int, "
@@ -51,6 +52,23 @@ LINEAGE_SCHEMA = (
 )
 
 PARTITION_SCHEMA = "stage string, partition_id int, rows long"
+
+
+def _footer_rows(data_path: str) -> list[list[int]]:
+    """``[write task index, rows]`` for a directory written by one
+    ``df.write.parquet``, read from the ``part-NNNNN-…`` files' parquet
+    footers on the driver — no Spark job.  ``NNNNN`` is the write task's
+    partition index; a task that rolled over into several files
+    (``maxRecordsPerFile``) is summed into one pair."""
+    import pyarrow.parquet as pq
+
+    rows: dict[int, int] = {}
+    for name in os.listdir(data_path):
+        if name.startswith("part-"):
+            pid = int(name.split("-", 2)[1])
+            n = pq.read_metadata(os.path.join(data_path, name)).num_rows
+            rows[pid] = rows.get(pid, 0) + n
+    return [[pid, n] for pid, n in sorted(rows.items())]
 
 
 def _config_sha(cfg: SketchConfig) -> str:
@@ -66,12 +84,21 @@ class CheckpointStore:
 
         root/
           <stage>/data.parquet/...      stage output table (current version)
-          <stage>/partitions.parquet    per-partition row counts
-          <stage>/_COMMIT.json          commit marker (rows, config, wall)
+          <stage>/_COMMIT.json          commit marker (rows, per-partition
+                                        rows, config, wall)
           <stage>/snapshots.jsonl       per-stage snapshot metadata log
           <stage>/_history/<id>/...     retained superseded versions
           lineage.jsonl                 append-only stage commit log
           deps.jsonl                    stage→inputs dependency index
+
+    The marker's ``partitions`` list holds ``[partition_id, rows]`` pairs
+    (the reference's per-window metric lines,
+    ``QueryLSSFingerFlowApps.java:243-245``).
+    For a :meth:`write` commit ``partition_id`` is the index of the write
+    task that produced a ``part-NNNNN-…`` file, and the rows come from
+    the files' parquet footers; for a sliced commit
+    (:meth:`resume_partitioned`) it is the value of the stage's
+    ``part_col``.
     """
 
     def __init__(
@@ -118,7 +145,8 @@ class CheckpointStore:
         operation: str = "overwrite",
         extra_wall_sec: float = 0.0,
     ) -> DataFrame:
-        """Commit a stage: data + per-partition lineage + marker (last).
+        """Commit a stage: data, then the marker (last) with its row and
+        per-partition counts.
 
         Writes into a staging dir first and swaps it in afterwards, so a
         stage may be rewritten from a plan that READS its own previous
@@ -130,6 +158,12 @@ class CheckpointStore:
         :meth:`rollback` can restore one — the Iceberg snapshot model on
         the parquet fallback; the last ``snapshot_retention`` superseded
         versions stay readable (:meth:`expire_snapshots`).
+
+        The data write is the commit's only Spark job: the returned frame
+        reads the files with ``df``'s schema, and the row counts come from
+        their footers (:func:`_footer_rows`) — the reference likewise
+        publishes a flushed window without re-reading it
+        (``Sub4SketchingKVStream.java:419-452``).
 
         ``wall_sec=None`` (the default for stage runners) records the
         materialization wall measured around the parquet write itself —
@@ -158,37 +192,8 @@ class CheckpointStore:
             os.replace(staging, data_path)
         else:
             os.replace(staging, data_path)
-        out = self.spark.read.parquet(data_path)
-        # per-partition progress rows (the reference's per-window metrics
-        # lines, QueryLSSFingerFlowApps.java:243-245) — from the *written*
-        # files so it reflects durable layout, not the pre-shuffle plan
-        parts = (
-            out.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .select(F.lit(stage).alias("stage"), "partition_id", "rows")
-        )
-        parts.write.mode("overwrite").parquet(os.path.join(d, "partitions.parquet"))
-        rows = out.count()
-        n_parts = out.rdd.getNumPartitions()
-        snap = self._record_snapshot(stage, rows, operation)
-        meta = {
-            "run_id": getattr(self, "run_id", "adhoc"),
-            "stage": stage,
-            "status": "ok",
-            "rows": rows,
-            "n_partitions": n_parts,
-            "wall_sec": round(wall_sec, 3),
-            "config_sha": self.cfg_sha,
-            "committed_at": time.time(),
-            "snapshot_id": snap["snapshot_id"],
-        }
-        # marker written last = the commit point (atomic rename)
-        tmp = self._commit_path(stage) + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._commit_path(stage))
-        with open(os.path.join(self.root, "lineage.jsonl"), "a") as f:
-            f.write(json.dumps(meta) + "\n")
+        out = self.spark.read.schema(df.schema).parquet(data_path)
+        self._commit(stage, out, wall_sec, operation, _footer_rows(data_path))
         self.expire_snapshots(stage)
         # a stage commit is the natural point where the PREVIOUS stage's
         # dropped DataFrames stop being reachable, but their
@@ -201,24 +206,20 @@ class CheckpointStore:
         gc.collect()
         return out
 
-    def _finalize(self, stage: str, out: DataFrame, wall_sec: float,
-                  parts: DataFrame) -> DataFrame:
-        """Write the per-partition lineage table + commit marker (marker
-        last = the commit point) and append the lineage log row."""
-        d = self._stage_dir(stage)
-        parts.write.mode("overwrite").parquet(os.path.join(d, "partitions.parquet"))
-        rows = out.count()
-        n_parts = out.rdd.getNumPartitions()
-        # sliced commits rewrite slice subdirs in place, so there is no
-        # superseded whole-table version to archive — the snapshot row
-        # still lands (operation marks it) so lineage stays uniform
-        snap = self._record_snapshot(stage, rows, "overwrite-sliced")
+    def _commit(self, stage: str, out: DataFrame, wall_sec: float,
+                operation: str, partitions: list[list[int]]) -> None:
+        """Append the snapshot row, write the commit marker (marker last =
+        the commit point, an atomic rename) and append the lineage log
+        row.  ``partitions`` is the ``[partition_id, rows]`` list whose
+        row total is the stage's ``rows``."""
+        rows = sum(r for _, r in partitions)
+        snap = self._record_snapshot(stage, rows, operation)
         meta = {
             "run_id": getattr(self, "run_id", "adhoc"),
             "stage": stage,
             "status": "ok",
             "rows": rows,
-            "n_partitions": n_parts,
+            "n_partitions": out.rdd.getNumPartitions(),
             "wall_sec": round(wall_sec, 3),
             "config_sha": self.cfg_sha,
             "committed_at": time.time(),
@@ -226,11 +227,10 @@ class CheckpointStore:
         }
         tmp = self._commit_path(stage) + f".tmp.{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
-            json.dump(meta, f)
+            json.dump(dict(meta, partitions=partitions), f)
         os.replace(tmp, self._commit_path(stage))
         with open(os.path.join(self.root, "lineage.jsonl"), "a") as f:
             f.write(json.dumps(meta) + "\n")
-        return out
 
     # -- per-partition (sliced) stage commit --------------------------------
 
@@ -325,12 +325,13 @@ class CheckpointStore:
                     + "\n"
                 )
         full = self.spark.read.parquet(data_path).drop("__slice")
-        parts = (
-            full.groupBy(F.col(part_col).cast("int").alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .select(F.lit(stage).alias("stage"), "partition_id", "rows")
-        )
-        return self._finalize(stage, full, time.time() - t0, parts)
+        counts = full.groupBy(F.col(part_col).cast("int")).count().collect()
+        parts = sorted([pid, n] for pid, n in counts)
+        # sliced commits rewrite slice subdirs in place, so there is no
+        # superseded whole-table version to archive — the snapshot row
+        # still lands (operation marks it) so lineage stays uniform
+        self._commit(stage, full, time.time() - t0, "overwrite-sliced", parts)
+        return full
 
     def invalidate(self, stage: str) -> None:
         """Drop a stage's commit marker so a later resume recomputes it
@@ -534,8 +535,20 @@ class CheckpointStore:
         return self.spark.read.schema(LINEAGE_SCHEMA).json(p)
 
     def partition_lineage(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self._stage_dir(stage), "partitions.parquet")
+        """Per-partition row counts of a stage's committed version, built
+        from its commit marker (``PARTITION_SCHEMA``; no Spark job)."""
+        with open(self._commit_path(stage)) as f:
+            meta = json.load(f)
+        if "partitions" not in meta:
+            raise ValueError(
+                f"stage {stage!r} was committed without per-partition rows "
+                "(its marker predates them); recommit the stage to record "
+                "them"
+            )
+        return local_frame(
+            self.spark,
+            [(stage, pid, rows) for pid, rows in meta["partitions"]],
+            PARTITION_SCHEMA,
         )
 
 

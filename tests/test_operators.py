@@ -391,9 +391,12 @@ def test_per_partition_resume_reuses_completed_slices(spark, tmp_path):
     )
     got = sorted((r["doc_id"], tuple(r["minhash"])) for r in out.collect())
     assert got == want
-    # per-partition lineage rows cover every doc exactly once
+    # per-partition lineage rows cover every doc exactly once, and the
+    # commit marker records the same total
     parts = store.partition_lineage("signatures")
     assert parts.agg(F.sum("rows")).collect()[0][0] == 120
+    marker = tmp_path / "ckpt" / "signatures" / "_COMMIT.json"
+    assert _json.loads(marker.read_text())["rows"] == 120
 
     # second entry after commit: pure reuse, zero compute calls
     calls3: list[int] = []
@@ -711,6 +714,37 @@ def test_ngram_prefix_filter_is_exact(spark):
             for r in ngram_jaccard_pairs(docs, threshold=t, strategy=strategy).collect()
         }
         assert got == expected and expected, strategy  # both strategies exact
+
+
+def test_ngram_auto_strategy_samples_without_widening(
+    spark, tmp_path, job_ids
+):
+    """strategy="auto" decides on the input's own partitions: the sample
+    job it runs at construction time has no round-robin exchange, so on a
+    one-file input no stage of it fans out to the scheduler's parallelism
+    (the widening shuffle is paid once, by the pair job)."""
+    from localitysensitivesketch_spark.operators.dedup import ngram_jaccard_pairs
+
+    path = str(tmp_path / "one_file")
+    with_doc_id(
+        corpus_to_spark(spark, generate_corpus(n_docs=200, seed=17))
+    ).select("doc_id", "text").coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+    assert docs.rdd.getNumPartitions() == 1
+
+    with job_ids("ngram-auto-sample") as jobs:
+        pairs = ngram_jaccard_pairs(docs, threshold=0.6, strategy="auto")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert jobs and tasks
+    assert max(tasks) < sc.defaultParallelism, tasks
+    # the pair job still finds the planted dups
+    assert pairs.count() > 0
 
 
 def test_minhash_estimator_variants(spark):

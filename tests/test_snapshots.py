@@ -15,10 +15,13 @@ is the flushed window and the snapshot id addresses it.
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from localitysensitivesketch_spark.config import SketchConfig
-from localitysensitivesketch_spark.plans.pipeline import CheckpointStore
+from localitysensitivesketch_spark.plans.pipeline import CheckpointStore, DedupPipeline
 
 CFG = SketchConfig()
 
@@ -118,8 +121,6 @@ def test_pre_snapshot_era_store_keeps_working(spark, tmp_path):
     snapshots.jsonl — reads, commits, and resume must work unchanged
     (the superseded pre-era table archives under the reserved id 0,
     which is retention-expired but never addressable)."""
-    import os
-
     store = CheckpointStore(spark, str(tmp_path / "old"), CFG)
     v1 = [(1, "a")]
     v2 = [(2, "b")]
@@ -152,7 +153,6 @@ def test_incremental_merge_keeps_pre_merge_clusters_readable(spark, tmp_path):
     from localitysensitivesketch_spark.plans.incremental import (
         incremental_update,
     )
-    from localitysensitivesketch_spark.plans.pipeline import DedupPipeline
 
     corpus = generate_corpus(n_docs=100, seed=31)
     docs = with_doc_id(corpus_to_spark(spark, corpus)).cache()
@@ -169,3 +169,140 @@ def test_incremental_merge_keeps_pre_merge_clusters_readable(spark, tmp_path):
     post = _rows(pipe.store.read("clusters"))
     assert post != pre  # the merge actually changed the assignment
     assert _rows(pipe.store.read("clusters", snapshot_id=pre_snap)) == pre
+
+
+# -- commit cost and the marker's row counts --------------------------------
+
+
+def _committed_files(spark, store, stage):
+    return spark.read.parquet(os.path.join(store._stage_dir(stage), "data.parquet"))
+
+
+def _marker(store, stage):
+    with open(store._commit_path(stage)) as f:
+        return json.load(f)
+
+
+def test_commit_starts_no_job_beyond_its_data_write(spark, tmp_path, job_ids):
+    """Rows, per-partition rows and the returned frame's schema come from
+    the written files' footers and ``df``'s schema: committing a stage
+    starts exactly the jobs a bare write of the same frame starts — both
+    for a first commit and for one that archives a superseded version."""
+    from pyspark.sql import functions as F
+
+    store = CheckpointStore(spark, str(tmp_path / "jobs"), CFG)
+    df = (
+        spark.range(2000)
+        .withColumn("k", F.col("id") % 7)
+        .groupBy("k")
+        .agg(F.count("*").alias("n"), F.collect_list("id").alias("ids"))
+    )
+    for attempt in range(2):
+        with job_ids(f"bare-write-{attempt}") as bare:
+            df.write.mode("overwrite").parquet(str(tmp_path / "bare"))
+        with job_ids(f"commit-{attempt}") as commit:
+            out = store.write("t", df)
+        assert bare and len(commit) == len(bare), (attempt, bare, commit)
+        assert _marker(store, "t")["rows"] == 7
+        assert out.schema == _committed_files(spark, store, "t").schema
+    assert [s["rows"] for s in store.snapshots("t")] == [7, 7]
+
+
+def _assert_stage_markers(spark, pipe, res) -> dict[str, int]:
+    frames = (
+        res.signatures, res.candidates, res.skew_metrics, res.verified,
+        res.edges, res.clusters, res.cluster_stats,
+    )
+    rows = {}
+    for stage, frame in zip(DedupPipeline.STAGES, frames):
+        files = _committed_files(spark, pipe.store, stage)
+        meta = _marker(pipe.store, stage)
+        assert meta["rows"] == files.count(), stage
+        parts = pipe.store.partition_lineage(stage).collect()
+        assert sum(r["rows"] for r in parts) == meta["rows"], stage
+        assert all(r["stage"] == stage for r in parts), stage
+        assert frame.schema == files.schema, stage
+        rows[stage] = meta["rows"]
+    return rows
+
+
+def test_every_pipeline_stage_marker_matches_its_files(spark, tmp_path):
+    """Every stage of a DedupPipeline run — including stages with no rows
+    (a corpus without near-duplicates has empty candidates and edges) —
+    records the row count of its committed files, per-partition rows
+    summing to it, and returns a frame with the files' inferred schema."""
+    import random
+
+    from localitysensitivesketch_spark.fixtures import (
+        corpus_to_spark,
+        generate_corpus,
+    )
+    from localitysensitivesketch_spark.operators.signatures import with_doc_id
+
+    docs = with_doc_id(
+        corpus_to_spark(spark, generate_corpus(n_docs=60, seed=41))
+    ).cache()
+    pipe = DedupPipeline(spark, str(tmp_path / "dups"), CFG)
+    rows = _assert_stage_markers(spark, pipe, pipe.run(docs))
+    assert rows["signatures"] == 60 and rows["edges"] > 0
+
+    rng = random.Random(5)
+    distinct = spark.createDataFrame(
+        [
+            (i, " ".join(f"w{rng.randrange(10**6)}" for _ in range(30)))
+            for i in range(40)
+        ],
+        "doc_id long, text string",
+    )
+    pipe = DedupPipeline(spark, str(tmp_path / "distinct"), CFG)
+    rows = _assert_stage_markers(spark, pipe, pipe.run(distinct))
+    assert rows["signatures"] == 40 and rows["clusters"] == 40
+    assert rows["candidates"] == rows["verified"] == rows["edges"] == 0
+
+
+def test_marker_without_partition_rows_resumes_but_has_no_partition_lineage(
+    spark, tmp_path
+):
+    """A store committed before markers carried per-partition rows stays
+    committed and resumes unchanged; asking it for partition lineage is
+    an error that names the stage."""
+    import time
+
+    from localitysensitivesketch_spark.fixtures import (
+        corpus_to_spark,
+        generate_corpus,
+    )
+    from localitysensitivesketch_spark.operators.signatures import with_doc_id
+
+    docs = with_doc_id(
+        corpus_to_spark(spark, generate_corpus(n_docs=30, seed=43))
+    ).cache()
+    root = str(tmp_path / "old")
+    first = DedupPipeline(spark, root, CFG).run(docs)
+    want = _rows(first.clusters)
+
+    store = CheckpointStore(spark, root, CFG)
+    for stage in DedupPipeline.STAGES:
+        old = {
+            "run_id": "before-partition-rows",
+            "stage": stage,
+            "status": "ok",
+            "rows": _committed_files(spark, store, stage).count(),
+            "n_partitions": 1,
+            "wall_sec": 0.5,
+            "config_sha": store.cfg_sha,
+            "committed_at": time.time(),
+            "snapshot_id": 1,
+        }
+        with open(store._commit_path(stage), "w") as f:
+            json.dump(old, f)
+        assert store.is_committed(stage)
+
+    again = DedupPipeline(spark, root, CFG).run(docs)
+    assert again.stages_run == []
+    assert again.stages_resumed == list(DedupPipeline.STAGES)
+    assert _rows(again.clusters) == want
+    with pytest.raises(
+        ValueError, match="'edges' was committed without per-partition rows"
+    ):
+        store.partition_lineage("edges")

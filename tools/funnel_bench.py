@@ -104,6 +104,17 @@ def _tier_walls(store_root: str) -> dict[str, float]:
     return walls
 
 
+def _last_job_id(spark) -> int:
+    """Id of the newest Spark job in the application status store (-1
+    before the first), which runs no job.  Job ids are sequential, so the
+    difference across a block is the number of jobs it started, even
+    past the store's ``spark.ui.retainedJobs`` window."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(60_000)  # every job start has landed
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    return -1 if jobs.isEmpty() else jobs.head().jobId()
+
+
 def run_level(cpus: int, data: str, store_root: str | None = None) -> dict:
     from localitysensitivesketch_spark.session import get_spark
 
@@ -117,6 +128,7 @@ def run_level(cpus: int, data: str, store_root: str | None = None) -> dict:
     docs = spark.read.parquet(data).drop("kind")
     n_docs = docs.count()
 
+    jobs0 = _last_job_id(spark)
     t0 = time.time()
     res = _run_funnel(spark, docs, store, resume=False)
     funnel = sorted(
@@ -131,6 +143,8 @@ def run_level(cpus: int, data: str, store_root: str | None = None) -> dict:
         "cpus": cpus,
         "n_docs": n_docs,
         "wall_s": round(wall, 2),
+        # Spark jobs the funnel run started (the audit collect included)
+        "spark_jobs": _last_job_id(spark) - jobs0,
         "docs_per_sec": round(n_docs / wall, 1),
         "funnel": funnel,
         "tier_walls_s": _tier_walls(store),
