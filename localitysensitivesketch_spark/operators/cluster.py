@@ -1,164 +1,115 @@
-"""Duplicate clustering: DataFrame-only connected components.
+"""Duplicate clustering: connected components over the duplicate edges.
 
 The reference's end product is a cluster assignment per key (the paper's
 "clustering-preserving" guarantee — keys grouped by value similarity,
-``Sketching/LSSFingerprintAtomic.java:474-498``).  Ours is the duplicate
-cluster label per doc (SURVEY §4.2 item 2):
+``Sketching/LSSFingerprintAtomic.java:474-498``), computed in one
+process's memory.  Ours is the duplicate cluster label per doc (SURVEY
+§4.2 item 2): ``cluster_id`` = min doc_id reachable, canonical member =
+min(doc_id).
 
-* :func:`connected_components` — iterative min-label propagation:
-  ``label(v) ← min(label(v), min over neighbors u of label(u))`` to
-  fixpoint.  O(diameter) rounds — duplicate clusters from LSH banding are
-  near-cliques, so 2-3 rounds in practice.
-* :func:`connected_components_star` — alternating large-star / small-star
-  (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
-  2014): O(log n) rounds regardless of diameter — the fallback
-  :func:`connected_components` switches to when a chain-shaped graph
-  (boilerplate A↔B↔C…) does not converge within ``max_iter`` rounds.
+:func:`connected_components` has one algorithm, split by the driver edge
+limit L (:func:`_driver_edge_limit`, millions of edges at the default
+``spark.driver.maxResultSize``):
 
-Both are deterministic and order-independent (min is commutative/
-associative), so labels are identical at any parallelism level — the
-engine's analogue of "same config ⇒ same clusters".  Canonical member =
-min(doc_id).  ``localCheckpoint`` each round truncates the lineage that
-iterative joins otherwise accumulate.
+* One ``limit(L + 1).toArrow()`` both decides and collects.  When the
+  edges fit — every duplicate graph the engine makes in practice: 596,732
+  edges at 400k docs in the funnel — CC finishes on the driver in numpy
+  (:func:`_driver_labels`), and the labels join back as a broadcast.  No
+  per-round join, aggregate, checkpoint or ``count()``.
+* Above L, alternating large-star / small-star rounds (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond", SoCC 2014) contract the
+  edge set in Spark (:func:`_star_rounds`) until it fits under L, or until
+  it stops changing, when every edge is (component min, member).
 
-Scale notes: the iteration runs ONLY over vertices incident to ≥1 edge —
-isolated vertices (the vast majority of a web corpus: non-duplicates)
-never enter the loop joins and are labeled with themselves in one final
-left join.  Labels are initialized to min(v, min neighbor), which IS the
-first propagation round — one fewer iteration (2 Spark jobs) per run.
+Both phases are deterministic and order-independent (min is commutative/
+associative), so labels are identical at any parallelism level and at any
+L — the engine's analogue of "same config ⇒ same clusters".  Isolated
+vertices (the vast majority of a web corpus) never enter either phase:
+they are labeled with themselves in the final left join.
 
-Durability: ``localCheckpoint`` (the default) stores to executor-local
-disk — lost on executor death, which merely recomputes here (single-job
-lineage).  On a long multi-executor run, pass ``checkpoint_dir`` to route
-per-round labels through ``sc.setCheckpointDir`` + reliable
-``checkpoint()`` (HDFS/object store) instead; the loop structure is
-unchanged and the labels are identical.
+Durability: star rounds truncate lineage with ``localCheckpoint`` (the
+default), which stores to executor-local disk.  On a long multi-executor
+run, pass ``checkpoint_dir`` to route each round through
+``sc.setCheckpointDir`` + reliable ``checkpoint()`` instead; the labels
+are identical.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
+
+#: a collected edge is two int64 ids
+_EDGE_BYTES = 16
+#: the driver finish holds a few int64 arrays per edge besides the
+#: collected table, so the collect takes a quarter of the result budget
+_HEADROOM = 4
+
+
+def _driver_edge_limit(spark: SparkSession) -> int:
+    """L: the most edges collected to the driver — the existing
+    ``spark.driver.maxResultSize`` (its 1g default when unset or 0 =
+    unlimited) at 16 B an edge, over 4x headroom: 16,777,216 edges at
+    1g.  Reads the conf only; no job runs."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    size = int(conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")) or (1 << 30)
+    return size // (_EDGE_BYTES * _HEADROOM)
 
 
 def _ckpt_fn(df_any: DataFrame, checkpoint_dir: str | None):
     """Round-truncation strategy: reliable ``checkpoint()`` when a
     directory is given (set once on the SparkContext), else
-    ``localCheckpoint``.  ``eager=False`` marks for materialization on
-    first use (no extra job) — used to pin an expensive upstream plan so
-    downstream self-unions evaluate it once."""
+    ``localCheckpoint``."""
     if checkpoint_dir is None:
-        return lambda df, eager=True: df.localCheckpoint(eager=eager)
-    sc = df_any.sparkSession.sparkContext
-    sc.setCheckpointDir(checkpoint_dir)
-    return lambda df, eager=True: df.checkpoint(eager=eager)
+        return lambda df: df.localCheckpoint()
+    df_any.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    return lambda df: df.checkpoint()
 
 
-def _sym_edges(edges: DataFrame) -> DataFrame:
-    """(id1, id2) → symmetric (src, dst) edge list, self-loops dropped."""
-    return (
-        edges.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        .unionByName(
-            edges.select(F.col("id2").alias("src"), F.col("id1").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+def _driver_labels(spark: SparkSession, rows) -> DataFrame:
+    """Collected ``(lo, hi)`` edges → ``(id, label)`` for every non-minimal
+    member, as a broadcast-sized frame built from Arrow.
 
-
-def connected_components(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 50,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """vertices(id), edges(id1, id2) → (doc_id, cluster_id).
-
-    cluster_id = min doc_id reachable in the undirected graph.  Isolated
-    vertices label themselves (outside the iteration).  ``checkpoint_dir``
-    switches round truncation from executor-local ``localCheckpoint`` to
-    reliable ``checkpoint()`` (survives executor loss on a cluster).
-    Label propagation that has not converged after ``max_iter`` rounds
-    (a chain longer than ~``max_iter``) hands the same inputs to
-    :func:`connected_components_star` instead of returning wrong labels.
+    Ids are compacted with ``np.unique`` (sorted, so the min index is the
+    min id).  Each round hooks the larger root label of every edge onto
+    the smaller one, then pointer-jumps every node to its root; the number
+    of roots falls each round, and at the fixpoint every edge joins equal
+    roots, so each component's root is its min node.
     """
-    ck = _ckpt_fn(edges, checkpoint_dir)
-    verts = vertices.select(F.col(id_col).cast("long").alias("id")).distinct()
-    # pin the (often expensive — a whole candidate join) edge plan BEFORE
-    # symmetrizing: _sym_edges unions two projections of it, and without
-    # this the upstream plan's post-exchange work runs twice (measured 2×
-    # the ngram-join wall on the token-CC query)
-    sym = ck(_sym_edges(ck(edges, eager=False)))
+    import pyarrow as pa
 
-    # init = min(v, min neighbor): round 1 of propagation, for free
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("nbr"))
-        .select(
-            F.col("src").alias("id"),
-            F.least(F.col("src"), F.col("nbr")).alias("label"),
-        )
-    )
-    labels = ck(labels)
-
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym.src == labels.id)
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.id == nbr_min.dst, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-                F.col("label").alias("old_label"),
-            )
-        )
-        new_labels = ck(new_labels)
-        labels = new_labels.select("id", "label")
-        # convergence check EVERY round: the count job reads the
-        # round's already-checkpointed labels (cheap, no recompute),
-        # while each avoided iteration is a full edge-join + aggregate +
-        # checkpoint round — LSH duplicate clusters are near-cliques, so
-        # the init (= round 1) usually converges immediately and the
-        # first in-loop round just confirms it; checking here saves the
-        # whole second in-loop round that the old >=1 gate always paid
-        changed = new_labels.filter(F.col("label") != F.col("old_label")).count()
-        if changed == 0:
+    lo = rows.column("lo").to_numpy()
+    ids, idx = np.unique(np.concatenate([lo, rows.column("hi").to_numpy()]),
+                         return_inverse=True)
+    u, v = idx[: len(lo)], idx[len(lo):]
+    root = np.arange(len(ids))
+    while True:
+        ru, rv = root[u], root[v]
+        if np.array_equal(ru, rv):
             break
-    else:
-        logger.warning(
-            "connected_components: label propagation did not converge in "
-            "%d rounds — falling back to large-star/small-star", max_iter
-        )
-        return connected_components_star(
-            vertices, edges, id_col, max_iter, checkpoint_dir
-        )
-
-    return verts.join(labels, "id", "left").select(
-        F.col("id").alias("doc_id"),
-        F.coalesce("label", F.col("id")).alias("cluster_id"),
+        np.minimum.at(root, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = root[root]
+            if np.array_equal(jumped, root):
+                break
+            root = jumped
+    member = root != np.arange(len(ids))
+    # an Arrow table lands on the JVM as a LocalRelation below
+    # arrow.localRelationThreshold (see session.local_frame), else as a
+    # JVM-only RDD — no Python worker either way
+    return spark.createDataFrame(
+        pa.table({"id": ids[member], "label": ids[root[member]]})
     )
 
 
-def connected_components_star(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 50,
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components.
-
-    Each round rewrites the edge set (canonical ``lo < hi`` pairs):
+def _star_rounds(edges: DataFrame, limit: int, ck):
+    """Alternating large-star / small-star rounds over canonical
+    ``(lo, hi)`` edges (``lo < hi``):
 
     * **large-star** — per node u with closed-neighborhood min m:
       every neighbor v > u re-attaches to m, i.e. emit (m, v);
@@ -167,18 +118,11 @@ def connected_components_star(
 
     Components contract into stars centered at their min node in
     O(log n) rounds (Kiveris et al., SoCC 2014 — published algorithm,
-    reimplemented from the paper).  Fixpoint = edge set unchanged; at
-    fixpoint every edge is (component_min, member).
+    reimplemented from the paper).  Returns ``(edges, rows)``: ``rows`` is
+    the collected edge set once it fits under ``limit``, or ``None`` when
+    the rounds reach their fixpoint first — then every edge is
+    (component_min, member).
     """
-    ck = _ckpt_fn(edges, checkpoint_dir)
-    verts = vertices.select(F.col(id_col).cast("long").alias("id")).distinct()
-    E = ck(
-        edges.select(
-            F.least("id1", "id2").alias("lo"), F.greatest("id1", "id2").alias("hi")
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
 
     def closed_min(sym: DataFrame) -> DataFrame:
         return (
@@ -192,21 +136,22 @@ def connected_components_star(
             e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
         )
 
-    for _ in range(max_iter):
+    E = ck(edges.distinct())
+    n = E.count()
+    while True:
         # large-star
         sym = symmetrize(E)
-        ls = (
+        ls = ck(
             sym.join(closed_min(sym), "u")
             .filter(F.col("v") > F.col("u"))
             .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        ls = ck(ls)
         # small-star
         sym2 = symmetrize(ls)
         m2 = closed_min(sym2)
-        ss = (
+        ss = ck(
             sym2.join(m2, "u")
             .filter(F.col("v") < F.col("u"))
             .select(F.col("m").alias("lo"), F.col("v").alias("hi"))
@@ -214,19 +159,44 @@ def connected_components_star(
             .filter(F.col("lo") != F.col("hi"))
             .distinct()
         )
-        ss = ck(ss)
         # m ≤ v and m ≤ u by construction, so (lo, hi) stays canonical
-        converged = (
-            ss.count() == E.count() and ss.exceptAll(E).count() == 0
-        )
-        E = ss
-        if converged:
-            break
+        n_next = ss.count()
+        if n_next <= limit:
+            return ss, ss.toArrow()
+        if n_next == n and ss.exceptAll(E).count() == 0:
+            return ss, None
+        E, n = ss, n_next
 
-    stars = E.groupBy("hi").agg(F.min("lo").alias("label"))
-    return verts.join(
-        stars.select(F.col("hi").alias("id"), "label"), "id", "left"
-    ).select(
+
+def connected_components(
+    vertices: DataFrame,
+    edges: DataFrame,
+    id_col: str = "doc_id",
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """vertices(id), edges(id1, id2) → (doc_id long, cluster_id long).
+
+    cluster_id = min doc_id reachable in the undirected graph.  Isolated
+    vertices label themselves.  When the edges fit under the driver limit
+    the only work before the result is consumed is one edge collect;
+    ``checkpoint_dir`` switches the star rounds above the limit from
+    ``localCheckpoint`` to reliable ``checkpoint()``.
+    """
+    spark = edges.sparkSession
+    limit = _driver_edge_limit(spark)
+    verts = vertices.select(F.col(id_col).cast("long").alias("id")).distinct()
+    E = edges.select(
+        F.least("id1", "id2").cast("long").alias("lo"),
+        F.greatest("id1", "id2").cast("long").alias("hi"),
+    ).filter(F.col("lo") != F.col("hi"))
+    rows = E.limit(limit + 1).toArrow()
+    if rows.num_rows > limit:
+        E, rows = _star_rounds(E, limit, _ckpt_fn(edges, checkpoint_dir))
+    if rows is None:
+        labels = E.groupBy(F.col("hi").alias("id")).agg(F.min("lo").alias("label"))
+    else:
+        labels = F.broadcast(_driver_labels(spark, rows))
+    return verts.join(labels, "id", "left").select(
         F.col("id").alias("doc_id"),
         F.coalesce("label", F.col("id")).alias("cluster_id"),
     )
@@ -237,7 +207,6 @@ def merge_components(
     new_edges: DataFrame,
     new_vertices: DataFrame | None = None,
     id_col: str = "doc_id",
-    endpoint_broadcast_limit: int = 5_000_000,
 ) -> DataFrame:
     """Incremental CC: merge ``new_edges`` (and optionally ``new_vertices``)
     into an existing ``labels(doc_id, cluster_id)`` assignment WITHOUT
@@ -253,17 +222,19 @@ def merge_components(
     ``test_merge_components_equals_full_recompute``).
 
     Scale shape (the reason this exists): per batch the full recompute is
-    O(|all edges|) across ~log rounds of shuffles; here the only work
-    proportional to corpus size is ONE map-side pass — the final relabel
-    broadcast-joins the (tiny) label→superlabel map against ``labels``, and
-    the contracted CC runs on ≤|new edges| edges.  The endpoint set of a
-    micro-batch is small by construction, so the semi-join that extracts
-    touched label rows broadcasts it.  Pathological-batch guard (in code,
-    not a docstring punt): when the endpoint set exceeds
-    ``endpoint_broadcast_limit`` rows — a batch whose endpoints rival the
-    corpus, where driver-collecting them for a broadcast would OOM — the
-    SAME contracted-graph merge runs with shuffle hash joins instead of
-    broadcasts (one cheap ``endpoints.count()`` decides).  Labels are
+    O(|all edges|); here the only work proportional to corpus size is ONE
+    map-side pass — the final relabel broadcast-joins the (tiny)
+    label→superlabel map against ``labels``, and the contracted graph
+    (≤|new edges| edges) goes through :func:`connected_components`, which
+    finishes it on the driver whenever it fits under L.  The endpoint set of a micro-batch is small
+    by construction, so the semi-join that extracts touched label rows
+    broadcasts it.  Pathological-batch guard (in code, not a docstring
+    punt): when the endpoint set exceeds the same driver limit L as
+    :func:`connected_components` (:func:`_driver_edge_limit`) — a batch
+    whose endpoints rival the corpus, where driver-collecting them for a
+    broadcast would OOM — the SAME contracted-graph merge runs with
+    shuffle hash joins instead of broadcasts (one cheap
+    ``endpoints.count()`` decides).  Labels are
     identical on both paths (the algorithm doesn't change, only the join
     strategy); cost degrades gracefully to ~one shuffle of the label
     table, still cheaper than full CC's ~log rounds over all edges.
@@ -301,12 +272,13 @@ def merge_components(
     # pathological-batch guard: decide the join strategy from the actual
     # endpoint count (endpoints is batch-derived, so this count is cheap
     # relative to the merge itself)
-    small_batch = endpoints.count() <= endpoint_broadcast_limit
+    limit = _driver_edge_limit(labels.sparkSession)
+    small_batch = endpoints.count() <= limit
     _bc = F.broadcast if small_batch else (lambda df: df)
     if not small_batch:
         logger.warning(
-            "merge_components: endpoint set exceeds broadcast limit "
-            "(%d rows) — falling back to shuffle joins", endpoint_broadcast_limit
+            "merge_components: endpoint set exceeds the driver limit "
+            "(%d rows) — falling back to shuffle joins", limit
         )
     # touched = the old label of every endpoint — normally batch-sized,
     # so broadcast it into the big labels table (map-side semi-join)
@@ -329,8 +301,7 @@ def merge_components(
         .unionByName(contracted.select(F.col("id2").alias("doc_id")))
         .distinct()
     )
-    # contracted graph is new-edge-sized — CC on it is cheap regardless of
-    # corpus size
+    # contracted graph is new-edge-sized, whatever the corpus size
     super_labels = connected_components(cverts, contracted)
     remap = super_labels.filter(F.col("doc_id") != F.col("cluster_id")).select(
         F.col("doc_id").alias("cluster_id"),

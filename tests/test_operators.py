@@ -613,60 +613,72 @@ def test_percentile_approx_plan_and_exact_default(spark):
     assert abs(a - e) <= 1.0
 
 
-def test_cc_star_path_graph_converges_in_log_rounds(spark):
-    """1000-node path graph: min-label needs O(n) rounds, large-star/
-    small-star must finish within ~log2(n) alternations (15 ≫ log2(1000))."""
-    from localitysensitivesketch_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    n = 1000
+def _cc_path(spark, n):
+    """An n-node path 0-1-…-(n-1): one component, diameter n-1."""
     verts = spark.range(n).withColumnRenamed("id", "doc_id")
     edges = spark.range(n - 1).select(
         F.col("id").alias("id1"), (F.col("id") + 1).alias("id2")
     )
-    out = connected_components_star(verts, edges, max_iter=15).collect()
-    assert all(r["cluster_id"] == 0 for r in out) and len(out) == n
+    return verts, edges
 
 
-def test_cc_falls_back_to_star_when_label_propagation_runs_out(
-    spark, monkeypatch, caplog
-):
-    """A path longer than ``max_iter`` rounds of min-label propagation
-    can reach must still get correct labels (via the large-star /
-    small-star fallback, with a warning), and a graph that converges in
-    time must never pay for the fallback."""
-    import logging
+def _cc_labels(df):
+    return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
 
+
+def _force_driver_limit(monkeypatch, limit):
+    """Pin the driver edge limit L of connected_components /
+    merge_components: 0 sends every non-empty graph through star rounds."""
     from localitysensitivesketch_spark.operators import cluster
 
-    def path(n):
-        verts = spark.range(n).withColumnRenamed("id", "doc_id")
-        edges = spark.range(n - 1).select(
-            F.col("id").alias("id1"), (F.col("id") + 1).alias("id2")
-        )
-        return verts, edges
+    monkeypatch.setattr(cluster, "_driver_edge_limit", lambda spark: limit)
+
+
+def test_cc_star_path_graph_converges_in_log_rounds(
+    spark, monkeypatch, job_ids
+):
+    """1000-node path graph with L forced to 0: large-star/small-star
+    rounds alone must label it, within a job budget that O(log n) rounds
+    fit (~log2(1000) = 10 rounds of ~16 jobs) and O(n) rounds do not."""
+    from localitysensitivesketch_spark.operators.cluster import connected_components
+    from localitysensitivesketch_spark.oracle import oracle_clusters
+
+    n = 1000
+    _force_driver_limit(monkeypatch, 0)
+    with job_ids("cc-star-path") as jobs:
+        out = _cc_labels(connected_components(*_cc_path(spark, n)))
+    assert out == oracle_clusters(list(range(n)), [(i, i + 1) for i in range(n - 1)])
+    assert len(jobs) <= 300, len(jobs)
+
+
+def test_cc_long_path_labels_on_driver_and_star_paths(spark, monkeypatch):
+    """A 40-node path (diameter 39, far beyond a small round budget) gets
+    all labels 0 when it finishes on the driver (no star round runs) and
+    when L = 0 forces star rounds."""
+    from localitysensitivesketch_spark.operators import cluster
 
     n = 40
-    with caplog.at_level(logging.WARNING, logger=cluster.__name__):
-        out = cluster.connected_components(*path(n), max_iter=8).collect()
-    assert len(out) == n
-    assert [r["doc_id"] for r in out if r["cluster_id"] != 0] == []
-    assert "did not converge" in caplog.text
 
     def _no_star(*a, **k):
-        raise AssertionError("fallback taken on a converging graph")
+        raise AssertionError("star rounds ran on a graph that fits")
 
-    monkeypatch.setattr(cluster, "connected_components_star", _no_star)
-    out = cluster.connected_components(*path(6), max_iter=8).collect()
-    assert {r["cluster_id"] for r in out} == {0} and len(out) == 6
+    with monkeypatch.context() as m:
+        m.setattr(cluster, "_star_rounds", _no_star)
+        out = _cc_labels(cluster.connected_components(*_cc_path(spark, n)))
+    assert len(out) == n and set(out.values()) == {0}
+
+    _force_driver_limit(monkeypatch, 0)
+    out = _cc_labels(cluster.connected_components(*_cc_path(spark, n)))
+    assert len(out) == n and set(out.values()) == {0}
 
 
-def test_cc_label_and_star_agree_on_random_graph(spark):
-    from localitysensitivesketch_spark.operators.cluster import (
-        connected_components,
-        connected_components_star,
-    )
+def test_cc_matches_oracle_on_random_graph_at_any_limit(spark, monkeypatch):
+    """A random graph gets the union-find oracle's labels with L at its
+    default (driver finish only), at 0 (star rounds only), and between
+    the converged star size and the edge count, where star rounds run and
+    then the driver finishes in one call."""
+    from localitysensitivesketch_spark.operators import cluster
+    from localitysensitivesketch_spark.oracle import oracle_clusters
 
     rng = np.random.default_rng(7)
     n = 300
@@ -677,15 +689,50 @@ def test_cc_label_and_star_agree_on_random_graph(spark):
     ]
     verts = spark.range(n).withColumnRenamed("id", "doc_id")
     edf = spark.createDataFrame(edges, "id1 long, id2 long")
-    lab = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(verts, edf).collect()
-    }
-    star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components_star(verts, edf).collect()
-    }
-    assert lab == star and len(lab) == n
+    want = oracle_clusters(list(range(n)), edges)
+    # converged star edge set = one (min, member) edge per non-min member
+    stars = sum(1 for d, lab in want.items() if d != lab)
+    assert stars < len({(min(e), max(e)) for e in edges})
+
+    assert _cc_labels(cluster.connected_components(verts, edf)) == want
+    _force_driver_limit(monkeypatch, 0)
+    assert _cc_labels(cluster.connected_components(verts, edf)) == want
+
+    _force_driver_limit(monkeypatch, stars)
+    calls = []
+
+    def spy(name, fn):
+        return lambda *a, **k: calls.append(name) or fn(*a, **k)
+
+    monkeypatch.setattr(cluster, "_star_rounds", spy("star", cluster._star_rounds))
+    monkeypatch.setattr(
+        cluster, "_driver_labels", spy("driver", cluster._driver_labels)
+    )
+    assert _cc_labels(cluster.connected_components(verts, edf)) == want
+    assert calls == ["star", "driver"]
+
+
+def test_cc_over_committed_edges_starts_at_most_two_jobs(
+    spark, tmp_path, job_ids
+):
+    """connected_components over committed parquet edges decides and
+    collects with one ``limit(L + 1).toArrow()``: at most 2 jobs start
+    before its result is consumed (per-round label propagation started
+    ≥ 10)."""
+    from localitysensitivesketch_spark.operators.cluster import connected_components
+    from localitysensitivesketch_spark.oracle import oracle_clusters
+
+    rng = np.random.default_rng(3)
+    n = 200
+    edges = [(int(a), int(b)) for a, b in rng.integers(0, n, size=(120, 2))]
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(edges, "id1 long, id2 long").write.parquet(path)
+    committed = spark.read.parquet(path)
+    verts = spark.range(n).withColumnRenamed("id", "doc_id")
+    with job_ids("cc-committed-edges") as jobs:
+        labels = connected_components(verts, committed)
+    assert len(jobs) <= 2, len(jobs)
+    assert _cc_labels(labels) == oracle_clusters(list(range(n)), edges)
 
 
 def test_ngram_prefix_filter_is_exact(spark):
@@ -804,31 +851,24 @@ def test_driver_contract_oracle_coverage():
         con.execute(f"SELECT * FROM ({sql}) LIMIT 0")  # parse/bind only
 
 
-def test_cc_reliable_checkpoint_same_labels(spark, tmp_path):
-    """checkpoint_dir routes round truncation through reliable
-    ``checkpoint()`` — the loop survives with it enabled and the labels are
-    identical to the localCheckpoint default, for both algorithms."""
+def test_cc_reliable_checkpoint_same_labels(spark, tmp_path, monkeypatch):
+    """checkpoint_dir routes star-round truncation through reliable
+    ``checkpoint()``: with L forced to 0 the rounds run with it enabled,
+    the labels equal the localCheckpoint default and the oracle, and the
+    checkpoint files land."""
     import os
 
-    from localitysensitivesketch_spark.operators.cluster import (
-        connected_components,
-        connected_components_star,
-    )
+    from localitysensitivesketch_spark.operators.cluster import connected_components
+    from localitysensitivesketch_spark.oracle import oracle_clusters
 
     edges = [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (10, 30)]
     edf = spark.createDataFrame(edges, "id1 long, id2 long")
     verts = spark.range(45).select(F.col("id").alias("doc_id"))
     ckdir = str(tmp_path / "cc_reliable")
-    for cc in (connected_components, connected_components_star):
-        base = {
-            r["doc_id"]: r["cluster_id"]
-            for r in cc(verts, edf).collect()
-        }
-        rel = {
-            r["doc_id"]: r["cluster_id"]
-            for r in cc(verts, edf, checkpoint_dir=ckdir).collect()
-        }
-        assert base == rel, cc.__name__
+    _force_driver_limit(monkeypatch, 0)
+    base = _cc_labels(connected_components(verts, edf))
+    rel = _cc_labels(connected_components(verts, edf, checkpoint_dir=ckdir))
+    assert base == rel == oracle_clusters(list(range(45)), edges)
     assert os.listdir(ckdir)  # reliable checkpoint files actually landed
 
 
@@ -934,17 +974,18 @@ def test_merge_components_labels_unknown_endpoints(spark):
     assert out == {1: 1, 2: 1, 99: 1}
 
 
-def test_merge_components_pathological_batch_takes_shuffle_fallback(spark):
-    """Round-4 guard (VERDICT #7): a batch whose endpoint set exceeds
-    ``endpoint_broadcast_limit`` must take the shuffle-join fallback in
-    code (no driver broadcast of a corpus-sized endpoint set) and still
-    produce labels identical to the broadcast path / full recompute."""
+def test_merge_components_pathological_batch_takes_shuffle_fallback(
+    spark, monkeypatch, caplog
+):
+    """Round-4 guard (VERDICT #7): a batch whose endpoint set exceeds the
+    driver limit L must take the shuffle-join fallback in code (no driver
+    broadcast of a corpus-sized endpoint set) and still produce labels
+    identical to the broadcast path / full recompute."""
+    import logging
     import random
 
-    from localitysensitivesketch_spark.operators.cluster import (
-        connected_components,
-        merge_components,
-    )
+    from localitysensitivesketch_spark.operators import cluster
+    from localitysensitivesketch_spark.oracle import oracle_clusters
 
     rng = random.Random(11)
     old_edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(200)]
@@ -954,21 +995,19 @@ def test_merge_components_pathological_batch_takes_shuffle_fallback(spark):
     verts_new = spark.range(320).select(F.col("id").alias("doc_id"))
     e_old = spark.createDataFrame(old_edges, "id1 long, id2 long")
     e_new = spark.createDataFrame(new_edges, "id1 long, id2 long")
+    want = sorted(oracle_clusters(list(range(320)), old_edges + new_edges).items())
 
-    labels_old = connected_components(verts_old, e_old)
-    # limit of 10 forces the fallback (endpoint set is ~300 rows)
-    merged = merge_components(
-        labels_old, e_new, new_vertices=verts_new, endpoint_broadcast_limit=10
-    )
-    full = connected_components(verts_new, e_old.unionByName(e_new))
-    got = sorted((r.doc_id, r.cluster_id) for r in merged.collect())
-    want = sorted((r.doc_id, r.cluster_id) for r in full.collect())
-    assert got == want
-    bcast = merge_components(
-        labels_old, e_new, new_vertices=verts_new,
-        endpoint_broadcast_limit=5_000_000,
-    )
-    assert sorted((r.doc_id, r.cluster_id) for r in bcast.collect()) == want
+    labels_old = cluster.connected_components(verts_old, e_old)
+    bcast = cluster.merge_components(labels_old, e_new, new_vertices=verts_new)
+    assert sorted(bcast.collect()) == want
+    # L = 10 forces the fallback (endpoint set is ~300 rows)
+    _force_driver_limit(monkeypatch, 10)
+    with caplog.at_level(logging.WARNING, logger=cluster.__name__):
+        merged = cluster.merge_components(
+            labels_old, e_new, new_vertices=verts_new
+        )
+    assert "falling back to shuffle joins" in caplog.text
+    assert sorted(merged.collect()) == want
 
 
 def test_ensure_min_partitions_widens_narrow_input_only(spark):
