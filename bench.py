@@ -23,10 +23,18 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
 
 from localitysensitivesketch_spark.config import SketchConfig  # noqa: E402
 from localitysensitivesketch_spark.session import get_spark  # noqa: E402
+
+#: the recorded scaling evidence the metric line reports, one file per
+#: tier under BENCH/ (tools/scaling_bench.py, tools/funnel_bench.py)
+EVIDENCE_FILES = {
+    "pipeline": "scaling_1v4_800k_r4.json",
+    "span": "span_scaling_2v8_200k_r4.json",
+    "funnel": "funnel_800k_8v32_narrow_r5.json",
+    "containment": "containment_800k_materialize_ab_r5.json",
+}
 
 
 def main() -> None:
@@ -110,107 +118,23 @@ def main() -> None:
     pipeline_sec = timings["dedup_cluster_stats"]
     docs_per_sec = round(n_docs / pipeline_sec, 1) if pipeline_sec else None
 
-    # recorded two-parallelism scaling evidence (tools/scaling_bench.py on
-    # fixture corpora; see BENCH/BASELINE.md for methodology).  The headline
-    # file is the newest recorded run; all runs are kept in BENCH/.
-    #
-    # `scaling` carries the FULL evidence tree and lands only in the
-    # BENCH/bench_*.json record; the stdout metric line gets the compact
-    # `scaling_compact` scalars (the r4 line embedded the whole tree and
-    # outgrew the driver's 2000-char tail capture → BENCH_r04 parsed:null).
-    scaling = None
+    # recorded scaling evidence, one named file per tier (methodology in
+    # BENCH/BASELINE.md); every run of each tier is kept in BENCH/
     bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH")
-    for name in ("scaling_1v4_800k_r4.json", "scaling_1v4_800k_r3.json",
-                 "scaling_2v8_800k_r2.json", "scaling_2v8_r2.json",
-                 "scaling_4v16_r2.json", "scaling_4v16.json"):
-        evidence = os.path.join(bench_dir, name)
-        if os.path.exists(evidence):
-            break
-    if os.path.exists(evidence):
-        with open(evidence) as f:
-            ev = json.load(f)
-        scaling = {
-            "levels": {
-                c: {
-                    "docs_per_sec": ev["levels"][c]["docs_per_sec"],
-                    "sig_docs_per_sec": ev["levels"][c]["sig_docs_per_sec"],
-                }
-                for c in ev["levels"]
-            },
-            "signature_scaling_efficiency": ev["signature_scaling_efficiency"],
-            "pipeline_scaling_efficiency": ev["pipeline_scaling_efficiency"],
-            "n_docs": ev["levels"][next(iter(ev["levels"]))]["n_docs"],
-            "evidence_file": os.path.basename(evidence),
-            "see": "BENCH/BASELINE.md",
-        }
-    # span-tier evidence is independent of the pipeline evidence files
-    for name in ("span_scaling_2v8_200k_r4.json", "span_scaling_2v8_200k_r3.json"):
-        span_ev = os.path.join(bench_dir, name)
-        if os.path.exists(span_ev):
-            break
-    if os.path.exists(span_ev):
-        with open(span_ev) as f:
-            sev = json.load(f)
-        scaling = scaling or {}
-        scaling["span_tier"] = {
-            "job": sev["job"],
-            "scaling_efficiency": sev["scaling_efficiency"],
-            "n_docs": sev["n_docs"],
-            "evidence_file": os.path.basename(span_ev),
-        }
-    # integrated all-tiers curation-funnel evidence (tools/funnel_bench.py)
-    for name in (
-        "funnel_800k_8v32_narrow_r5.json",
-        "funnel_800k_8v32_r4.json",
-        "funnel_2v8_800k_r4.json",
-    ):
-        funnel_ev = os.path.join(bench_dir, name)
-        if os.path.exists(funnel_ev):
-            break
-    if os.path.exists(funnel_ev):
-        with open(funnel_ev) as f:
-            fev = json.load(f)
-        scaling = scaling or {}
-        scaling["curation_funnel"] = {
-            "job": fev["job"],
-            "n_docs": fev["n_docs"],
-            "scaling_efficiency": fev["scaling_efficiency"],
-            "docs_per_sec": {
-                c: fev["levels"][c]["docs_per_sec"] for c in fev["levels"]
-            },
-            "evidence_file": os.path.basename(funnel_ev),
-            # the scalar above is the single best matched pair; the full
-            # 8v32 record across three plans (16/64/256 partitions) is
-            # 0.79/0.37/0.32/0.46/0.35 and 4v16 is 0.77/0.63 — the
-            # 32-thread span tier swings 3x at identical config (one
-            # box's memory system past saturation).  See the
-            # measurement-integrity note in BENCH/BASELINE.md and
-            # BENCH/raw_r4/funnel_800k_*.json
-            "matched_pair_efficiencies_8v32": [0.79, 0.37, 0.32, 0.46, 0.35],
-            "matched_pair_efficiencies_4v16": [0.77, 0.63],
-            # narrow stage format (library default): forward, reversed,
-            # and final-HEAD interleaved pairs —
-            # BENCH/funnel_800k_8v32_narrow{,_rev,_head}_r4.json
-            "matched_pair_efficiencies_8v32_narrow": [0.585, 0.37, 0.483, 0.471],
-            "matched_pair_efficiencies_4v16_narrow": [0.64],
-            "note": "scalar is the best pair; see matched-pair record + BENCH/BASELINE.md integrity note",
-        }
-    # containment tier standalone A/B (materialize modes, round 5)
-    cont_ev = os.path.join(bench_dir, "containment_800k_materialize_ab_r5.json")
-    if os.path.exists(cont_ev):
-        with open(cont_ev) as f:
-            cev = json.load(f)
-        scaling = scaling or {}
-        scaling["containment_tier"] = {
-            "job": cev["job"],
-            "n_docs": cev["n_docs"],
-            "scaling_efficiency_8v32": cev["scaling_efficiency_8v32_base_best"],
-            "clean_pair_efficiency_8v32": cev["single_clean_pair_auto"]["efficiency"],
-            "walls_s": cev["per_level_best_base"],
-            "r4_walls_s": {"8": cev["r4_reference"]["8"], "32": cev["r4_reference"]["32"]},
-            "lossless": cev["lossless"],
-            "evidence_file": os.path.basename(cont_ev),
-        }
+    ev = {}
+    for tier, name in EVIDENCE_FILES.items():
+        with open(os.path.join(bench_dir, name)) as f:
+            ev[tier] = json.load(f)
+    compact_scaling = {
+        "pipeline_eff_1v4": ev["pipeline"]["pipeline_scaling_efficiency"],
+        "signature_eff_1v4": ev["pipeline"]["signature_scaling_efficiency"],
+        "span_eff": ev["span"]["scaling_efficiency"],
+        "funnel_eff_8v32": ev["funnel"]["scaling_efficiency"],
+        "containment_eff_8v32": ev["containment"][
+            "scaling_efficiency_8v32_base_best"
+        ],
+        "evidence": "BENCH/BASELINE.md",
+    }
 
     total = round(sum(timings.values()), 3)
     full_record = {
@@ -224,7 +148,7 @@ def main() -> None:
         "cpus": cpus,
         "warmed_up": warmed_up,
         "warmup_s": warmup_s,
-        "scaling_evidence": scaling,
+        "scaling_evidence": {**compact_scaling, "files": EVIDENCE_FILES},
         "config": json.loads(cfg.to_json()),
     }
     # full evidence tree → file (the driver reads stdout's LAST ~2000
@@ -236,19 +160,6 @@ def main() -> None:
     except OSError:
         record_path = None
 
-    sc = scaling or {}
-    compact_scaling = {
-        "pipeline_eff_1v4": sc.get("pipeline_scaling_efficiency"),
-        "signature_eff_1v4": sc.get("signature_scaling_efficiency"),
-        "span_eff": (sc.get("span_tier") or {}).get("scaling_efficiency"),
-        "funnel_eff_8v32": (sc.get("curation_funnel") or {}).get(
-            "scaling_efficiency"
-        ),
-        "containment_eff_8v32": (sc.get("containment_tier") or {}).get(
-            "scaling_efficiency_8v32"
-        ),
-        "evidence": "BENCH/BASELINE.md",
-    }
     line = json.dumps(
         {
             "metric": "headline_queries_total_wall",

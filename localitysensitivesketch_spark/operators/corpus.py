@@ -1,11 +1,12 @@
 """Corpus-level hygiene operators for a web-text training pipeline.
 
 Operators a 100 TB pre-training pipeline runs alongside document dedup.
-Each has an exact ANSI-SQL oracle; per-gram/per-window scans default to
+Each has an exact ANSI-SQL oracle; per-gram/per-window scans are
 vectorized Arrow ``mapInPandas`` (Spark evaluates higher-order-function
 lambdas interpreted per element — measured 18-40× slower than the Arrow
-scans at 20k docs — so the pure-built-in forms are kept as
-``method="sql"`` reference paths, bit-identical by test):
+scans at 20k docs).  The pure-built-in SQL forms of those scans live in
+``tests/corpus_sql_reference.py``, where parity tests pin the Arrow
+counts bit-identical to them:
 
 - **Cross-document segment dedup** (C4-style, Raffel et al. JMLR'20 §2.2
   "we discard all but one of any three-sentence span occurring more than
@@ -222,12 +223,63 @@ def drop_duplicate_segments(
     ).drop("drop_pos")
 
 
+def _repetition_counts(
+    df: DataFrame, ns: tuple[int, ...], id_col: str, text_col: str
+) -> DataFrame:
+    """(doc_id, gram_n, n_grams, n_dup_grams, top_c) per (doc, n) in one
+    ``mapInPandas`` pass — an exact ``Counter`` over token n-gram tuples
+    per doc (no hashing shortcuts), ZERO shuffles, and none of the
+    interpreted higher-order-function cost of the SQL explode form
+    (measured ~18× at 20k docs).  Docs shorter than n tokens, and
+    null-text docs, emit no row for that n."""
+    ns_tuple = tuple(int(n) for n in ns)
+
+    def per_doc(batches):
+        from collections import Counter
+
+        import pandas as pd
+
+        for pdf in batches:
+            doc_out, n_out, g_out, d_out, t_out = [], [], [], [], []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                if text is None:
+                    continue
+                toks = _py_tokens(text)
+                for n in ns_tuple:
+                    m = len(toks) - n + 1
+                    if m <= 0:
+                        continue
+                    c = Counter(zip(*(toks[i:] for i in range(n))))
+                    doc_out.append(doc_id)
+                    n_out.append(n)
+                    g_out.append(m)
+                    d_out.append(m - len(c))
+                    t_out.append(max(c.values()))
+            yield pd.DataFrame(
+                {
+                    "doc_id": pd.Series(doc_out),
+                    "gram_n": pd.Series(n_out, dtype="int32"),
+                    "n_grams": pd.Series(g_out, dtype="int64"),
+                    "n_dup_grams": pd.Series(d_out, dtype="int64"),
+                    "top_c": pd.Series(t_out, dtype="int64"),
+                }
+            )
+
+    id_type = df.schema[id_col].dataType.simpleString()
+    return ensure_min_partitions(
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    ).mapInPandas(
+        per_doc,
+        f"doc_id {id_type}, gram_n int, n_grams long, n_dup_grams long, "
+        "top_c long",
+    )
+
+
 def repetition_stats(
     df: DataFrame,
     ns: tuple[int, ...] = (2, 3),
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
 ) -> DataFrame:
     """Gopher-style within-document repetition ratios, long format.
 
@@ -237,98 +289,11 @@ def repetition_stats(
     the most frequent n-gram's share.  Docs shorter than n tokens emit no
     row for that n.
 
-    The statistic is strictly per-document, so ``method="arrow"``
-    (default) computes it in one ``mapInPandas`` pass — an exact
-    ``Counter`` over token n-gram tuples per doc (no hashing shortcuts),
-    ZERO shuffles (the sql path exchanges every (doc_id, gram) row), and
-    none of the interpreted higher-order-function cost (measured ~18× at
-    20k docs).  The ratio/rounding tail stays JVM-side in both methods,
-    so outputs are bit-identical and the DuckDB oracle is method-blind.
-
-    ``method="sql"``: one explode over all requested n simultaneously
-    (grams carry an ``n:`` tag so a single (doc_id, gram) hash-agg serves
-    every n); the agg is keyed by doc_id so there are no cross-document
-    hot keys.  The pure-built-in reference path.
+    The statistic is strictly per-document, so the integer counts come
+    from one Arrow pass (:func:`_repetition_counts`); the ratio/rounding
+    tail stays JVM-side, so the DuckDB oracle pins it exactly.
     """
-    if method == "arrow":
-        ns_tuple = tuple(int(n) for n in ns)
-
-        def per_doc(batches):
-            from collections import Counter
-
-            import pandas as pd
-
-            for pdf in batches:
-                doc_out, n_out, g_out, d_out, t_out = [], [], [], [], []
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                    if text is None:
-                        continue
-                    toks = _py_tokens(text)
-                    for n in ns_tuple:
-                        m = len(toks) - n + 1
-                        if m <= 0:
-                            continue
-                        c = Counter(zip(*(toks[i:] for i in range(n))))
-                        doc_out.append(doc_id)
-                        n_out.append(n)
-                        g_out.append(m)
-                        d_out.append(m - len(c))
-                        t_out.append(max(c.values()))
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(doc_out),
-                        "gram_n": pd.Series(n_out, dtype="int32"),
-                        "n_grams": pd.Series(g_out, dtype="int64"),
-                        "n_dup_grams": pd.Series(d_out, dtype="int64"),
-                        "top_c": pd.Series(t_out, dtype="int64"),
-                    }
-                )
-
-        id_type = df.schema[id_col].dataType.simpleString()
-        agg = ensure_min_partitions(
-            df.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            )
-        ).mapInPandas(
-            per_doc,
-            f"doc_id {id_type}, gram_n int, n_grams long, n_dup_grams long, "
-            "top_c long",
-        )
-    elif method == "sql":
-        t = _tokens(text_col)
-
-        def _tagged(n: int) -> Column:
-            # NOTE: the transform lambda must be single-parameter — a
-            # second parameter would be interpreted as the element index
-            # by Spark.
-            return F.when(
-                F.size(t) >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(t) - F.lit(n - 1)),
-                    lambda i: F.concat(
-                        F.lit(f"{n}:"), F.array_join(F.slice(t, i, n), " ")
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-
-        tagged = [_tagged(n) for n in ns]
-        rows = df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.concat(*tagged)).alias("g"),
-        )
-        cnt = rows.groupBy("doc_id", "g").agg(F.count("*").alias("c"))
-        agg = (
-            cnt.withColumn("gram_n", F.split("g", ":", 2)[0].cast("int"))
-            .groupBy("doc_id", "gram_n")
-            .agg(
-                F.sum("c").alias("n_grams"),
-                (F.sum("c") - F.count("*")).alias("n_dup_grams"),
-                F.max("c").alias("top_c"),
-            )
-        )
-    else:
-        raise ValueError(f"method must be 'arrow' or 'sql', got {method!r}")
-    return agg.select(
+    return _repetition_counts(df, ns, id_col, text_col).select(
         "doc_id",
         "gram_n",
         "n_grams",
@@ -338,38 +303,12 @@ def repetition_stats(
     )
 
 
-def _gram_hashes(
-    df: DataFrame, n: int, id_col: str, text_col: str, method: str = "arrow"
-) -> DataFrame:
-    """(doc_id, h) — content hash of every sliding token n-gram (docs
-    with < n tokens emit nothing).  A token n-gram IS a sliding window,
-    so ``method="arrow"`` delegates to the vectorized rolling-hash scan
-    of :func:`sliding_window_occurrences` (16-byte binary h); the
-    ``"sql"`` path keeps the pure-built-in md5 hex form.  Hash equality
-    is gram equality under either, but the two forms are not mutually
-    joinable — use ONE method for both sides of any join."""
-    if method == "arrow":
-        return sliding_window_occurrences(
-            df, n, id_col, text_col, method="arrow"
-        ).select("doc_id", "h")
-    t = _tokens(text_col)
-    grams = F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - F.lit(n - 1)),
-            lambda i: F.md5(F.array_join(F.slice(t, i, n), " ")),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return df.select(F.col(id_col).alias("doc_id"), F.explode(grams).alias("h"))
-
-
 def contamination_report(
     train: DataFrame,
     benchmark: DataFrame,
     n: int = 13,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
 ) -> DataFrame:
     """GPT-3-style decontamination: training docs sharing >= 1 token
     n-gram with the benchmark set (Brown et al. 2020 Appendix C uses
@@ -380,12 +319,14 @@ def contamination_report(
     flagged training doc.  The benchmark gram set is distinct-hashed and
     **broadcast**, so the training side is filtered map-side before its
     only shuffle (the distinct on surviving (doc_id, h) pairs): at 100 TB
-    the full-corpus side never exchanges a non-matching row.  ``method``
-    picks the gram scan (:func:`_gram_hashes`) for BOTH sides; outputs
-    are identical either way.
+    the full-corpus side never exchanges a non-matching row.  A token
+    n-gram IS a sliding window, so both sides hash their grams with the
+    rolling-hash scan of :func:`sliding_window_occurrences` (docs with
+    < n tokens emit nothing).
     """
-    ev = _gram_hashes(benchmark, n, id_col, text_col, method).select("h").distinct()
-    tr = _gram_hashes(train, n, id_col, text_col, method)
+    ev = sliding_window_occurrences(benchmark, n, id_col, text_col)
+    tr = sliding_window_occurrences(train, n, id_col, text_col)
+    ev = ev.select("h").distinct()
     return (
         tr.join(F.broadcast(ev), "h")
         .select("doc_id", "h")
@@ -403,9 +344,9 @@ def _gopher_doc_counts_arrow(
 ) -> DataFrame:
     """One ``mapInPandas`` pass computing EVERY per-doc integer count the
     quality gate needs (token/char/punct/stopword counts + 2/3-gram
-    totals and dup counts) — the ratio/round tail stays JVM-side so the
-    outputs are bit-identical to the pure-built-in path.  The python
-    count replicas are ASCII-exact vs the Spark expressions
+    totals and dup counts); the ratio/round tail stays JVM-side.  The
+    python count replicas are ASCII-exact vs the Spark SQL expressions
+    (``tests/corpus_sql_reference.py``, pinned by parity tests)
     (:func:`_py_tokens` tokenizer; ``re.ASCII`` classes match Java's
     default ASCII ``\\w``/``\\s``; ``len(text)`` matches ``F.length``'s
     code-point count).  Null-text docs emit all-NULL counts — they must
@@ -474,7 +415,6 @@ def gopher_filter(
     min_stopword_ratio: float = 0.01,
     max_dup_2gram_frac: float = 0.20,
     max_dup_3gram_frac: float = 0.18,
-    method: str = "arrow",
 ) -> DataFrame:
     """Gopher-style quality gate (Rae et al. 2021 Table A1 shape): every
     rule evaluated per document, composed into one keep/drop decision with
@@ -487,78 +427,26 @@ def gopher_filter(
     comma-joined failed slugs in fixed alphabetical order (empty string
     when keep), so the result is deterministic and SQL-comparable.
 
-    ``method="arrow"`` (default): ONE vectorized per-doc pass computes
-    every integer count the rules need
-    (:func:`_gopher_doc_counts_arrow`) — a single text scan, ZERO
+    ONE vectorized per-doc pass computes every integer count the rules
+    need (:func:`_gopher_doc_counts_arrow`) — a single text scan, ZERO
     shuffles, and none of the interpreted higher-order-function cost of
     the per-token stopword lambda / per-gram explode (the same 18-40×
-    class :func:`repetition_stats` documents).  The python count
-    replicas are ASCII-exact vs the Java expressions (pinned by a parity
-    test on real + adversarial corpora including BMP unicode).
-
-    ``method="sql"`` (pure-built-in reference path, oracle-mirroring):
-    two scans of the pruned (id, text) projection — one computes every
-    per-row ratio in a single select, the other feeds the per-doc n-gram
-    aggregates of :func:`repetition_stats`.  The only shuffles carry
-    (doc_id, gram) rows and the tiny per-doc stat rows — text itself
-    never shuffles.  In BOTH methods the ratio/round tail is the same
-    JVM expression, so outputs are bit-identical, and a row whose ratio
-    is undefined (empty/null text) never fires that ratio's rule.
+    class :func:`repetition_stats` documents).  The ratio/round tail is
+    a JVM expression, and a row whose ratio is undefined (empty/null
+    text) never fires that ratio's rule: ``try_divide`` yields NULL
+    instead of an ANSI divide-by-zero error, and such docs still fail
+    the n_tokens rule.
     """
-    from .textstats import _PUNCT_PAT
-
-    if method == "arrow":
-        counts = _gopher_doc_counts_arrow(df, id_col, text_col)
-        j = counts.select(
-            "doc_id",
-            "n_tokens",
-            F.try_divide("n_chars", "n_tokens").alias("chars_per_token"),
-            F.try_divide("n_punct", "n_chars").alias("punct_ratio"),
-            F.try_divide("n_stop", "n_tokens").alias("stopword_ratio"),
-            F.round(F.col("d2") / F.col("g2"), 6).alias("dup2"),
-            F.round(F.col("d3") / F.col("g3"), 6).alias("dup3"),
-        )
-    elif method == "sql":
-        text = F.col(text_col)
-        toks = F.split(F.trim(text), r"\s+")
-        n_tokens = F.size(toks)
-        n_chars = F.length(text)
-        n_punct = F.size(
-            F.expr(f"regexp_extract_all({text_col}, '{_PUNCT_PAT}', 0)")
-        )
-        sw = ",".join(f"'{w}'" for w in _GOPHER_STOPWORDS)
-        n_stop = F.size(
-            F.expr(
-                f"filter(split(lower(trim({text_col})), '\\\\s+'), "
-                f"t -> t IN ({sw}))"
-            )
-        )
-        # try_divide: an empty/whitespace doc has 0 chars or 0 tokens — the
-        # ratio is then NULL (rule not triggered) instead of an ANSI
-        # divide-by-zero error; such docs still fail the n_tokens rule
-        per_row = df.select(
-            F.col(id_col).alias("doc_id"),
-            n_tokens.alias("n_tokens"),
-            F.try_divide(n_chars, n_tokens).alias("chars_per_token"),
-            F.try_divide(n_punct, n_chars).alias("punct_ratio"),
-            F.try_divide(n_stop, n_tokens).alias("stopword_ratio"),
-        )
-        reps = (
-            repetition_stats(df, ns=(2, 3), id_col=id_col,
-                             text_col=text_col, method="sql")
-            .groupBy("doc_id")
-            .agg(
-                F.max(
-                    F.when(F.col("gram_n") == 2, F.col("dup_frac"))
-                ).alias("dup2"),
-                F.max(
-                    F.when(F.col("gram_n") == 3, F.col("dup_frac"))
-                ).alias("dup3"),
-            )
-        )
-        j = per_row.join(reps, "doc_id", "left")
-    else:
-        raise ValueError(f"method must be 'arrow' or 'sql', got {method!r}")
+    counts = _gopher_doc_counts_arrow(df, id_col, text_col)
+    j = counts.select(
+        "doc_id",
+        "n_tokens",
+        F.try_divide("n_chars", "n_tokens").alias("chars_per_token"),
+        F.try_divide("n_punct", "n_chars").alias("punct_ratio"),
+        F.try_divide("n_stop", "n_tokens").alias("stopword_ratio"),
+        F.round(F.col("d2") / F.col("g2"), 6).alias("dup2"),
+        F.round(F.col("d3") / F.col("g3"), 6).alias("dup3"),
+    )
     # slugs in fixed alphabetical order so reasons is deterministic and
     # reproducible in plain SQL without a sort
     checks = [
@@ -592,7 +480,6 @@ def sliding_window_occurrences(
     window_tokens: int = 50,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
 ) -> DataFrame:
     """(doc_id, pos, h) for EVERY ``window_tokens``-token sliding window
     (pos is the 0-based token offset; h is a 16-byte content hash of the
@@ -607,52 +494,23 @@ def sliding_window_occurrences(
     aggregation — embarrassingly parallel, no co-location, no driver
     state.
 
-    ``method="arrow"`` (default): Arrow-batched ``mapInPandas``.  Each
-    distinct token is hashed ONCE (blake2b-128, memoized per batch), then
-    every window hash is a pair of independent polynomial rolling hashes
-    over the token ids, evaluated via modular-inverse prefix sums in
-    numpy with natural uint64 wraparound — O(n) token hashes + O(n)
-    word-ops per doc instead of O(n·w) string building + O(n) md5
-    calls.  Measured ~40× the
-    ``method="sql"`` scan (Spark evaluates higher-order-function lambdas
-    interpreted, per element — the per-window ``slice``+``array_join``+
-    ``md5`` costs ~90 µs/window; same pitfall as row-Python UDFs but
-    JVM-side).  Same hash-collision stance as the winnowing pass
-    (``operators/substring.py``): 128 independent polynomial bits ⇒
-    cross-window collisions are negligible at any corpus size.
-
-    ``method="sql"``: pure built-in expression (``transform`` +
-    ``md5``), zero Python workers — the reference path the DuckDB oracle
-    mirrors; use it for plan-audit or tiny inputs.
-
-    Both methods produce identical (doc_id, pos) duplicate sets — only
-    the opaque hash bytes differ (md5 vs rolling) — so every downstream
-    operator is method-agnostic.
+    Arrow-batched ``mapInPandas``.  Each distinct token is hashed ONCE
+    (blake2b-128, memoized per batch), then every window hash is a pair
+    of independent polynomial rolling hashes over the token ids,
+    evaluated via modular-inverse prefix sums in numpy with natural
+    uint64 wraparound — O(n) token hashes + O(n) word-ops per doc
+    instead of O(n·w) string building + O(n) md5 calls.  Measured ~40×
+    the pure built-in ``transform`` + ``md5`` expression (Spark evaluates
+    higher-order-function lambdas interpreted, per element — the
+    per-window ``slice``+``array_join``+``md5`` costs ~90 µs/window;
+    same pitfall as row-Python UDFs but JVM-side).  Same hash-collision
+    stance as the winnowing pass (``operators/substring.py``): 128
+    independent polynomial bits ⇒ cross-window collisions are negligible
+    at any corpus size.  Only equality of ``h`` is meaningful: the md5
+    form the DuckDB oracle mirrors yields the same (doc_id, pos)
+    duplicate sets with different hash bytes.
     """
     w = int(window_tokens)
-    if method == "sql":
-        t = _tokens(text_col)
-        n = F.size(t)
-        wins = F.when(
-            n >= w,
-            F.transform(
-                F.sequence(F.lit(0), n - w),
-                lambda i: F.struct(
-                    i.cast("int").alias("pos"),
-                    F.unhex(
-                        F.md5(F.array_join(F.slice(t, i + 1, w), " "))
-                    ).alias("h"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<pos:int,h:binary>>"))
-        return (
-            df.select(F.col(id_col).alias("doc_id"), F.explode(wins).alias("w"))
-            .select(
-                "doc_id", F.col("w.pos").alias("pos"), F.col("w.h").alias("h")
-            )
-        )
-    if method != "arrow":
-        raise ValueError(f"method must be 'arrow' or 'sql', got {method!r}")
 
     def scan(batches):
         import hashlib
@@ -752,7 +610,7 @@ def sliding_window_occurrences(
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 if text is None:
                     continue
-                toks = _py_tokens(text)  # bit-exact vs the sql path
+                toks = _py_tokens(text)  # bit-exact vs split(trim(text))
                 n = len(toks)
                 if n < w:
                     continue
@@ -798,8 +656,8 @@ def sliding_window_occurrences(
                 }
             )
 
-    # the id column keeps its incoming Spark type (sql-path parity: any
-    # joinable id works, not just bigint)
+    # the id column keeps its incoming Spark type: any joinable id
+    # works, not just bigint
     id_type = df.schema[id_col].dataType.simpleString()
     pruned = ensure_min_partitions(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
@@ -814,8 +672,6 @@ def duplicate_span_hits(
     keep_first: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
-    prefilter: str = "auto",
 ) -> DataFrame:
     """(doc_id, pos) occurrences of duplicated ``window_tokens``-token
     windows — the positions :func:`remove_duplicate_spans` cuts.
@@ -832,35 +688,31 @@ def duplicate_span_hits(
     as the reference ExactSubstr implementation, which cuts the union of
     duplicated ranges).
 
-    Shuffle shape (``prefilter="off"``): ONE hash aggregation over (h)
-    computes dup-ness AND the keeper (min (doc_id, pos)) together with
-    map-side combine, then a fact-dim join of occurrences against the
-    aggregated dup rows (hot boilerplate hashes are single rows after the
-    agg; AQE handles residual skew).  Text never moves.  The window scan
-    itself executes exactly twice (agg side + join side) — at corpus
-    scale that re-scan is the right trade against materializing
-    O(total-tokens) hash rows.
+    Plain plan (inputs estimated below the bloom floor): ONE hash
+    aggregation over (h) computes dup-ness AND the keeper (min (doc_id,
+    pos)) together with map-side combine, then a fact-dim join of
+    occurrences against the aggregated dup rows (hot boilerplate hashes
+    are single rows after the agg; AQE handles residual skew).  Text
+    never moves.  The window scan itself executes exactly twice (agg
+    side + join side) — at corpus scale that re-scan is the right trade
+    against materializing O(total-tokens) hash rows.
 
-    ``prefilter="auto"`` (default, falls back to ``"off"`` when the
-    bloom expressions are unavailable) adds the singleton-window
+    Bloom plan (inputs at or above the floor, or of unknown size, when
+    the bloom expressions are available) adds the singleton-window
     pre-filter — the reference's filter-before-shuffle pattern
     (``Pub4PCapStreamKVTable.java:360-374``): windows whose hash occurs
-    ONCE globally (the overwhelming majority of a real corpus) currently
-    ride the full join shuffle just to be dropped by it.  Two-pass shape:
-    (1) aggregate hash-only dup-ness (no keeper, so ``pos`` stays out of
-    the shuffle); (2) build a distributed bloom filter over the dup
-    hashes (bounded bytes on the driver; FPs harmless — the exact join
-    stays), probe it MAP-SIDE on the re-scan so only dup-hash occurrences
-    enter the join shuffle, and compute the keeper over those hits (min
-    over a dup hash's hits ≡ min over all its occurrences).  Outputs are
-    identical under every setting (pinned by tests); only shuffle bytes
-    change.
+    ONCE globally (the overwhelming majority of a real corpus) would
+    otherwise ride the full join shuffle just to be dropped by it.
+    Two-pass shape: (1) aggregate hash-only dup-ness (no keeper, so
+    ``pos`` stays out of the shuffle); (2) build a distributed bloom
+    filter over the dup hashes (bounded bytes on the driver; FPs
+    harmless — the exact join stays), probe it MAP-SIDE on the re-scan
+    so only dup-hash occurrences enter the join shuffle, and compute the
+    keeper over those hits (min over a dup hash's hits ≡ min over all
+    its occurrences).  Both plans give identical outputs (pinned by
+    tests); only shuffle bytes change.
     """
-    if prefilter not in ("auto", "bloom", "off"):
-        raise ValueError(
-            f"prefilter must be 'auto', 'bloom' or 'off', got {prefilter!r}"
-        )
-    occ = sliding_window_occurrences(df, window_tokens, id_col, text_col, method)
+    occ = sliding_window_occurrences(df, window_tokens, id_col, text_col)
     # dup-ness aggregates: "≥2 distinct docs" ⟺ min(doc_id) != max(doc_id),
     # which is a plain single-phase partial aggregation — count_distinct
     # plans as a two-level aggregate keyed on (h, doc_id).  NULL ids match
@@ -878,18 +730,12 @@ def duplicate_span_hits(
     else:
         raise ValueError(f"scope must be 'docs' or 'occurrences', got {scope!r}")
 
-    # "auto" takes the bloom plan only past a corpus-size floor: on tiny
-    # inputs the filter's fixed extra stages cost ~4× the whole query for
-    # zero shuffle saved (r4: 0.55 s → 2.2 s at 5k docs), while at 200k
-    # docs it cut shuffle writes 47%.  Unknown size ⇒ assume large (the
-    # scale path must stay on by default).  "bloom" forces it regardless.
-    if prefilter == "auto":
-        if not auto_prefilter_enabled(df):
-            prefilter = "off"
-    use_bloom = prefilter in ("auto", "bloom") and bloom_supported(
-        df.sparkSession
-    )
-    if use_bloom:
+    # the bloom plan only past a corpus-size floor: on tiny inputs the
+    # filter's fixed extra stages cost ~4× the whole query for zero
+    # shuffle saved (r4: 0.55 s → 2.2 s at 5k docs), while at 200k docs
+    # it cut shuffle writes 47%.  Unknown size ⇒ assume large (the scale
+    # path must stay on by default).
+    if auto_prefilter_enabled(df) and bloom_supported(df.sparkSession):
         # pass 1: dup-ness only — the narrowest possible shuffle rows
         # (per-partition-combined (h, min, max) / (h, n) rows)
         dup_h = (
@@ -992,8 +838,6 @@ def remove_duplicate_spans(
     keep_first: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
-    prefilter: str = "auto",
 ) -> DataFrame:
     """ExactSubstr dedup as a corpus transformation: cut every duplicated
     ≥``window_tokens``-token span (any offset — sliding windows, unlike
@@ -1010,8 +854,7 @@ def remove_duplicate_spans(
     slice per gap between spans) in the document's scan stage.
     """
     hits = duplicate_span_hits(
-        df, window_tokens, scope, keep_first, id_col, text_col, method,
-        prefilter,
+        df, window_tokens, scope, keep_first, id_col, text_col
     )
     per_doc = hits.groupBy("doc_id").agg(
         F.sort_array(F.collect_set("pos")).alias("ps")
@@ -1072,8 +915,6 @@ def duplicate_span_stats(
     keep_first: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "arrow",
-    prefilter: str = "auto",
 ) -> DataFrame:
     """Per-document audit of the ExactSubstr cut: ``(doc_id, n_tokens,
     tokens_removed, frac_removed)`` for every document (zero rows
@@ -1082,8 +923,7 @@ def duplicate_span_stats(
     the union of hit windows, which the SQL oracle recomputes
     independently as a distinct-count over exploded window indices."""
     cleaned = remove_duplicate_spans(
-        df, window_tokens, scope, keep_first, id_col, text_col, method,
-        prefilter,
+        df, window_tokens, scope, keep_first, id_col, text_col
     )
     n = F.size(_tokens(text_col))
     return cleaned.select(

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import SketchConfig
-from ..session import ensure_min_partitions
+from ..session import auto_prefilter_enabled, ensure_min_partitions
 from .candidates import band_candidates, pairs_by_key, simhash_candidates
 from .cluster import connected_components
 from .signatures import compute_signatures
@@ -370,7 +370,6 @@ def containment_pairs(
     id_col: str = "doc_id",
     cfg: SketchConfig | None = None,
     probe_k: int = 3,
-    prefilter: str = "auto",
     materialize: str = "auto",
 ) -> DataFrame:
     """Directional token-set containment: every ordered pair with
@@ -414,8 +413,9 @@ def containment_pairs(
     so the pigeonhole bound is preserved).  The document-frequency rank
     join broadcasts the vocabulary when it is small enough
     (``VOCAB_BROADCAST_MAX_ROWS``), the inverted index is pre-filtered
-    map-side by a Bloom filter built over the distinct probe keys
-    (``prefilter="auto"``; the filter-before-shuffle pattern of
+    map-side by a Bloom filter built over the distinct probe keys (on
+    inputs at or above the ``session.auto_prefilter_enabled`` floor; the
+    filter-before-shuffle pattern of
     ``Pub4PCapStreamKVTable.java:360-374``) so only index rows that can
     meet a probe enter the join shuffle, and the per-pair hit counter is
     a plain ``count(*)`` — (doc, key) rows are unique per side up to
@@ -458,10 +458,6 @@ def containment_pairs(
     k = int(probe_k)
     if k < 1:
         raise ValueError(f"probe_k must be ≥ 1, got {probe_k}")
-    if prefilter not in ("auto", "bloom", "off"):
-        raise ValueError(
-            f"prefilter must be 'auto', 'bloom' or 'off', got {prefilter!r}"
-        )
     if materialize not in ("auto", "base", "none"):
         raise ValueError(
             f"materialize must be 'auto', 'base' or 'none', got {materialize!r}"
@@ -624,16 +620,11 @@ def containment_pairs(
     # rank-and-prefix aggregation
     prefix = prefix.localCheckpoint(eager=False)
     index = tok
-    # "auto" takes the bloom index prefilter only past a corpus-size
-    # floor — its fixed stages (probe count + filter build) cost more
-    # than they save on tiny inputs; unknown size ⇒ assume large so the
-    # scale path stays on by default.  "bloom" forces it regardless.
-    if prefilter == "auto":
-        from ..session import auto_prefilter_enabled
-
-        if not auto_prefilter_enabled(df):
-            prefilter = "off"
-    if prefilter in ("auto", "bloom") and bloom_supported(df.sparkSession):
+    # the bloom index prefilter only past a corpus-size floor — its
+    # fixed stages (probe count + filter build) cost more than they save
+    # on tiny inputs; unknown size ⇒ assume large so the scale path stays
+    # on by default
+    if auto_prefilter_enabled(df) and bloom_supported(df.sparkSession):
         # the inverted index only matters where a probe key can meet it:
         # bloom-filter the corpus-sized token stream MAP-SIDE before the
         # join shuffle (FPs harmless — the equi-join stays exact)

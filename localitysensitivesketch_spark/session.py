@@ -58,12 +58,16 @@ def ensure_min_partitions(df, min_partitions: int | None = None):
     At scale this is a no-op by construction: a 100 TB scan has ~10^5+
     partitions ≥ any cluster's parallelism, so the guard never inserts a
     shuffle where the input is already wide.  When it does fire, it
-    shuffles only the rows the caller already pruned (narrow projections,
-    never wide payloads).  Round-robin keeps sizes balanced regardless of
-    key skew; Spark sorts batches before round-robin
-    (``spark.sql.execution.sortBeforeRepartition``), so retries are
-    deterministic.  All guarded operators are partition-layout-invariant
-    (pinned by the scaling tests), so outputs are unchanged.
+    shuffles the caller's column-pruned projection, and that projection
+    can itself be the wide payload: the signature pass and the corpus
+    Arrow scans round-robin ``(doc_id, text)`` — full document text —
+    and ``hyperplane_buckets`` round-robins whole embedding vectors.
+    Only the columns the caller did not select stay put.  Round-robin
+    keeps sizes balanced regardless of key skew; Spark sorts batches
+    before round-robin (``spark.sql.execution.sortBeforeRepartition``),
+    so retries are deterministic.  All guarded operators are
+    partition-layout-invariant (pinned by the scaling tests), so outputs
+    are unchanged.
 
     ``None``-safe on non-classic backends: if partition introspection
     fails, the input is returned untouched.
@@ -89,8 +93,9 @@ AUTO_PREFILTER_MIN_BYTES = 32 * 1024 * 1024
 
 
 def auto_prefilter_enabled(df) -> bool:
-    """The shared ``prefilter="auto"`` floor decision: take the bloom
-    plan unless the input is POSITIVELY estimated below
+    """The shared floor decision of the bloom pre-filter plans
+    (``corpus.duplicate_span_hits``, ``dedup.containment_pairs``): take
+    the bloom plan unless the input is POSITIVELY estimated below
     :data:`AUTO_PREFILTER_MIN_BYTES` (unknown size ⇒ assume large, keep
     the scale path on)."""
     est = estimated_plan_bytes(df)

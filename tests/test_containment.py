@@ -128,21 +128,29 @@ def test_ceil_boundary_pair_not_lost(spark):
     assert (1, 2) in blk
 
 
-def test_containment_prefilter_off_parity(spark):
+def test_containment_prefilter_off_parity(spark, monkeypatch):
     # the bloom index prefilter and the vocab broadcast are scan/shuffle
-    # reductions only — prefilter="off" must produce the identical pair
-    # set on a corpus that exercises both join tiers
+    # reductions only — the plain plan must produce the identical pair
+    # set on a corpus that exercises both join tiers.  The size floor
+    # picks the plan; each is forced here.
+    from localitysensitivesketch_spark.functions.bloom import bloom_supported
+    from localitysensitivesketch_spark.operators import dedup as D
+
     docs = with_doc_id(
         corpus_to_spark(spark, generate_corpus(n_docs=150, seed=23))
     ).select("doc_id", "text")
-    on = {tuple(r) for r in containment_pairs(docs, 1.0).collect()}
-    off = {
-        tuple(r)
-        for r in containment_pairs(docs, 1.0, prefilter="off").collect()
-    }
+
+    def pairs(bloom):
+        monkeypatch.setattr(D, "auto_prefilter_enabled", lambda df: bloom)
+        return containment_pairs(docs, 1.0)
+
+    on_df = pairs(True)
+    if bloom_supported(spark):
+        plan = on_df._jdf.queryExecution().executedPlan().toString()
+        assert "might_contain" in plan
+    on = {tuple(r) for r in on_df.collect()}
+    off = {tuple(r) for r in pairs(False).collect()}
     assert on == off and len(on) > 0
-    with pytest.raises(ValueError):
-        containment_pairs(docs, 1.0, prefilter="nope")
 
 
 def test_containment_vocab_shuffle_join_parity(spark, monkeypatch):

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from localitysensitivesketch_spark.operators import corpus as C
 
+from .corpus_sql_reference import sql_kernels
+
 
 def _docs(spark):
     return spark.createDataFrame(
@@ -166,14 +168,10 @@ def test_gopher_filter_empty_text_null_ratio_rules_stay_silent(spark):
 
 
 def test_repetition_and_decontamination_method_parity(spark):
-    """arrow (mapInPandas Counter / rolling-hash grams) and sql (HOF
-    explode) paths must produce bit-identical outputs — the DuckDB oracle
-    mirrors the sql form, so this pins the fast default to the oracle."""
-    from localitysensitivesketch_spark.operators.corpus import (
-        contamination_report,
-        repetition_stats,
-    )
-
+    """The Arrow kernels (mapInPandas Counter / rolling-hash grams) and
+    their SQL reference forms (HOF explode) must give bit-identical
+    operator outputs — the DuckDB oracle mirrors the SQL forms, so this
+    pins the library's scans to the oracle."""
     docs = [
         (0, "a b a b a b c d e f"),
         (1, "x y z x y z x y z"),
@@ -184,55 +182,66 @@ def test_repetition_and_decontamination_method_parity(spark):
         (6, None),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    for ns in ((2, 3), (2,), (4,)):
-        a = sorted(map(tuple, repetition_stats(df, ns=ns).collect()))
-        s = sorted(map(tuple, repetition_stats(df, ns=ns, method="sql").collect()))
-        assert a == s and (not a) == (len(ns) == 0)
     bench = spark.createDataFrame(
         [(100, "a b a b zz qq"), (101, "x y z unrelated")],
         "doc_id long, text string",
     )
-    for n in (2, 3):
-        a = sorted(map(tuple, contamination_report(df, bench, n=n).collect()))
-        s = sorted(
-            map(tuple, contamination_report(df, bench, n=n, method="sql").collect())
-        )
-        assert a == s
-        assert a  # non-vacuous: shared grams exist at these n
+
+    def outputs():
+        reps = [
+            sorted(map(tuple, C.repetition_stats(df, ns=ns).collect()))
+            for ns in ((2, 3), (2,), (4,))
+        ]
+        cont = [
+            sorted(map(tuple, C.contamination_report(df, bench, n=n).collect()))
+            for n in (2, 3)
+        ]
+        return reps, cont
+
+    a = outputs()
+    with sql_kernels():
+        s = outputs()
+    assert a == s
+    assert all(a[0]) and all(a[1])  # non-vacuous at every ns and n
 
 
 def test_arrow_paths_support_string_ids(spark):
-    """The sql paths never constrained the id type; the arrow defaults
-    must not either (review finding: doc_id was hard-coded int64)."""
-    from localitysensitivesketch_spark.operators.corpus import (
-        duplicate_span_hits,
-        remove_duplicate_spans,
-        repetition_stats,
-    )
-
+    """The SQL reference forms never constrained the id type; the Arrow
+    kernels must not either (doc_id was once hard-coded int64)."""
     docs = [
         ("u/a", "a b a b a b c d e f"),
         ("u/b", "p q a b a b a b zz"),
         ("u/c", "all different words here now"),
     ]
     df = spark.createDataFrame(docs, "doc_id string, text string")
-    a = sorted(map(tuple, repetition_stats(df, ns=(2,)).collect()))
-    s = sorted(map(tuple, repetition_stats(df, ns=(2,), method="sql").collect()))
-    assert a == s and a
-    ha = sorted(map(tuple, duplicate_span_hits(df, 3).collect()))
-    hs = sorted(map(tuple, duplicate_span_hits(df, 3, method="sql").collect()))
-    assert ha == hs and ha
+    bench = spark.createDataFrame(
+        [("e/1", "a b a b zz"), ("e/2", "nothing shared")],
+        "doc_id string, text string",
+    )
+
+    def outputs():
+        return (
+            sorted(map(tuple, C.repetition_stats(df, ns=(2,)).collect())),
+            sorted(map(tuple, C.duplicate_span_hits(df, 3).collect())),
+            sorted(map(tuple, C.contamination_report(df, bench, n=3).collect())),
+        )
+
+    a = outputs()
+    with sql_kernels():
+        s = outputs()
+    assert a == s and all(a)
+    assert {d for d, _ in a[2]} == {"u/a", "u/b"}
     out = {r["doc_id"]: r["tokens_removed"]
-           for r in remove_duplicate_spans(df, 3).collect()}
+           for r in C.remove_duplicate_spans(df, 3).collect()}
     assert set(out) == {"u/a", "u/b", "u/c"} and sum(out.values()) > 0
 
 
 def test_gopher_filter_method_parity(spark):
-    """Round-4: gopher_filter's single-pass Arrow count path must be
-    bit-identical to the pure-built-in sql path (the DuckDB oracle
-    mirrors the sql form) on real + adversarial rows: empty, whitespace,
-    null text, BMP unicode, punctuation-heavy, repeated grams, single
-    token, leading/trailing whitespace."""
+    """gopher_filter's single-pass Arrow count kernel must be
+    bit-identical to its SQL reference form (the DuckDB oracle mirrors
+    it) on real + adversarial rows: empty, whitespace, null text, BMP
+    unicode, punctuation-heavy, repeated grams, single token,
+    leading/trailing whitespace."""
     rows = [
         (1, " ".join(f"w{i}" for i in range(60))),
         (2, " ".join(["dup gram"] * 40)),
@@ -249,17 +258,19 @@ def test_gopher_filter_method_parity(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     kw = dict(min_tokens=5, min_stopword_ratio=0.01)
-    a = sorted(
-        (r["doc_id"], r["keep"], r["reasons"])
-        for r in C.gopher_filter(df, method="arrow", **kw).collect()
-    )
-    s = sorted(
-        (r["doc_id"], r["keep"], r["reasons"])
-        for r in C.gopher_filter(df, method="sql", **kw).collect()
-    )
+
+    def outputs():
+        return sorted(
+            (r["doc_id"], r["keep"], r["reasons"])
+            for r in C.gopher_filter(df, **kw).collect()
+        )
+
+    a = outputs()
+    with sql_kernels():
+        s = outputs()
     assert a == s
     assert len(a) == len(rows)  # null-text docs still present
-    # the arrow default is shuffle-free: no Exchange in the plan
+    # the Arrow kernel is shuffle-free: no Exchange in the plan
     plan = (
         C.gopher_filter(df, **kw)._jdf.queryExecution().executedPlan().toString()
     )

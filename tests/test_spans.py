@@ -4,16 +4,20 @@ shadow oracle, keep-one semantics, merge behavior, C4-chunk contrast."""
 from __future__ import annotations
 
 import hashlib
+from contextlib import nullcontext
 
 import pytest
 from pyspark.sql import functions as F
 
+from localitysensitivesketch_spark.operators import corpus as C
 from localitysensitivesketch_spark.operators.corpus import (
     duplicate_span_hits,
     duplicate_span_stats,
     remove_duplicate_spans,
     sliding_window_occurrences,
 )
+
+from .corpus_sql_reference import sql_kernels
 
 W = 5
 
@@ -58,13 +62,14 @@ def _shadow_removed(docs, w=W, **kw):
 
 
 @pytest.mark.parametrize("scope", ["docs", "occurrences"])
-@pytest.mark.parametrize("method", ["arrow", "sql"])
-def test_span_hits_match_python_shadow(spark, scope, method):
+@pytest.mark.parametrize("scan", ["arrow", "sql"])
+def test_span_hits_match_python_shadow(spark, scope, scan):
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
-    got = sorted(
-        (r["doc_id"], r["pos"])
-        for r in duplicate_span_hits(df, W, scope=scope, method=method).collect()
-    )
+    with sql_kernels() if scan == "sql" else nullcontext():
+        got = sorted(
+            (r["doc_id"], r["pos"])
+            for r in duplicate_span_hits(df, W, scope=scope).collect()
+        )
     assert got == _shadow_hits(DOCS, scope=scope)
 
 
@@ -139,9 +144,9 @@ def test_window_occurrence_counts(spark):
 
 
 def test_arrow_and_sql_paths_identical_on_adversarial_whitespace(spark):
-    """The arrow scan reimplements split(trim(text), '\\s+') in python; pin
-    bit-exact agreement with the sql path on the cases where python's
-    default str.split would silently diverge (unicode NBSP, tabs,
+    """The arrow scan reimplements split(trim(text), '\\s+') in python;
+    pin bit-exact agreement with the SQL reference scan on the cases where
+    python's default str.split would silently diverge (unicode NBSP, tabs,
     leading/trailing ASCII whitespace, empty/whitespace-only docs)."""
     docs = [
         (0, "plain alpha beta gamma delta alpha beta gamma delta"),
@@ -160,8 +165,9 @@ def test_arrow_and_sql_paths_identical_on_adversarial_whitespace(spark):
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     for w in (2, 3):
-        a = sorted(map(tuple, duplicate_span_hits(df, w, method="arrow").collect()))
-        s = sorted(map(tuple, duplicate_span_hits(df, w, method="sql").collect()))
+        a = sorted(map(tuple, duplicate_span_hits(df, w).collect()))
+        with sql_kernels():
+            s = sorted(map(tuple, duplicate_span_hits(df, w).collect()))
         assert a == s, f"w={w}: arrow={a} sql={s}"
         assert a, f"w={w}: vacuous fixture"
 
@@ -179,24 +185,22 @@ def test_arrow_sql_identity_random_corpora(spark):
         n = rng.randint(0, 25)
         docs.append((d, " ".join(rng.choice(pool) for _ in range(n))))
     df = spark.createDataFrame(docs, "doc_id long, text string")
+    def outputs(w, scope):
+        hits = sorted(
+            map(tuple, duplicate_span_hits(df, w, scope=scope).collect())
+        )
+        removed = {
+            r["doc_id"]: r["tokens_removed"]
+            for r in duplicate_span_stats(df, w, scope=scope).collect()
+        }
+        return hits, removed
+
     for w, scope in ((3, "docs"), (4, "occurrences")):
-        a = sorted(
-            map(tuple, duplicate_span_hits(df, w, scope=scope, method="arrow").collect())
-        )
-        s = sorted(
-            map(tuple, duplicate_span_hits(df, w, scope=scope, method="sql").collect())
-        )
+        a = outputs(w, scope)
+        with sql_kernels():
+            s = outputs(w, scope)
         assert a == s
-        ra = {
-            r["doc_id"]: r["tokens_removed"]
-            for r in duplicate_span_stats(df, w, scope=scope, method="arrow").collect()
-        }
-        rs = {
-            r["doc_id"]: r["tokens_removed"]
-            for r in duplicate_span_stats(df, w, scope=scope, method="sql").collect()
-        }
-        assert ra == rs
-        assert sum(ra.values()) > 0  # non-vacuous
+        assert sum(a[1].values()) > 0  # non-vacuous
 
 
 def test_merged_spans_fold_matches_python_interval_merge(spark):
@@ -237,15 +241,12 @@ def test_merged_spans_fold_matches_python_interval_merge(spark):
         assert cover == {x for p in ps for x in range(p, p + w)}
 
 
-def test_span_hits_prefilter_parity_and_plan(spark):
-    """Round-4 (VERDICT #4): the singleton-window bloom pre-filter must
-    (a) produce hit sets identical to prefilter='off' under both scopes
-    and keep_first settings, and (b) actually place a might_contain probe
-    before the join shuffle."""
+def test_span_hits_prefilter_parity_and_plan(spark, monkeypatch):
+    """The singleton-window bloom pre-filter plan must (a) produce hit
+    sets identical to the plain plan under both scopes and keep_first
+    settings, and (b) actually place a might_contain probe before the
+    join shuffle.  The size floor picks the plan; each is forced here."""
     from localitysensitivesketch_spark.functions.bloom import bloom_supported
-    from localitysensitivesketch_spark.operators.corpus import (
-        duplicate_span_hits,
-    )
 
     boiler = "subscribe to our newsletter terms of service apply here now"
     docs = spark.createDataFrame(
@@ -258,27 +259,27 @@ def test_span_hits_prefilter_parity_and_plan(spark):
         ],
         "doc_id long, text string",
     )
+
+    def hits(bloom, **kw):
+        monkeypatch.setattr(C, "auto_prefilter_enabled", lambda df: bloom)
+        return duplicate_span_hits(docs, window_tokens=5, **kw)
+
     for scope in ("docs", "occurrences"):
         for keep in (True, False):
             off = sorted(
                 (r.doc_id, r.pos)
-                for r in duplicate_span_hits(
-                    docs, window_tokens=5, scope=scope, keep_first=keep,
-                    prefilter="off",
-                ).collect()
+                for r in hits(False, scope=scope, keep_first=keep).collect()
             )
             on = sorted(
                 (r.doc_id, r.pos)
-                for r in duplicate_span_hits(
-                    docs, window_tokens=5, scope=scope, keep_first=keep,
-                    prefilter="bloom",
-                ).collect()
+                for r in hits(True, scope=scope, keep_first=keep).collect()
             )
             assert on == off, (scope, keep)
             assert off  # non-vacuous: the boilerplate run produces hits
+    plain = hits(False)._jdf.queryExecution().executedPlan().toString()
+    assert "might_contain" not in plain
     if bloom_supported(spark):
-        hits = duplicate_span_hits(docs, window_tokens=5, prefilter="bloom")
-        plan = hits._jdf.queryExecution().executedPlan().toString()
+        plan = hits(True)._jdf.queryExecution().executedPlan().toString()
         assert "might_contain" in plan
 
 
@@ -299,7 +300,7 @@ def test_arrow_scan_survives_memo_buffer_growth(spark):
         (2, f"{dup_run} other trailing words"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string").coalesce(1)
-    occ = sliding_window_occurrences(df, w, method="arrow")
+    occ = sliding_window_occurrences(df, w)
     # every window of every doc present, and the planted dup is found
     counts = {r["doc_id"]: r["n"] for r in
               occ.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
