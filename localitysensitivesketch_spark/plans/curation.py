@@ -148,14 +148,8 @@ class CurationPipeline:
         containment_threshold: float | None = None,
         exactsubstr_window: int | None = None,
         exactsubstr_min_remaining: int = 0,
-        auto_partition: bool = False,
     ) -> CurationResult:
-        """``auto_partition=True`` scopes ``spark.sql.shuffle.partitions``
-        to the data-sized policy for the raw input
-        (:func:`~..session.partition_policy`) for the whole funnel run,
-        restoring the session setting after.
-
-        ``canonicalize=True`` collapses cosmetic url variants
+        """``canonicalize=True`` collapses cosmetic url variants
         (case/port/fragment/slash/query-order — ``operators/urls.py``)
         BEFORE the recrawl tier: captures are keyed (and doc ids hashed)
         by ``canonical_url``, so two crawls of ``http://A.com/p`` and
@@ -178,34 +172,6 @@ class CurationPipeline:
         view reproduces ``clean_text`` byte-identically, including the
         whitespace normalization ``remove_duplicate_spans`` applies to
         unaffected docs."""
-        from contextlib import nullcontext
-
-        from ..session import partition_policy
-
-        ctx = (
-            partition_policy(self.spark, raw)
-            if auto_partition
-            else nullcontext()
-        )
-        with ctx:
-            return self._run_stages(
-                raw, resume, url_col, ts_col, text_col, canonicalize,
-                containment_threshold, exactsubstr_window,
-                exactsubstr_min_remaining,
-            )
-
-    def _run_stages(
-        self,
-        raw: DataFrame,
-        resume: bool,
-        url_col: str,
-        ts_col: str,
-        text_col: str,
-        canonicalize: bool,
-        containment_threshold: float | None,
-        exactsubstr_window: int | None,
-        exactsubstr_min_remaining: int,
-    ) -> CurationResult:
         ran: list[str] = []
         reused: list[str] = []
 

@@ -1,14 +1,22 @@
 """Incremental corpus updates: sketch only the new docs, merge clusters.
 
-Reference analogue: re-clustering on value drift — when a key's value moves
-it is deleted from its old cluster's filter+cell and re-inserted into the
-new one (``Sketching/LSSFingerprintAtomic.java:646-686``), without
-rebuilding the sketch.  Here: a new crawl snapshot arrives, only the new
+Reference analogue: the one insert path every writer goes through
+(``Sketching/LSSFingerprintAtomic.java:591-690``) — the stream consumer
+(``Sub4SketchingKVStream.java:353-394``) and re-clustering on value drift
+(``:646-686``) both insert through it without rebuilding the sketch.
+Here that path is :func:`merge_batch`, a storage-free step: only the new
 docs are shingled/hashed (the expensive stage), candidates are generated
-new-vs-new and new-vs-old via the same salted band join, and the cluster
-labels are recomputed from the merged edge set.  On Iceberg this is a
-MERGE INTO per stage table; the sandbox store overwrites the stage dirs
-through the same commit protocol.
+new-vs-new (salted/capped band join) and new-vs-old (one band-key join
+against the stored signatures), the pairs are verified, and the cluster
+labels are merged from the new edges.  Its two callers add only their
+own storage:
+
+* :func:`incremental_update` — the batch MERGE: union-commits every
+  stage of a :class:`~.pipeline.DedupPipeline` checkpoint through the
+  store's protocol (on Iceberg a MERGE INTO per stage table) and
+  invalidates what the merge makes stale;
+* ``streaming.stream.process_incremental_batch`` — one micro-batch:
+  batch_id-partitioned per-batch tables plus a swapped cluster snapshot.
 
 Cost model at scale: signatures O(|new|); candidate join O(|new| band rows
 ⋈ store); connected components O(|V|+|E|) but over the (small) edge set
@@ -34,10 +42,123 @@ from pyspark.sql import functions as F
 from ..config import SketchConfig
 from ..functions.bloom import bloom_build, bloom_supported, might_contain
 from ..operators.candidates import pairs_by_key
-from ..operators.cluster import merge_components
+from ..operators.cluster import connected_components, merge_components
 from ..operators.signatures import compute_signatures
 from ..operators.verify import duplicate_edges, verify_pairs
+from ..session import auto_prefilter_enabled
 from .pipeline import CheckpointStore
+
+
+def merge_batch(
+    new_documents: DataFrame,
+    all_documents: DataFrame,
+    old_signatures: DataFrame | None,
+    cfg: SketchConfig,
+    clusters: DataFrame | None = None,
+    old_edges: DataFrame | None = None,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> dict[str, DataFrame]:
+    """Merge ``new_documents`` into accumulated near-dup state; writes
+    nothing.
+
+    ``all_documents`` holds old + new rows (old-vs-new pairs verify
+    against both texts); ``old_signatures`` is the stored signature table
+    (``None`` when there is none yet).  ``clusters`` is the previous
+    ``(doc_id, cluster_id)`` assignment: the new edges are merged into it
+    by :func:`~..operators.cluster.merge_components`.  Without one (first
+    window, or a crash between a snapshot's renames) the labels are
+    recomputed by ``connected_components`` over ``old_edges`` plus the new
+    edges and every doc of ``all_documents``.
+
+    Returns ``signatures`` (the new docs' rows), ``candidates``,
+    ``verified``, ``edges`` (the new ones) and ``clusters`` (all docs).
+    ``signatures`` and ``verified`` come back pinned by an eager
+    ``localCheckpoint`` — each feeds several consumers; the rest are lazy,
+    bar the jobs ``merge_components``/``connected_components`` run to
+    plan themselves.
+
+    The new-vs-old probe takes the M2 bloom plan (``functions/bloom.py``;
+    reference ``BloomFilter.java:153-232``) when
+    ``session.auto_prefilter_enabled`` says the old side is large: old
+    band-key rows whose key cannot be among the new keys are dropped by a
+    codegen'd ``might_contain`` BEFORE the join shuffle, so at scale
+    (|old| ≫ |new|) the join's big side shrinks to ~|matching old rows|.
+    Lossless: false positives are discarded by the join itself, and a
+    filter that cannot be built leaves the plain join.
+    """
+    new_sigs = compute_signatures(
+        new_documents, cfg, id_col=id_col, text_col=text_col
+    ).localCheckpoint(eager=True)
+    new_keys = new_sigs.filter(F.col("n_shingles") > 0).select(
+        "doc_id", F.explode("band_keys").alias("key")
+    )
+    # new-vs-new through the standard salted/capped path
+    candidates, _ = pairs_by_key(new_keys, cfg)
+    all_sigs = new_sigs
+    if old_signatures is not None:
+        old_keys = old_signatures.filter(F.col("n_shingles") > 0).select(
+            F.col("doc_id").alias("old_id"), F.explode("band_keys").alias("key")
+        )
+        if auto_prefilter_enabled(old_keys) and bloom_supported(
+            old_keys.sparkSession
+        ):
+            n_new_keys = new_keys.count()
+            bloom = (
+                bloom_build(new_keys, "key", expected_items=n_new_keys)
+                if n_new_keys
+                else None
+            )
+            pred = might_contain(old_keys, "key", bloom) if bloom else None
+            if pred is not None:
+                old_keys = old_keys.filter(pred)
+        # new-vs-old: uncapped equi-join on band key
+        cross = (
+            new_keys.join(old_keys, "key")
+            .filter(F.col("doc_id") != F.col("old_id"))
+            .select(
+                F.least("doc_id", "old_id").alias("id1"),
+                F.greatest("doc_id", "old_id").alias("id2"),
+            )
+            .distinct()
+        )
+        candidates = candidates.unionByName(cross).distinct()
+        all_sigs = old_signatures.unionByName(new_sigs)
+
+    verified = verify_pairs(
+        candidates, all_documents, cfg, id_col=id_col, text_col=text_col,
+        signatures=all_sigs, min_jaccard=cfg.jaccard_threshold,
+    ).localCheckpoint(eager=True)
+    new_edges = duplicate_edges(verified, cfg)
+    if clusters is not None:
+        # contract the previous clusters, CC only the batch-sized
+        # contracted graph, relabel with one broadcast join — identical
+        # labels to a full recompute over old ∪ new edges (pinned by
+        # test_merge_components_equals_full_recompute), and re-merging
+        # edges already in ``clusters`` is a no-op (every contracted edge
+        # collapses to l1 == l2), which makes a stream replay safe
+        clusters = merge_components(
+            clusters,
+            new_edges.select("id1", "id2"),
+            new_vertices=new_documents.select(
+                F.col(id_col).cast("long").alias("doc_id")
+            ),
+        )
+    else:
+        edges = new_edges.select("id1", "id2")
+        if old_edges is not None:
+            edges = old_edges.select("id1", "id2").unionByName(edges)
+        clusters = connected_components(
+            all_documents.select(F.col(id_col).cast("long").alias("doc_id")),
+            edges,
+        )
+    return {
+        "signatures": new_sigs,
+        "candidates": candidates,
+        "verified": verified,
+        "edges": new_edges,
+        "clusters": clusters,
+    }
 
 
 def incremental_update(
@@ -69,75 +190,24 @@ def incremental_update(
         return stage + stage_suffix
 
     old_sigs = store.read(nm("signatures"))
-    new_sigs = compute_signatures(
-        new_documents, cfg, id_col=id_col, text_col=text_col
-    ).localCheckpoint(eager=True)
-
-    new_keys = new_sigs.filter(F.col("n_shingles") > 0).select(
-        "doc_id", F.explode("band_keys").alias("key")
+    step = merge_batch(
+        new_documents, all_documents, old_sigs, cfg,
+        clusters=store.read(nm("clusters")), id_col=id_col, text_col=text_col,
     )
-    # new-vs-new through the standard salted/capped path
-    nn_pairs, _ = pairs_by_key(new_keys, cfg)
-    # new-vs-old: equi-join on band key against the stored signatures
-    old_keys = old_sigs.filter(F.col("n_shingles") > 0).select(
-        F.col("doc_id").alias("old_id"), F.explode("band_keys").alias("key")
-    )
-    # M2 Bloom pre-filter (functions/bloom.py; reference BloomFilter.java:
-    # 153-232): old-side band-key rows whose key cannot be among the new
-    # batch's keys are dropped by a codegen'd might_contain BEFORE the
-    # shuffle join — at scale |old| ≫ |new|, so this turns the join's big
-    # side into ~|matching old rows|.  Optional: on failure the plain join
-    # runs (pre-filter is lossless up to false positives, which the join
-    # itself then discards).
-    # probe expression availability BEFORE the sizing count() — on a Spark
-    # build without the internal classes, no job is paid for a filter that
-    # can never be built
-    if bloom_supported(new_keys.sparkSession):
-        n_new_keys = new_keys.count()
-        bloom = bloom_build(new_keys, "key", expected_items=max(n_new_keys, 1))
-        if bloom is not None:
-            pred = might_contain(old_keys, "key", bloom)
-            if pred is not None:
-                old_keys = old_keys.filter(pred)
-    no_pairs = (
-        new_keys.join(old_keys, "key")
-        .filter(F.col("doc_id") != F.col("old_id"))
-        .select(
-            F.least("doc_id", "old_id").alias("id1"),
-            F.greatest("doc_id", "old_id").alias("id2"),
-        )
-        .distinct()
-    )
-    candidates = nn_pairs.unionByName(no_pairs).distinct()
-
-    verified = verify_pairs(
-        candidates, all_documents, cfg, id_col=id_col, text_col=text_col,
-        signatures=old_sigs.unionByName(new_sigs),
-        min_jaccard=cfg.jaccard_threshold,
+    merged_sigs = old_sigs.unionByName(step["signatures"])
+    merged_cands = (
+        store.read(nm("candidates")).unionByName(step["candidates"]).distinct()
     )
     # merge the verified table too — a later resume must never pair a stale
     # 'verified' commit with the merged candidates/edges written below
-    merged_verified = store.read(nm("verified")).unionByName(verified).distinct()
-    new_edges = duplicate_edges(verified, cfg)
-    merged_edges = store.read(nm("edges")).unionByName(new_edges).distinct()
-
-    merged_sigs = old_sigs.unionByName(new_sigs)
-    # incremental CC: contract the committed clusters, CC only the
-    # batch-sized contracted graph, relabel with one broadcast join —
-    # identical labels to a full recompute over merged_edges (pinned by
-    # test_merge_components_equals_full_recompute), but the only
-    # corpus-sized work is a map-side pass over the label table
-    clusters = merge_components(
-        store.read(nm("clusters")),
-        new_edges.select("id1", "id2"),
-        new_vertices=new_documents.select(
-            F.col(id_col).cast("long").alias("doc_id")
-        ),
+    merged_verified = (
+        store.read(nm("verified")).unionByName(step["verified"]).distinct()
     )
+    merged_edges = store.read(nm("edges")).unionByName(step["edges"]).distinct()
+    clusters = step["clusters"]
     stats = clusters.groupBy("cluster_id").agg(
         F.count("*").alias("size"), F.min("doc_id").alias("canonical_doc_id")
     )
-    merged_cands = store.read(nm("candidates")).unionByName(candidates).distinct()
 
     # materialize every frame whose plan reads a stage about to be
     # rewritten — commits below swap the underlying files (on Iceberg the

@@ -610,16 +610,8 @@ class DedupPipeline:
         text_col: str = "text",
         signature_slices: int | None = None,
         stage_suffix: str = "",
-        auto_partition: bool = False,
     ) -> PipelineResult:
-        """``auto_partition=True`` scopes ``spark.sql.shuffle.partitions``
-        to the data-sized policy (:func:`~..session.partition_policy` —
-        ~128 MB a partition, floored at 2× the scheduling parallelism,
-        identical at every cluster size) for the duration of the run,
-        restoring the session setting after; when the input size cannot
-        be estimated the setting is left untouched.
-
-        ``signature_slices``: commit the (most expensive) signature stage
+        """``signature_slices``: commit the (most expensive) signature stage
         in that many independent slice jobs via
         :meth:`CheckpointStore.resume_partitioned`, so an interruption
         resumes mid-stage instead of recomputing all signatures.
@@ -630,30 +622,6 @@ class DedupPipeline:
         here, so resume=True can never reuse signatures/clusters computed
         from a differently-parameterized input — the store's config_sha
         covers only SketchConfig."""
-        from contextlib import nullcontext
-
-        from ..session import partition_policy
-
-        ctx = (
-            partition_policy(self.spark, documents)
-            if auto_partition
-            else nullcontext()
-        )
-        with ctx:
-            return self._run_stages(
-                documents, resume, id_col, text_col, signature_slices,
-                stage_suffix,
-            )
-
-    def _run_stages(
-        self,
-        documents: DataFrame,
-        resume: bool,
-        id_col: str,
-        text_col: str,
-        signature_slices: int | None,
-        stage_suffix: str,
-    ) -> PipelineResult:
         cfg = self.cfg
         ran: list[str] = []
         reused: list[str] = []

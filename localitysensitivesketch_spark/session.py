@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import math
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -165,42 +164,6 @@ def cluster_storage_bytes(spark: SparkSession) -> int | None:
         return total or None
     except Exception:  # noqa: BLE001
         return None
-
-
-@contextmanager
-def partition_policy(
-    spark: SparkSession,
-    df,
-    *,
-    target_partition_bytes: int = 128 * 1024 * 1024,
-):
-    """Scope ``spark.sql.shuffle.partitions`` to the data-sized
-    recommendation for ``df`` (:func:`recommended_shuffle_partitions`
-    over :func:`estimated_plan_bytes`) for the duration of the block,
-    then restore the previous setting.
-
-    Yields the chosen partition count, or ``None`` when the input size
-    cannot be estimated — in that case the session setting is left
-    untouched (unknown size ⇒ whatever the operator/session already
-    pinned; the policy only acts on evidence).  This is the library
-    surface of the bench tools' sizing rule: pipelines opt in with
-    ``auto_partition=True`` instead of reading the bench docs.
-    """
-    est = estimated_plan_bytes(df)
-    if est is None:
-        yield None
-        return
-    n = recommended_shuffle_partitions(
-        est,
-        target_partition_bytes=target_partition_bytes,
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield n
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def get_spark(

@@ -11,8 +11,11 @@ ingest publishes keyed batches (``Ingest/Pub4PCapStreamKVTable.java:
   ``F.window`` + watermark for late data
 * sketch flush + serialize → per-batch append into the checkpointed
   signature store (the batch id is the window id)
-* downstream queries → incremental candidate join of each new batch
-  against the accumulated store
+* downstream queries → each curated micro-batch goes through the same
+  incremental near-dup step as the batch MERGE
+  (``plans.incremental.merge_batch``: candidates against the accumulated
+  store, verify, cluster merge); this module adds only the per-batch
+  storage (:func:`process_incremental_batch`)
 
 The batch pipeline stays the primary deliverable (north_rule); this module
 makes the same operators run incrementally without rewriting them.
@@ -27,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import SketchConfig
-from ..operators.candidates import pairs_by_key
 from ..operators.signatures import compute_signatures
 from ..session import local_frame
 
@@ -142,60 +144,6 @@ def stream_signatures(
     return w.start()
 
 
-def incremental_candidates(
-    spark: SparkSession,
-    documents: DataFrame,
-    cfg: SketchConfig,
-    store_root: str,
-    available_now: bool = True,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    full_pipeline: bool = False,
-    pre_filter=None,
-) -> StreamingQuery:
-    """W1 window-flush analogue via ``foreachBatch``: every micro-batch
-
-    0. optionally applies ``pre_filter`` (a ``DataFrame → DataFrame``
-       projection/filter, e.g. ``lambda d: d.join(gopher_filter(d)
-       .filter("keep").select("doc_id"), "doc_id", "left_semi")``) so
-       curation tiers like the quality gate run incrementally — the
-       filter sees ONLY the batch, so it must be per-document (stateless
-       across batches), which every hygiene rule here is,
-    1. computes signatures for the batch's docs,
-    2. joins the batch's band keys against the accumulated store
-       (new-vs-old candidates) and within the batch itself (new-vs-new),
-    3. appends signatures to the store and candidate pairs to the output,
-    4. with ``full_pipeline=True``, additionally verifies the pairs (exact
-       ratio-pruned Jaccard against the accumulated doc store), merges the
-       edge set, and recomputes the global cluster snapshot — the stream
-       then answers cluster queries per window like the reference's
-       per-window query suite (``Query/Consumer4sketch.java:201-269``).
-
-    State lives in parquet dirs under ``store_root`` (sigs/, pairs/, and
-    with the full pipeline docs/, edges/, clusters/), so a restart resumes
-    from the stream checkpoint exactly like the reference's
-    deserialize-and-continue path (``LSSFingerprintAtomic.java:1405-1483``).
-    """
-    ckpt = os.path.join(store_root, "_stream_checkpoint")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if pre_filter is not None:
-            batch_df = pre_filter(batch_df)
-        process_incremental_batch(
-            spark, batch_df, batch_id, cfg, store_root,
-            id_col=id_col, text_col=text_col, full_pipeline=full_pipeline,
-        )
-
-    w = (
-        documents.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
-
-
 def process_incremental_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -204,136 +152,90 @@ def process_incremental_batch(
     store_root: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    full_pipeline: bool = False,
 ) -> None:
-    """One micro-batch of :func:`incremental_candidates` — module-level so
-    the replay contract is directly unit-testable.
+    """The near-dup tier for ONE micro-batch (the W1 window flush and the
+    reference's per-window query topology, ``Consumer4sketch.java:
+    201-269``): the batch goes through the shared incremental step
+    (:func:`~..plans.incremental.merge_batch` — sketch, new-vs-new and
+    new-vs-old candidates, verify, cluster merge) against the state
+    accumulated under ``store_root``, and the batch's signatures, docs
+    and edges plus a fresh global cluster snapshot are stored.
+    Module-level so the replay contract is directly unit-testable;
+    :func:`stream_curation` ``dedup=True`` calls it per micro-batch.
 
-    **Idempotent by construction**: both outputs are partitioned by
-    batch_id and written with DYNAMIC partition overwrite, so when
+    State lives in parquet dirs under ``store_root`` (sigs/, docs/,
+    edges/ per batch, clusters/ the snapshot), so a restart resumes from
+    the stream checkpoint like the reference's deserialize-and-continue
+    path (``LSSFingerprintAtomic.java:1405-1483``).  Other dirs under
+    ``store_root`` (such as the ``pairs/`` table older stores hold) are
+    never read.
+
+    **Idempotent by construction**: the per-batch tables are partitioned
+    by batch_id and written with DYNAMIC partition overwrite, so when
     Structured Streaming replays the last uncommitted batch after a
     failure/restart (same batch_id, same rows), the replay rewrites ITS
     OWN partition instead of appending duplicate rows (duplicate doc_ids
-    would otherwise inflate every downstream candidate join).  The sig
-    store read below excludes rows with the CURRENT batch_id, so a replay
-    sees exactly the pre-batch store state — without this, the batch's own
-    signatures (written by the failed attempt) would re-enter through the
-    uncapped new-vs-old join and re-add intra-batch pairs the width cap
-    deliberately dropped.  An empty batch is a no-op after its signature
-    pass.
+    would otherwise inflate every downstream candidate join).  Every
+    state read below excludes rows with the CURRENT batch_id, so a replay
+    sees exactly the pre-batch store state — without this, the batch's
+    own signatures (written by the failed attempt) would re-enter through
+    the uncapped new-vs-old join and re-add intra-batch pairs the width
+    cap deliberately dropped.  An empty batch (e.g. an all-dropped
+    curation batch) adds no state and is a no-op.
     """
-    sig_path = os.path.join(store_root, "sigs")
-    pair_path = os.path.join(store_root, "pairs")
-    sigs = compute_signatures(
-        batch_df, cfg, id_col=id_col, text_col=text_col
-    ).localCheckpoint(eager=True)
-    # one signature row per batch row: an empty batch (e.g. an all-dropped
-    # curation batch) adds no state, so it returns before candidates,
-    # verify and CC run over zero rows and rewrite an unchanged snapshot;
+    from ..plans.incremental import merge_batch
+
+    # one signature row per batch row, so an empty batch would add no
+    # state: return before anything is sketched, verified or rewritten;
     # the probe also settles the emptiness of the sigs and docs writes
-    if sigs.isEmpty():
+    if batch_df.isEmpty():
         return
-    new_keys = sigs.filter(F.col("n_shingles") > 0).select(
-        "doc_id", F.explode("band_keys").alias("key")
-    )
-    # new-vs-new within the batch (salted/capped machinery reused)
-    pairs, _ = pairs_by_key(new_keys, cfg)
-    old_sigs = None
-    if os.path.exists(sig_path):
-        # exclude this batch's own partition (present only on replay) —
-        # partition pruning makes the filter free
-        old_sigs = spark.read.parquet(sig_path).filter(
-            F.col("batch_id") != F.lit(batch_id)
-        )
-        # new-vs-old against the accumulated store
-        old_keys = old_sigs.filter(F.col("n_shingles") > 0).select(
-            F.col("doc_id").alias("old_id"), F.explode("band_keys").alias("key")
-        )
-        cross = (
-            new_keys.join(old_keys, "key")
-            .filter(F.col("doc_id") != F.col("old_id"))
-            .select(
-                F.least("doc_id", "old_id").alias("id1"),
-                F.greatest("doc_id", "old_id").alias("id2"),
-            )
-            .distinct()
-        )
-        pairs = pairs.unionByName(cross).distinct()
-    pairs = pairs.localCheckpoint(eager=True)  # plan may read pair/sig dirs
-
-    _write_by_batch(pairs, pair_path, batch_id)
-    _write_by_batch(sigs, sig_path, batch_id, empty=False)
-
-    if not full_pipeline:
-        return
-
-    # ---- per-window verify + edge merge + cluster snapshot ----------------
-    # (the reference's per-window query topology, Consumer4sketch.java:
-    # 201-269 — every window runs the full downstream suite)
-    from ..operators.cluster import connected_components, merge_components
-    from ..operators.verify import duplicate_edges, verify_pairs
-
+    sig_path = os.path.join(store_root, "sigs")
     doc_path = os.path.join(store_root, "docs")
     edge_path = os.path.join(store_root, "edges")
     cluster_path = os.path.join(store_root, "clusters")
 
+    def prior(path: str) -> DataFrame | None:
+        # this batch's own partition is present only on replay —
+        # partition pruning makes the filter free
+        if not os.path.exists(path):
+            return None
+        return (
+            spark.read.parquet(path)
+            .filter(F.col("batch_id") != F.lit(batch_id))
+            .drop("batch_id")
+        )
+
     batch_docs = batch_df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).alias("text"),
-    ).localCheckpoint(eager=True)
-    all_docs = batch_docs
-    if os.path.exists(doc_path):
-        all_docs = (
-            spark.read.parquet(doc_path)
-            .filter(F.col("batch_id") != F.lit(batch_id))
-            .select("doc_id", "text")
-            .unionByName(batch_docs)
-        )
-    all_sigs = sigs if old_sigs is None else old_sigs.drop(
-        "batch_id"
-    ).unionByName(sigs)
-    verified = verify_pairs(
-        pairs, all_docs, cfg, id_col="doc_id", text_col="text",
-        signatures=all_sigs, min_jaccard=cfg.jaccard_threshold,
     )
-    new_edges = duplicate_edges(verified, cfg).localCheckpoint(eager=True)
+    old_docs = prior(doc_path)
+    all_docs = batch_docs if old_docs is None else old_docs.unionByName(batch_docs)
+    old_clusters = None
     if os.path.exists(cluster_path):
-        # incremental merge: contract the previous snapshot's clusters and
-        # run CC only on the (batch-sized) contracted graph, then relabel
-        # the corpus-sized table with ONE broadcast join — per-window cost
-        # stays proportional to the batch, not the accumulated edge set.
-        # Replay-safe: if the previous attempt already wrote the merged
-        # snapshot, re-merging the same edges is a no-op (every contracted
-        # edge collapses to l1 == l2).
-        prev = spark.read.parquet(cluster_path)
-        clusters = merge_components(
-            prev, new_edges.select("id1", "id2"), new_vertices=batch_docs
-        ).localCheckpoint(eager=True)  # plan reads dirs rewritten below
-    else:
-        # no snapshot yet (first window, or a crash before the very first
-        # snapshot write): full CC over whatever edges exist
-        all_edges = new_edges.select("id1", "id2")
-        if os.path.exists(edge_path):
-            all_edges = (
-                spark.read.parquet(edge_path)
-                .filter(F.col("batch_id") != F.lit(batch_id))
-                .select("id1", "id2")
-                .unionByName(all_edges)
-            )
-        clusters = connected_components(
-            all_docs.select("doc_id"), all_edges
-        ).localCheckpoint(eager=True)
+        old_clusters = spark.read.parquet(cluster_path)
+    step = merge_batch(
+        batch_docs, all_docs, prior(sig_path), cfg,
+        clusters=old_clusters,
+        # no snapshot (first window, or a crash between the two renames
+        # below): the labels are rebuilt from the durably stored edges
+        old_edges=None if old_clusters is not None else prior(edge_path),
+    )
+    # pinned: its plan reads the snapshot rewritten below
+    clusters = step["clusters"].localCheckpoint(eager=True)
+    _write_by_batch(step["signatures"], sig_path, batch_id, empty=False)
     _write_by_batch(batch_docs, doc_path, batch_id, empty=False)
-    _write_by_batch(new_edges, edge_path, batch_id)
+    _write_by_batch(step["edges"], edge_path, batch_id)
     # global snapshot via staged write + rename swap: a bare
     # mode("overwrite") clears the old directory BEFORE the new data
     # lands, so a crash mid-write would leave a partial/empty snapshot
     # that a replay would silently merge against.  With the swap, every
     # crash point is safe: mid-staging ⇒ stale staging removed on next
     # entry; between the two renames ⇒ cluster_path absent and the replay
-    # takes the full-CC fallback above, rebuilding the snapshot from the
-    # durably stored per-batch docs+edges.  (On an object store / Iceberg
-    # this is a snapshot commit instead of a rename.)
+    # rebuilds the snapshot from the durably stored per-batch docs+edges.
+    # (On an object store / Iceberg this is a snapshot commit instead of
+    # a rename.)
     import shutil
 
     staging = cluster_path + "__staging"
@@ -487,9 +389,9 @@ def stream_curation(
     hygiene tiers (optional host ``blocklist``, optional PII
     ``redact``) + quality gate + exact tier
     (:func:`process_curation_batch`) and, with ``dedup=True``, chains
-    the full near-dup pipeline (:func:`process_incremental_batch`
-    ``full_pipeline=True`` — sigs → incremental candidates → verify →
-    incremental CC) over the CURATED survivors only, under
+    the near-dup tier (:func:`process_incremental_batch` — sigs →
+    incremental candidates → verify → incremental CC) over the CURATED
+    survivors only, under
     ``store_root/dedup``; an all-dropped batch leaves that state
     untouched.  Restart resumes from the stream checkpoint; every
     per-batch write is replay-idempotent."""
@@ -510,7 +412,7 @@ def stream_curation(
             process_incremental_batch(
                 spark, curated, batch_id, cfg or SketchConfig(),
                 os.path.join(store_root, "dedup"),
-                id_col=id_col, text_col=text_col, full_pipeline=True,
+                id_col=id_col, text_col=text_col,
             )
 
     w = (

@@ -211,63 +211,3 @@ def test_estimated_plan_bytes_and_auto_prefilter_floor(spark, tmp_path):
         spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     )
     assert est2 is None
-
-
-def test_partition_policy_scopes_and_restores_conf(spark, tmp_path):
-    """partition_policy sets shuffle partitions to the data-sized count
-    (ceil(bytes/128MB) floored at 2x parallelism) inside the block and
-    restores the session value after — and leaves the conf untouched for
-    un-estimable inputs."""
-    from localitysensitivesketch_spark.session import (
-        estimated_plan_bytes,
-        partition_policy,
-        recommended_shuffle_partitions,
-    )
-
-    p = str(tmp_path / "sized.parquet")
-    spark.range(2000).selectExpr(
-        "id as doc_id", "repeat('tok ', 40) as text"
-    ).write.parquet(p)
-    df = spark.read.parquet(p)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    want = recommended_shuffle_partitions(
-        estimated_plan_bytes(df),
-        parallelism=spark.sparkContext.defaultParallelism,
-    )
-    with partition_policy(spark, df) as n:
-        assert n == want
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(want)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-
-    # unknown-size input: no-op, yields None
-    local = spark.createDataFrame([(1, "a")], "doc_id long, text string")
-    with partition_policy(spark, local) as n:
-        assert n is None
-        assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-
-
-def test_dedup_pipeline_auto_partition(spark, tmp_path):
-    """auto_partition=True runs the funnel under the policy count and
-    restores the session conf; results match a non-auto run."""
-    from localitysensitivesketch_spark.plans.pipeline import DedupPipeline
-
-    docs = [(i, f"alpha beta gamma delta {i} " * 5) for i in range(40)]
-    docs += [(100 + i, docs[i][1]) for i in range(10)]  # exact dups
-    p = str(tmp_path / "docs.parquet")
-    spark.createDataFrame(docs, "doc_id long, text string").write.parquet(p)
-    df = spark.read.parquet(p)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-
-    r_auto = DedupPipeline(spark, str(tmp_path / "s1")).run(
-        df, auto_partition=True
-    )
-    got_auto = sorted(
-        (r["doc_id"], r["cluster_id"]) for r in r_auto.clusters.collect()
-    )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-
-    r_plain = DedupPipeline(spark, str(tmp_path / "s2")).run(df)
-    got_plain = sorted(
-        (r["doc_id"], r["cluster_id"]) for r in r_plain.clusters.collect()
-    )
-    assert got_auto == got_plain

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from localitysensitivesketch_spark.config import SketchConfig
 from localitysensitivesketch_spark.fixtures import corpus_to_spark, generate_corpus
-from localitysensitivesketch_spark.operators.candidates import band_candidates
 from localitysensitivesketch_spark.operators.signatures import (
     compute_signatures,
     with_doc_id,
@@ -51,57 +50,6 @@ def test_stream_signatures_match_batch(spark, tmp_path):
     g = {r["doc_id"]: (tuple(r["minhash"]), r["simhash"]) for r in got.collect()}
     b = {r["doc_id"]: (tuple(r["minhash"]), r["simhash"]) for r in batch.collect()}
     assert g == b
-
-
-def test_incremental_candidates_stream_matches_batch(spark, tmp_path):
-    path, docs = _write_docs(spark, tmp_path, n=80, seed=22)
-    stream = ST.read_document_stream(
-        spark, path,
-        schema="url string, warc_ts timestamp, html binary, text string, "
-               "lang string, doc_id long",
-        max_files_per_trigger=1,
-    )
-    q = ST.incremental_candidates(
-        spark, stream, CFG, str(tmp_path / "store")
-    )
-    q.awaitTermination(180)
-    got = spark.read.parquet(str(tmp_path / "store/pairs"))
-    got_pairs = {(r["id1"], r["id2"]) for r in got.collect()}
-    batch_pairs, _ = band_candidates(
-        compute_signatures(spark.read.parquet(path), CFG), CFG
-    )
-    expect = {(r["id1"], r["id2"]) for r in batch_pairs.collect()}
-    assert got_pairs == expect
-
-
-def test_incremental_candidates_pre_filter_gates_batches(spark, tmp_path):
-    """``pre_filter`` runs a per-document curation tier inside the stream:
-    the store must equal a batch run over ONLY the docs the filter keeps."""
-    path, docs = _write_docs(spark, tmp_path, n=80, seed=23)
-    keep = F.col("doc_id") % 3 != 0  # stateless per-doc rule, any tier shape
-    stream = ST.read_document_stream(
-        spark, path,
-        schema="url string, warc_ts timestamp, html binary, text string, "
-               "lang string, doc_id long",
-        max_files_per_trigger=1,
-    )
-    q = ST.incremental_candidates(
-        spark, stream, CFG, str(tmp_path / "store"),
-        pre_filter=lambda d: d.filter(keep),
-    )
-    q.awaitTermination(180)
-    got = spark.read.parquet(str(tmp_path / "store/pairs"))
-    got_pairs = {(r["id1"], r["id2"]) for r in got.collect()}
-    batch_pairs, _ = band_candidates(
-        compute_signatures(spark.read.parquet(path).filter(keep), CFG), CFG
-    )
-    expect = {(r["id1"], r["id2"]) for r in batch_pairs.collect()}
-    assert got_pairs == expect
-    kept_ids = {
-        r["doc_id"] for r in spark.read.parquet(path).filter(keep).collect()
-    }
-    sigs = spark.read.parquet(str(tmp_path / "store/sigs"))
-    assert {r["doc_id"] for r in sigs.collect()} <= kept_ids
 
 
 def test_windowed_event_counts_batch_semantics(spark):
@@ -172,33 +120,94 @@ def test_frame_sample_offsets(spark):
 # ---------------------------------------------------------------------------
 
 
+def _labels(df):
+    return sorted((r["doc_id"], r["cluster_id"]) for r in df.collect())
+
+
 def test_incremental_update_equals_full_run(spark, tmp_path):
-    corpus = generate_corpus(n_docs=100, seed=31)
-    docs = with_doc_id(corpus_to_spark(spark, corpus)).cache()
-    # split: first 60 rows "old", rest "new" (split by url hash parity-free
-    # deterministic order: use row_number over url)
-    urls = sorted(corpus.url)
-    old_urls = set(urls[:60])
-    old_docs = docs.filter(F.col("url").isin(*old_urls)).cache()
-    new_docs = docs.filter(~F.col("url").isin(*old_urls)).cache()
-
-    pipe = DedupPipeline(spark, str(tmp_path / "inc"), CFG)
-    pipe.run(old_docs)
-    out = incremental_update(pipe.store, docs, new_docs, CFG)
-    inc_clusters = sorted(
-        (r["doc_id"], r["cluster_id"]) for r in out["clusters"].collect()
+    """The same old/new split through the three routes — the batch MERGE
+    on a committed run, two stream micro-batches, a from-scratch run —
+    gives the same cluster partition (labels are min doc_ids, so equal
+    labels are equal partitions)."""
+    from localitysensitivesketch_spark.operators.cluster import (
+        connected_components,
     )
 
-    full = DedupPipeline(spark, str(tmp_path / "full"), CFG).run(docs)
-    full_clusters = sorted(
-        (r["doc_id"], r["cluster_id"]) for r in full.clusters.collect()
-    )
-    assert inc_clusters == full_clusters
+    for n, seed, n_old in ((100, 31, 60), (80, 37, 20)):
+        corpus = generate_corpus(n_docs=n, seed=seed)
+        docs = with_doc_id(corpus_to_spark(spark, corpus)).cache()
+        # old = the first n_old urls in sorted order, new = the rest
+        old_urls = set(sorted(corpus.url)[:n_old])
+        old_docs = docs.filter(F.col("url").isin(*old_urls)).cache()
+        new_docs = docs.filter(~F.col("url").isin(*old_urls)).cache()
+        root = tmp_path / f"seed{seed}"
 
-    # store committed the merged state: a resume run reuses everything
-    resumed = DedupPipeline(spark, str(tmp_path / "inc"), CFG)
-    # signatures stage now covers all docs
-    assert resumed.store.read("signatures").count() == 100
+        pipe = DedupPipeline(spark, str(root / "inc"), CFG)
+        pipe.run(old_docs)
+        out = incremental_update(pipe.store, docs, new_docs, CFG)
+        inc_clusters = _labels(out["clusters"])
+
+        store = str(root / "stream")
+        ST.process_incremental_batch(spark, old_docs, 0, CFG, store)
+        ST.process_incremental_batch(spark, new_docs, 1, CFG, store)
+        stream_clusters = _labels(spark.read.parquet(f"{store}/clusters"))
+
+        full = DedupPipeline(spark, str(root / "full"), CFG).run(docs)
+        full_clusters = _labels(full.clusters)
+        assert inc_clusters == full_clusters, seed
+        assert stream_clusters == full_clusters, seed
+        assert len(full_clusters) == n
+
+        # the stream's stored edges rebuild the same partition
+        edges = spark.read.parquet(f"{store}/edges")
+        assert _labels(connected_components(docs.select("doc_id"), edges)) == (
+            full_clusters
+        )
+
+        # store committed the merged state: signatures cover all docs
+        resumed = DedupPipeline(spark, str(root / "inc"), CFG)
+        assert resumed.store.read("signatures").count() == n
+
+
+def test_merge_batch_bloom_probe_parity_and_plan(spark, monkeypatch):
+    """The new-vs-old probe of the shared incremental step: the bloom plan
+    (large old side) and the plain plan (small old side) merge to the
+    same clusters; only the bloom plan carries ``might_contain``."""
+    from localitysensitivesketch_spark.functions.bloom import bloom_supported
+    from localitysensitivesketch_spark.plans import incremental as I
+
+    docs = with_doc_id(
+        corpus_to_spark(spark, generate_corpus(n_docs=100, seed=41))
+    ).select("doc_id", "text").cache()
+    old_docs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) != 0).cache()
+    new_docs = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0).cache()
+    old_ids = {r["doc_id"] for r in old_docs.select("doc_id").collect()}
+    prior = I.merge_batch(old_docs, old_docs, None, CFG)
+    prior_clusters = prior["clusters"].localCheckpoint(eager=True)
+
+    def step(bloom):
+        monkeypatch.setattr(I, "auto_prefilter_enabled", lambda df: bloom)
+        return I.merge_batch(
+            new_docs, docs, prior["signatures"], CFG, clusters=prior_clusters
+        )
+
+    on, off = step(True), step(False)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    if bloom_supported(spark):
+        assert "might_contain" in plan(on["candidates"])
+    assert "might_contain" not in plan(off["candidates"])
+    cands = {tuple(r) for r in on["candidates"].collect()}
+    assert cands == {tuple(r) for r in off["candidates"].collect()}
+    # the probe matters: some candidates pair a new doc with an old one
+    assert any((a in old_ids) != (b in old_ids) for a, b in cands)
+    assert _labels(on["clusters"]) == _labels(off["clusters"])
+    from localitysensitivesketch_spark.operators.dedup import minhash_lsh_dedup
+
+    want = _labels(minhash_lsh_dedup(docs, CFG)["clusters"])
+    assert _labels(on["clusters"]) == want
 
 
 # ---------------------------------------------------------------------------
@@ -272,6 +281,13 @@ def test_project_kafka_records_batch(spark):
     assert str(out["http://b"]["warc_ts"]).startswith("2024-02-02")
 
 
+def _stored(spark, store, table, cols):
+    return sorted(
+        tuple(r) for r in spark.read.parquet(f"{store}/{table}").select(*cols)
+        .collect()
+    )
+
+
 def test_incremental_candidates_replay_is_idempotent(spark, tmp_path):
     """Structured Streaming's failure contract: after a crash between the
     sink write and the checkpoint commit, the LAST batch is replayed with
@@ -285,23 +301,25 @@ def test_incremental_candidates_replay_is_idempotent(spark, tmp_path):
 
     ST.process_incremental_batch(spark, b0, 0, CFG, store)
     ST.process_incremental_batch(spark, b1, 1, CFG, store)
-    sigs1 = spark.read.parquet(f"{store}/sigs").count()
-    pairs1 = sorted(
-        (r["id1"], r["id2"], r["batch_id"])
-        for r in spark.read.parquet(f"{store}/pairs").collect()
-    )
-    assert sigs1 == 60 and pairs1
+    tables = {
+        "sigs": ["doc_id", "simhash", "batch_id"],
+        "docs": ["doc_id", "text", "batch_id"],
+        "edges": ["id1", "id2", "batch_id"],
+        "clusters": ["doc_id", "cluster_id"],
+    }
+    before = {t: _stored(spark, store, t, c) for t, c in tables.items()}
+    assert len(before["sigs"]) == 60 and len(before["docs"]) == 60
+    assert before["edges"]
+    # a store from before pairs/ was dropped still carries that dir
+    spark.createDataFrame([(1, 2, 0)], "id1 long, id2 long, batch_id int") \
+        .write.partitionBy("batch_id").parquet(f"{store}/pairs")
     # replay the last batch (crash-before-commit): same batch_id, same rows,
-    # store already holds batch 1's sigs/pairs
+    # store already holds batch 1's sigs/docs/edges and the merged snapshot
     ST.process_incremental_batch(spark, b1, 1, CFG, store)
-    sigs2_df = spark.read.parquet(f"{store}/sigs")
-    assert sigs2_df.count() == sigs1
-    assert sigs2_df.select("doc_id").distinct().count() == sigs1
-    pairs2 = sorted(
-        (r["id1"], r["id2"], r["batch_id"])
-        for r in spark.read.parquet(f"{store}/pairs").collect()
-    )
-    assert pairs2 == pairs1
+    after = {t: _stored(spark, store, t, c) for t, c in tables.items()}
+    for t, rows in after.items():
+        assert len(rows) == len(set(rows)), f"duplicate rows in {t}/"
+    assert after == before
 
 
 def test_bloom_prefilter_members_and_plan(spark):
@@ -330,107 +348,69 @@ def test_bloom_prefilter_members_and_plan(spark):
     assert filtered.count() < 100
 
 
+def _feed_files(spark, path, store):
+    """One process_incremental_batch per parquet file of ``path`` — the
+    micro-batches a ``maxFilesPerTrigger=1`` stream would cut.  Returns
+    the batches."""
+    import glob
+
+    batches = [
+        spark.read.parquet(f)
+        for f in sorted(glob.glob(f"{path}/part-*.parquet"))
+    ]
+    for bid, b in enumerate(batches):
+        ST.process_incremental_batch(spark, b, bid, CFG, store)
+    return batches
+
+
 def test_streaming_full_pipeline_clusters_match_batch(spark, tmp_path):
-    """full_pipeline=True: each micro-batch runs verify + edge merge + CC,
-    so the final streaming cluster snapshot equals the batch pipeline's
-    clusters on the same corpus — and replaying the last batch (the
-    Structured Streaming crash contract) leaves the snapshot unchanged."""
+    """Each micro-batch runs verify + edge merge + CC, so the final
+    cluster snapshot equals the batch pipeline's clusters on the same
+    corpus — and replaying the last batch (the Structured Streaming crash
+    contract) leaves the snapshot unchanged."""
     from localitysensitivesketch_spark.operators.dedup import minhash_lsh_dedup
 
     path, docs = _write_docs(spark, tmp_path, n=80, seed=29, n_files=3)
     store = str(tmp_path / "store")
-    stream = ST.read_document_stream(
-        spark, path,
-        schema="url string, warc_ts timestamp, html binary, text string, "
-               "lang string, doc_id long",
-        max_files_per_trigger=1,
-    )
-    q = ST.incremental_candidates(
-        spark, stream, CFG, store, full_pipeline=True
-    )
-    q.awaitTermination(300)
+    batches = _feed_files(spark, path, store)
+    assert len(batches) == 3
 
-    got = sorted(
-        (r["doc_id"], r["cluster_id"])
-        for r in spark.read.parquet(f"{store}/clusters").collect()
-    )
-    batch = minhash_lsh_dedup(spark.read.parquet(path), CFG)["clusters"]
-    want = sorted((r["doc_id"], r["cluster_id"]) for r in batch.collect())
+    got = _labels(spark.read.parquet(f"{store}/clusters"))
+    want = _labels(minhash_lsh_dedup(spark.read.parquet(path), CFG)["clusters"])
     assert got == want and len(got) == 80
 
     # replay the LAST batch with the same batch_id against the already-
     # written store: snapshot and per-batch tables must be unchanged
-    last_bid = (
-        spark.read.parquet(f"{store}/sigs")
-        .agg(F.max("batch_id"))
-        .collect()[0][0]
-    )
-    last_docs_ids = {
-        r["doc_id"]
-        for r in spark.read.parquet(f"{store}/docs")
-        .filter(F.col("batch_id") == last_bid)
-        .collect()
-    }
-    replay_df = docs.filter(F.col("doc_id").isin(last_docs_ids))
     ST.process_incremental_batch(
-        spark, replay_df, int(last_bid), CFG, store, full_pipeline=True
+        spark, batches[-1], len(batches) - 1, CFG, store
     )
-    got2 = sorted(
-        (r["doc_id"], r["cluster_id"])
-        for r in spark.read.parquet(f"{store}/clusters").collect()
-    )
-    assert got2 == want
+    assert _labels(spark.read.parquet(f"{store}/clusters")) == want
     assert spark.read.parquet(f"{store}/docs").count() == 80  # no dup rows
 
 
 def test_streaming_snapshot_crash_between_renames_recovers(spark, tmp_path):
     """The snapshot swap's worst crash point — old snapshot renamed away,
     new one not yet in place (cluster_path absent) — must recover on
-    replay: the fallback rebuilds the snapshot from the durably stored
+    replay: the shared step rebuilds the snapshot from the durably stored
     per-batch docs+edges.  Stale staging garbage must also be tolerated."""
+    import os
     import shutil
 
     path, docs = _write_docs(spark, tmp_path, n=60, seed=33, n_files=2)
     store = str(tmp_path / "store_crash")
-    stream = ST.read_document_stream(
-        spark, path,
-        schema="url string, warc_ts timestamp, html binary, text string, "
-               "lang string, doc_id long",
-        max_files_per_trigger=1,
-    )
-    q = ST.incremental_candidates(spark, stream, CFG, store, full_pipeline=True)
-    q.awaitTermination(300)
-    want = sorted(
-        (r["doc_id"], r["cluster_id"])
-        for r in spark.read.parquet(f"{store}/clusters").collect()
-    )
+    batches = _feed_files(spark, path, store)
+    want = _labels(spark.read.parquet(f"{store}/clusters"))
 
     # simulate: crash after rename(clusters -> old), before the new rename
     shutil.move(f"{store}/clusters", f"{store}/clusters__old")
     # plus stale staging garbage from the interrupted attempt
     (tmp_path / "store_crash" / "clusters__staging").mkdir()
-    last_bid = (
-        spark.read.parquet(f"{store}/sigs").agg(F.max("batch_id")).collect()[0][0]
-    )
-    last_ids = {
-        r["doc_id"]
-        for r in spark.read.parquet(f"{store}/docs")
-        .filter(F.col("batch_id") == last_bid)
-        .collect()
-    }
-    replay_df = docs.filter(F.col("doc_id").isin(last_ids))
     ST.process_incremental_batch(
-        spark, replay_df, int(last_bid), CFG, store, full_pipeline=True
+        spark, batches[-1], len(batches) - 1, CFG, store
     )
-    got = sorted(
-        (r["doc_id"], r["cluster_id"])
-        for r in spark.read.parquet(f"{store}/clusters").collect()
-    )
-    assert got == want
-    import os as _os
-
-    assert not _os.path.exists(f"{store}/clusters__old")
-    assert not _os.path.exists(f"{store}/clusters__staging")
+    assert _labels(spark.read.parquet(f"{store}/clusters")) == want
+    assert not os.path.exists(f"{store}/clusters__old")
+    assert not os.path.exists(f"{store}/clusters__staging")
 
 
 # ---------------------------------------------------------------------------
