@@ -243,7 +243,3 @@ def winnow(window_hashes: np.ndarray, w: int) -> np.ndarray:
 def u64_to_i64(a: np.ndarray) -> np.ndarray:
     """Reinterpret uint64 → int64 for Spark LongType columns."""
     return a.view(np.int64)
-
-
-def i64_to_u64(a: np.ndarray) -> np.ndarray:
-    return np.asarray(a, dtype=np.int64).view(U64)

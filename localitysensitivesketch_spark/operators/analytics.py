@@ -39,15 +39,6 @@ def sum_per_key(df: DataFrame, key_col: str, val_col: str) -> DataFrame:
     )
 
 
-def distinct_count(df: DataFrame, key_col: str, approximate: bool = False) -> DataFrame:
-    """A5 (``LSSFingerprintAtomic.java:976-1001``): exact shadow-map count or
-    the approximate (HLL) variant mirroring cuckoo ``getCount``."""
-    agg = (
-        F.approx_count_distinct(key_col) if approximate else F.countDistinct(key_col)
-    )
-    return df.agg(agg.alias("distinct_keys"))
-
-
 def entropy(counts: DataFrame, cnt_col: str = "cnt") -> DataFrame:
     """A6 empirical entropy (``AsyncFlowApps.java:83-103``): −Σ p·ln p over
     the key-frequency distribution (normalized; the reference computes the
@@ -375,18 +366,3 @@ def sketch_accuracy_report(
         F.col("f1").alias("detect_f1"),
     )
     return stats.crossJoin(F.broadcast(detect))
-
-
-def tumbling_window_counts(
-    df: DataFrame, ts_col: str, key_col: str, duration: str = "1 day"
-) -> DataFrame:
-    """W1 count-tumbling window re-expressed on event time
-    (``Sub4SketchingKVStream.java:353-394``): per (window, key) counts."""
-    return (
-        df.groupBy(
-            F.window(F.col(ts_col), duration).alias("w"),
-            F.col(key_col).alias("key"),
-        )
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("window_start"), "key", "cnt")
-    )

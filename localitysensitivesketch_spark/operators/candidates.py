@@ -256,10 +256,15 @@ def band_candidates(
     signatures: DataFrame, cfg: SketchConfig
 ) -> tuple[DataFrame, DataFrame]:
     """MinHash-LSH candidates: docs sharing ≥1 band key (id1 < id2)."""
-    keyed = signatures.filter(F.col("n_shingles") > 0).select(
+    return pairs_by_key(band_key_rows(signatures), cfg)
+
+
+def band_key_rows(signatures: DataFrame) -> DataFrame:
+    """(doc_id, key), one row per band key of every non-empty doc — empty
+    docs share the sentinel signature and would form one giant band."""
+    return signatures.filter(F.col("n_shingles") > 0).select(
         "doc_id", F.explode("band_keys").alias("key")
     )
-    return pairs_by_key(keyed, cfg)
 
 
 def simhash_segment_keys(signatures: DataFrame, cfg: SketchConfig) -> DataFrame:

@@ -315,8 +315,7 @@ def merge_components(
     )
 
 
-def cluster_stats(assignments: DataFrame, documents: DataFrame | None = None,
-                  id_col: str = "doc_id") -> DataFrame:
+def cluster_stats(assignments: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Per-cluster size + canonical doc (avg-estimator analogue,
     ``Sketching/LSSEntryFinger.java:70-80`` — the shared-cell summary that
     answers queries for every member)."""

@@ -23,11 +23,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import SketchConfig
+from ..plans.incremental import merge_batch
 from ..session import auto_prefilter_enabled, ensure_min_partitions
-from .candidates import band_candidates, pairs_by_key, simhash_candidates
-from .cluster import connected_components
+from .candidates import pairs_by_key, simhash_candidates
 from .signatures import compute_signatures
-from .verify import duplicate_edges, verify_pairs
 
 
 def _ceil_safe(x) -> F.Column:
@@ -694,30 +693,20 @@ def minhash_lsh_dedup(
 ) -> dict[str, DataFrame]:
     """Full MinHash+LSH pipeline over any documents table → dict of every
     stage output (signatures, candidates, skew metrics, verified, edges,
-    clusters, cluster stats).  This is the engine spine (SURVEY §3.4)."""
-    cfg = cfg or SketchConfig()
-    sigs = compute_signatures(documents, cfg, id_col=id_col, text_col=text_col)
-    sigs = sigs.localCheckpoint(eager=False)
-    candidates, skew_metrics = band_candidates(sigs, cfg)
-    verified = verify_pairs(
-        candidates, documents, cfg, id_col=id_col, text_col=text_col,
-        signatures=sigs, min_jaccard=cfg.jaccard_threshold,
+    clusters, cluster stats): the engine spine (SURVEY §3.4,
+    :func:`~..plans.incremental.merge_batch`) with nothing committed.
+    Only the signatures are pinned — lazily, since the band join, the
+    verify ns-ratio bound and the caller all read them; every other stage
+    stays a lazy plan."""
+
+    def lazy_pin(name: str, compute) -> DataFrame:
+        df = compute()
+        return df.localCheckpoint(eager=False) if name == "signatures" else df
+
+    return merge_batch(
+        documents, documents, None, cfg or SketchConfig(),
+        id_col=id_col, text_col=text_col, stage=lazy_pin,
     )
-    edges = duplicate_edges(verified, cfg)
-    vertices = documents.select(F.col(id_col).cast("long").alias("doc_id"))
-    clusters = connected_components(vertices, edges)
-    stats = clusters.groupBy("cluster_id").agg(
-        F.count("*").alias("size"), F.min("doc_id").alias("canonical_doc_id")
-    )
-    return {
-        "signatures": sigs,
-        "candidates": candidates,
-        "skew_metrics": skew_metrics,
-        "verified": verified,
-        "edges": edges,
-        "clusters": clusters,
-        "cluster_stats": stats,
-    }
 
 
 def simhash_dedup_pairs(

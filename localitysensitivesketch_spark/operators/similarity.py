@@ -43,10 +43,6 @@ def _norm(a):
     )
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("vec_norm", _norm(F.col(vec_col)))
-
-
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,

@@ -1,26 +1,33 @@
-"""Incremental corpus updates: sketch only the new docs, merge clusters.
+"""The near-dup spine, written once: signatures → candidates → verify →
+edges → clusters → cluster stats.
 
 Reference analogue: the one insert path every writer goes through
 (``Sketching/LSSFingerprintAtomic.java:591-690``) — the stream consumer
 (``Sub4SketchingKVStream.java:353-394``) and re-clustering on value drift
 (``:646-686``) both insert through it without rebuilding the sketch.
-Here that path is :func:`merge_batch`, a storage-free step: only the new
-docs are shingled/hashed (the expensive stage), candidates are generated
-new-vs-new (salted/capped band join) and new-vs-old (one band-key join
-against the stored signatures), the pairs are verified, and the cluster
-labels are merged from the new edges.  Its two callers add only their
-own storage:
+Here that path is :func:`merge_batch`: only the new docs are
+shingled/hashed (the expensive stage), candidates are generated
+new-vs-new (salted/capped band join) and, when stored signatures are
+passed, new-vs-old (one band-key join against them), the pairs are
+verified, and the cluster labels are computed or merged from the edges.
+It calls one hook, ``stage(name, compute) -> DataFrame``, at each of the
+seven stage boundaries (the names of ``DedupPipeline.STAGES``), and its
+callers differ only in that hook:
 
-* :func:`incremental_update` — the batch MERGE: union-commits every
-  stage of a :class:`~.pipeline.DedupPipeline` checkpoint through the
-  store's protocol (on Iceberg a MERGE INTO per stage table) and
-  invalidates what the merge makes stale;
-* ``streaming.stream.process_incremental_batch`` — one micro-batch:
-  batch_id-partitioned per-batch tables plus a swapped cluster snapshot.
+* ``DedupPipeline.run`` — commit-or-resume every stage (the signature
+  stage optionally in slices);
+* ``operators.dedup.minhash_lsh_dedup`` — a lazy pin of the signatures,
+  everything else lazy;
+* :func:`incremental_update` (the batch MERGE) and
+  ``streaming.stream.process_incremental_batch`` (one micro-batch) —
+  the default :func:`pin_shared`; they add only their own storage.
 
-Cost model at scale: signatures O(|new|); candidate join O(|new| band rows
-⋈ store); connected components O(|V|+|E|) but over the (small) edge set
-only — never re-reads the old corpus text.
+Cost model at scale: signatures O(|new|); candidate probe O(|new| band
+rows ⋈ store); connected components over the (small) edge set only —
+never re-reads the old corpus text.  The batch MERGE's storage is not
+O(|new|): :func:`incremental_update` rewrites every stage table as
+old ∪ new, so a merge writes O(store).  Appending only the new rows is
+ROADMAP item 7 ("Append, don't rewrite").
 
 Store layout at cluster scale: the documents and signature tables are
 joined on ``doc_id`` by every verify pass and relabel — write them
@@ -34,19 +41,78 @@ a drop-in for the ``read``/``write`` surface.
 
 from __future__ import annotations
 
+import functools
 import time
+from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import SketchConfig
 from ..functions.bloom import bloom_build, bloom_supported, might_contain
-from ..operators.candidates import pairs_by_key
-from ..operators.cluster import connected_components, merge_components
+from ..operators.candidates import band_candidates, band_key_rows
+from ..operators.cluster import (
+    cluster_stats,
+    connected_components,
+    merge_components,
+)
 from ..operators.signatures import compute_signatures
 from ..operators.verify import duplicate_edges, verify_pairs
 from ..session import auto_prefilter_enabled
-from .pipeline import CheckpointStore
+
+if TYPE_CHECKING:
+    from .pipeline import CheckpointStore
+
+#: ``stage(name, compute) -> DataFrame``: materializes (or not) one stage
+Stage = Callable[[str, Callable[..., DataFrame]], DataFrame]
+
+
+def pin_shared(name: str, compute: Callable[..., DataFrame]) -> DataFrame:
+    """The incremental callers' hook: ``signatures`` and ``verified`` each
+    feed several consumers, so an eager ``localCheckpoint`` pins them;
+    every other stage stays lazy."""
+    df = compute()
+    if name in ("signatures", "verified"):
+        return df.localCheckpoint(eager=True)
+    return df
+
+
+def _probe_old(
+    new_sigs: DataFrame, old_signatures: DataFrame, cfg: SketchConfig
+) -> DataFrame:
+    """New-vs-old candidates: an uncapped equi-join on band key.
+
+    Takes the M2 bloom plan (``functions/bloom.py``; reference
+    ``BloomFilter.java:153-232``) when ``session.auto_prefilter_enabled``
+    says the old side is large: old band-key rows whose key cannot be
+    among the new keys are dropped by a codegen'd ``might_contain``
+    BEFORE the join shuffle, so at scale (|old| ≫ |new|) the join's big
+    side shrinks to ~|matching old rows|.  Lossless: false positives are
+    discarded by the join itself, and a filter that cannot be built
+    leaves the plain join."""
+    new_keys = band_key_rows(new_sigs)
+    old_keys = band_key_rows(old_signatures).withColumnRenamed("doc_id", "old_id")
+    if auto_prefilter_enabled(old_keys) and bloom_supported(
+        old_keys.sparkSession
+    ):
+        n_new_keys = new_keys.count()
+        bloom = (
+            bloom_build(new_keys, "key", expected_items=n_new_keys)
+            if n_new_keys
+            else None
+        )
+        pred = might_contain(old_keys, "key", bloom) if bloom else None
+        if pred is not None:
+            old_keys = old_keys.filter(pred)
+    return (
+        new_keys.join(old_keys, "key")
+        .filter(F.col("doc_id") != F.col("old_id"))
+        .select(
+            F.least("doc_id", "old_id").alias("id1"),
+            F.greatest("doc_id", "old_id").alias("id2"),
+        )
+        .distinct()
+    )
 
 
 def merge_batch(
@@ -58,106 +124,94 @@ def merge_batch(
     old_edges: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
+    stage: Stage = pin_shared,
 ) -> dict[str, DataFrame]:
-    """Merge ``new_documents`` into accumulated near-dup state; writes
-    nothing.
+    """Run the spine over ``new_documents`` against accumulated near-dup
+    state; writes nothing itself.
 
     ``all_documents`` holds old + new rows (old-vs-new pairs verify
-    against both texts); ``old_signatures`` is the stored signature table
-    (``None`` when there is none yet).  ``clusters`` is the previous
-    ``(doc_id, cluster_id)`` assignment: the new edges are merged into it
-    by :func:`~..operators.cluster.merge_components`.  Without one (first
-    window, or a crash between a snapshot's renames) the labels are
-    recomputed by ``connected_components`` over ``old_edges`` plus the new
-    edges and every doc of ``all_documents``.
+    against both texts; a from-scratch run passes the same frame twice);
+    ``old_signatures`` is the stored signature table (``None`` when there
+    is none yet).  ``clusters`` is the previous ``(doc_id, cluster_id)``
+    assignment: the new edges are merged into it by
+    :func:`~..operators.cluster.merge_components`.  Without one (a
+    from-scratch run, a first window, or a crash between a snapshot's
+    renames) the labels are computed by ``connected_components`` over
+    ``old_edges`` plus the new edges and every doc of ``all_documents``.
 
-    Returns ``signatures`` (the new docs' rows), ``candidates``,
-    ``verified``, ``edges`` (the new ones) and ``clusters`` (all docs).
-    ``signatures`` and ``verified`` come back pinned by an eager
-    ``localCheckpoint`` — each feeds several consumers; the rest are lazy,
-    bar the jobs ``merge_components``/``connected_components`` run to
-    plan themselves.
+    ``stage(name, compute)`` is called at every boundary, in
+    ``DedupPipeline.STAGES`` order, and its return value is what the
+    later stages read.  ``compute()`` builds the stage's frame; the
+    signature stage's ``compute`` also takes a documents frame (default
+    ``new_documents``), so a sliced commit can apply it per slice.  A
+    hook that reuses a stored stage never calls ``compute``; the band
+    join runs at most once, for whichever of ``candidates`` and
+    ``skew_metrics`` is computed.
 
-    The new-vs-old probe takes the M2 bloom plan (``functions/bloom.py``;
-    reference ``BloomFilter.java:153-232``) when
-    ``session.auto_prefilter_enabled`` says the old side is large: old
-    band-key rows whose key cannot be among the new keys are dropped by a
-    codegen'd ``might_contain`` BEFORE the join shuffle, so at scale
-    (|old| ≫ |new|) the join's big side shrinks to ~|matching old rows|.
-    Lossless: false positives are discarded by the join itself, and a
-    filter that cannot be built leaves the plain join.
+    Returns every stage under its name: ``signatures`` (the new docs'
+    rows), ``candidates``, ``skew_metrics`` (of the new-vs-new band
+    join), ``verified``, ``edges`` (the new ones), ``clusters`` (all
+    docs) and ``cluster_stats``.
     """
-    new_sigs = compute_signatures(
-        new_documents, cfg, id_col=id_col, text_col=text_col
-    ).localCheckpoint(eager=True)
-    new_keys = new_sigs.filter(F.col("n_shingles") > 0).select(
-        "doc_id", F.explode("band_keys").alias("key")
-    )
-    # new-vs-new through the standard salted/capped path
-    candidates, _ = pairs_by_key(new_keys, cfg)
-    all_sigs = new_sigs
-    if old_signatures is not None:
-        old_keys = old_signatures.filter(F.col("n_shingles") > 0).select(
-            F.col("doc_id").alias("old_id"), F.explode("band_keys").alias("key")
-        )
-        if auto_prefilter_enabled(old_keys) and bloom_supported(
-            old_keys.sparkSession
-        ):
-            n_new_keys = new_keys.count()
-            bloom = (
-                bloom_build(new_keys, "key", expected_items=n_new_keys)
-                if n_new_keys
-                else None
-            )
-            pred = might_contain(old_keys, "key", bloom) if bloom else None
-            if pred is not None:
-                old_keys = old_keys.filter(pred)
-        # new-vs-old: uncapped equi-join on band key
-        cross = (
-            new_keys.join(old_keys, "key")
-            .filter(F.col("doc_id") != F.col("old_id"))
-            .select(
-                F.least("doc_id", "old_id").alias("id1"),
-                F.greatest("doc_id", "old_id").alias("id2"),
-            )
-            .distinct()
-        )
-        candidates = candidates.unionByName(cross).distinct()
-        all_sigs = old_signatures.unionByName(new_sigs)
 
-    verified = verify_pairs(
-        candidates, all_documents, cfg, id_col=id_col, text_col=text_col,
-        signatures=all_sigs, min_jaccard=cfg.jaccard_threshold,
-    ).localCheckpoint(eager=True)
-    new_edges = duplicate_edges(verified, cfg)
-    if clusters is not None:
-        # contract the previous clusters, CC only the batch-sized
-        # contracted graph, relabel with one broadcast join — identical
-        # labels to a full recompute over old ∪ new edges (pinned by
-        # test_merge_components_equals_full_recompute), and re-merging
-        # edges already in ``clusters`` is a no-op (every contracted edge
-        # collapses to l1 == l2), which makes a stream replay safe
-        clusters = merge_components(
-            clusters,
-            new_edges.select("id1", "id2"),
-            new_vertices=new_documents.select(
-                F.col(id_col).cast("long").alias("doc_id")
-            ),
-        )
-    else:
-        edges = new_edges.select("id1", "id2")
+    def _signatures(docs: DataFrame = new_documents) -> DataFrame:
+        return compute_signatures(docs, cfg, id_col=id_col, text_col=text_col)
+
+    sigs = stage("signatures", _signatures)
+    band = functools.cache(lambda: band_candidates(sigs, cfg))  # (pairs, metrics)
+
+    def _candidates() -> DataFrame:
+        pairs = band()[0]
+        if old_signatures is None:
+            return pairs
+        return pairs.unionByName(_probe_old(sigs, old_signatures, cfg)).distinct()
+
+    candidates = stage("candidates", _candidates)
+    skew_metrics = stage("skew_metrics", lambda: band()[1])
+    all_sigs = sigs if old_signatures is None else old_signatures.unionByName(sigs)
+    verified = stage(
+        "verified",
+        lambda: verify_pairs(
+            candidates, all_documents, cfg, id_col=id_col, text_col=text_col,
+            signatures=all_sigs, min_jaccard=cfg.jaccard_threshold,
+        ),
+    )
+    edges = stage("edges", lambda: duplicate_edges(verified, cfg))
+
+    def _clusters() -> DataFrame:
+        if clusters is not None:
+            # contract the previous clusters, CC only the batch-sized
+            # contracted graph, relabel with one broadcast join —
+            # identical labels to a full recompute over old ∪ new edges
+            # (pinned by test_merge_components_equals_full_recompute), and
+            # re-merging edges already in ``clusters`` is a no-op (every
+            # contracted edge collapses to l1 == l2), which makes a stream
+            # replay safe
+            return merge_components(
+                clusters,
+                edges,
+                new_vertices=new_documents.select(
+                    F.col(id_col).cast("long").alias("doc_id")
+                ),
+            )
+        cc_edges = edges
         if old_edges is not None:
-            edges = old_edges.select("id1", "id2").unionByName(edges)
-        clusters = connected_components(
+            cc_edges = old_edges.select("id1", "id2").unionByName(edges)
+        return connected_components(
             all_documents.select(F.col(id_col).cast("long").alias("doc_id")),
-            edges,
+            cc_edges,
         )
+
+    labels = stage("clusters", _clusters)
+    stats = stage("cluster_stats", lambda: cluster_stats(labels))
     return {
-        "signatures": new_sigs,
+        "signatures": sigs,
         "candidates": candidates,
+        "skew_metrics": skew_metrics,
         "verified": verified,
-        "edges": new_edges,
-        "clusters": clusters,
+        "edges": edges,
+        "clusters": labels,
+        "cluster_stats": stats,
     }
 
 
@@ -189,7 +243,15 @@ def incremental_update(
     def nm(stage: str) -> str:
         return stage + stage_suffix
 
-    old_sigs = store.read(nm("signatures"))
+    # a retry after a crash between the commits below finds this batch's
+    # signatures already stored: drop them, or the merge stores them twice
+    # and the probe pairs the batch with itself through the uncapped
+    # new-vs-old join (the stream's state reads exclude the current batch
+    # for the same reason)
+    new_ids = new_documents.select(F.col(id_col).cast("long").alias("doc_id"))
+    old_sigs = store.read(nm("signatures")).join(
+        F.broadcast(new_ids), "doc_id", "left_anti"
+    )
     step = merge_batch(
         new_documents, all_documents, old_sigs, cfg,
         clusters=store.read(nm("clusters")), id_col=id_col, text_col=text_col,
@@ -205,9 +267,7 @@ def incremental_update(
     )
     merged_edges = store.read(nm("edges")).unionByName(step["edges"]).distinct()
     clusters = step["clusters"]
-    stats = clusters.groupBy("cluster_id").agg(
-        F.count("*").alias("size"), F.min("doc_id").alias("canonical_doc_id")
-    )
+    stats = step["cluster_stats"]
 
     # materialize every frame whose plan reads a stage about to be
     # rewritten — commits below swap the underlying files (on Iceberg the

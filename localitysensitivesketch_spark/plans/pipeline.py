@@ -40,11 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SketchConfig
-from ..operators.candidates import band_candidates
-from ..operators.cluster import connected_components
-from ..operators.signatures import compute_signatures
-from ..operators.verify import duplicate_edges, verify_pairs
 from ..session import local_frame
+from .incremental import merge_batch
 
 LINEAGE_SCHEMA = (
     "run_id string, stage string, status string, rows long, n_partitions int, "
@@ -567,7 +564,9 @@ class PipelineResult:
 
 class DedupPipeline:
     """documents → signatures → candidates → verify → edges → clusters,
-    every arrow a committed stage table (SURVEY §3.4)."""
+    every arrow a committed stage table (SURVEY §3.4): :meth:`run` is the
+    spine :func:`~.incremental.merge_batch` with a commit-or-resume
+    hook."""
 
     STAGES = (
         "signatures",
@@ -622,98 +621,38 @@ class DedupPipeline:
         here, so resume=True can never reuse signatures/clusters computed
         from a differently-parameterized input — the store's config_sha
         covers only SketchConfig."""
-        cfg = self.cfg
         ran: list[str] = []
         reused: list[str] = []
 
-        def nm(stage: str) -> str:
-            return stage + stage_suffix
-
-        if signature_slices:
+        def stage(name: str, compute) -> DataFrame:
+            key = name + stage_suffix
+            if name != "signatures" or not signature_slices:
+                return self._stage(key, compute, resume, ran, reused)
+            if resume and self.store.is_committed(key):
+                reused.append(key)
+                return self.store.read(key).drop("part_key")
             # cast to long BEFORE hashing — xxhash64 is type-sensitive, and
             # the output-side key is derived from the (long) doc_id
             pk = F.pmod(
                 F.xxhash64(F.col(id_col).cast("long")), F.lit(self.N_PART_KEYS)
             ).cast("int")
-            docs_keyed = documents.withColumn("part_key", pk)
-            if resume and self.store.is_committed(nm("signatures")):
-                reused.append(nm("signatures"))
-                sigs = self.store.read(nm("signatures"))
-            else:
-                sigs = self.store.resume_partitioned(
-                    nm("signatures"),
-                    docs_keyed,
-                    lambda sub: compute_signatures(
-                        sub.drop("part_key"), cfg, id_col=id_col, text_col=text_col
-                    ).withColumn(
-                        "part_key",
-                        F.pmod(
-                            F.xxhash64(F.col("doc_id")), F.lit(self.N_PART_KEYS)
-                        ).cast("int"),
-                    ),
-                    n_slices=signature_slices,
-                    resume=resume,
-                )
-                ran.append(nm("signatures"))
-            sigs = sigs.drop("part_key")
-        else:
-            sigs = self._stage(
-                nm("signatures"),
-                lambda: compute_signatures(
-                    documents, cfg, id_col=id_col, text_col=text_col
+            sigs = self.store.resume_partitioned(
+                key,
+                documents.withColumn("part_key", pk),
+                lambda sub: compute(sub.drop("part_key")).withColumn(
+                    "part_key",
+                    F.pmod(
+                        F.xxhash64(F.col("doc_id")), F.lit(self.N_PART_KEYS)
+                    ).cast("int"),
                 ),
-                resume, ran, reused,
+                n_slices=signature_slices,
+                resume=resume,
             )
+            ran.append(key)
+            return sigs.drop("part_key")
 
-        cand_pair: dict[str, DataFrame] = {}
-
-        def _cands():
-            pairs, metrics = band_candidates(sigs, cfg)
-            cand_pair["metrics"] = metrics
-            return pairs
-
-        cands = self._stage(nm("candidates"), _cands, resume, ran, reused)
-        metrics = self._stage(
-            nm("skew_metrics"),
-            lambda: cand_pair.get(
-                "metrics", band_candidates(sigs, cfg)[1]
-            ),
-            resume, ran, reused,
+        out = merge_batch(
+            documents, documents, None, self.cfg,
+            id_col=id_col, text_col=text_col, stage=stage,
         )
-        verified = self._stage(
-            nm("verified"),
-            lambda: verify_pairs(
-                cands, documents, cfg, id_col=id_col, text_col=text_col,
-                signatures=sigs, min_jaccard=cfg.jaccard_threshold,
-            ),
-            resume, ran, reused,
-        )
-        edges = self._stage(
-            nm("edges"), lambda: duplicate_edges(verified, cfg), resume, ran, reused
-        )
-        clusters = self._stage(
-            nm("clusters"),
-            lambda: connected_components(
-                documents.select(F.col(id_col).cast("long").alias("doc_id")), edges
-            ),
-            resume, ran, reused,
-        )
-        stats = self._stage(
-            nm("cluster_stats"),
-            lambda: clusters.groupBy("cluster_id").agg(
-                F.count("*").alias("size"),
-                F.min("doc_id").alias("canonical_doc_id"),
-            ),
-            resume, ran, reused,
-        )
-        return PipelineResult(
-            signatures=sigs,
-            candidates=cands,
-            skew_metrics=metrics,
-            verified=verified,
-            edges=edges,
-            clusters=clusters,
-            cluster_stats=stats,
-            stages_run=ran,
-            stages_resumed=reused,
-        )
+        return PipelineResult(**out, stages_run=ran, stages_resumed=reused)

@@ -301,13 +301,26 @@ def test_substring_pass_finds_planted_blocks(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_pipeline_checkpoint_resume(spark, tmp_path):
+def test_pipeline_checkpoint_resume(spark, tmp_path, monkeypatch):
+    from localitysensitivesketch_spark.plans import incremental as I
+
+    # the band join runs once per fresh run (candidates and skew_metrics
+    # share it) and never on a full resume
+    band_calls: list[int] = []
+    band_candidates = I.band_candidates
+
+    def counting_band_candidates(*args, **kwargs):
+        band_calls.append(1)
+        return band_candidates(*args, **kwargs)
+
+    monkeypatch.setattr(I, "band_candidates", counting_band_candidates)
     corpus = generate_corpus(n_docs=80, seed=13)
     docs = with_doc_id(corpus_to_spark(spark, corpus)).cache()
 
     p1 = DedupPipeline(spark, str(tmp_path / "ckpt"), CFG)
     r1 = p1.run(docs)
     assert r1.stages_resumed == [] and set(r1.stages_run) == set(DedupPipeline.STAGES)
+    assert len(band_calls) == 1
     first = sorted(
         (r["doc_id"], r["cluster_id"]) for r in r1.clusters.collect()
     )
@@ -316,6 +329,7 @@ def test_pipeline_checkpoint_resume(spark, tmp_path):
     p2 = DedupPipeline(spark, str(tmp_path / "ckpt"), CFG)
     r2 = p2.run(docs)
     assert r2.stages_run == [] and set(r2.stages_resumed) == set(DedupPipeline.STAGES)
+    assert len(band_calls) == 1
     assert sorted((r["doc_id"], r["cluster_id"]) for r in r2.clusters.collect()) == first
 
     # config change invalidates checkpoints

@@ -128,7 +128,9 @@ def test_incremental_update_equals_full_run(spark, tmp_path):
     """The same old/new split through the three routes — the batch MERGE
     on a committed run, two stream micro-batches, a from-scratch run —
     gives the same cluster partition (labels are min doc_ids, so equal
-    labels are equal partitions)."""
+    labels are equal partitions).  On the second input the MERGE first
+    crashes right after its first commit and is then retried, so the
+    assertions below also hold for a retried merge."""
     from localitysensitivesketch_spark.operators.cluster import (
         connected_components,
     )
@@ -144,6 +146,17 @@ def test_incremental_update_equals_full_run(spark, tmp_path):
 
         pipe = DedupPipeline(spark, str(root / "inc"), CFG)
         pipe.run(old_docs)
+        if seed == 37:
+            write = pipe.store.write
+
+            def crash_after_first_commit(*args, **kwargs):
+                write(*args, **kwargs)
+                raise RuntimeError("simulated crash between commits")
+
+            pipe.store.write = crash_after_first_commit
+            with pytest.raises(RuntimeError, match="between commits"):
+                incremental_update(pipe.store, docs, new_docs, CFG)
+            del pipe.store.write
         out = incremental_update(pipe.store, docs, new_docs, CFG)
         inc_clusters = _labels(out["clusters"])
 

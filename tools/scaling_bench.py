@@ -5,9 +5,11 @@ north_rule's N→4N executor criterion is evidenced by running the SAME job on
 the SAME input at local[8] and local[32] (fresh JVM each) and reporting
 throughput at both plus efficiency = speedup / 4.
 
-Job = the full dedup pipeline (signatures → LSH candidates → exact verify →
-connected components → cluster stats) over a deterministic fixture corpus
-(no external data), written once to parquet and reused by both runs.
+Job = the engine's near-dup spine (``plans/incremental.merge_batch``:
+signatures → LSH candidates → exact verify → connected components →
+cluster stats), timed per phase through its stage hook, over a
+deterministic fixture corpus (no external data), written once to parquet
+and reused by both runs.
 
 Usage:
     python tools/scaling_bench.py --all [--docs 40000]     # orchestrate
@@ -57,16 +59,8 @@ def build_corpus(n_docs: int, seed: int = 421) -> str:
 
 
 def run_level(cpus: int, data: str) -> dict:
-    from pyspark.sql import functions as F
-
     from localitysensitivesketch_spark.config import SketchConfig
-    from localitysensitivesketch_spark.operators.candidates import band_candidates
-    from localitysensitivesketch_spark.operators.cluster import connected_components
-    from localitysensitivesketch_spark.operators.signatures import compute_signatures
-    from localitysensitivesketch_spark.operators.verify import (
-        duplicate_edges,
-        verify_pairs,
-    )
+    from localitysensitivesketch_spark.plans.incremental import merge_batch
     from localitysensitivesketch_spark.session import get_spark
 
     cfg = SketchConfig()
@@ -81,25 +75,33 @@ def run_level(cpus: int, data: str) -> dict:
         "/dev/shm/lss_scaling_bench" if os.access("/dev/shm", os.W_OK) else DATA_ROOT
     )
     os.makedirs(scratch, exist_ok=True)
+    sig_path = f"{scratch}/sigs_{cpus}.parquet"
+    # each timed phase ends at the stage that materializes it; the stages
+    # in between stay lazy and run inside the next materialization
+    phase_end = {
+        "signatures": "signatures",
+        "edges": "candidates_verify",
+        "cluster_stats": "cluster",
+    }
     phases: dict[str, float] = {}
     t0 = time.time()
-    sigs = compute_signatures(docs, cfg)
-    sigs.write.mode("overwrite").parquet(f"{scratch}/sigs_{cpus}.parquet")
-    sigs = spark.read.parquet(f"{scratch}/sigs_{cpus}.parquet")
-    phases["signatures"] = time.time() - t0
+    lap = [t0]
 
-    t1 = time.time()
-    cands, _ = band_candidates(sigs, cfg)
-    verified = verify_pairs(cands, docs, cfg, signatures=sigs,
-                            min_jaccard=cfg.jaccard_threshold)
-    edges = duplicate_edges(verified, cfg)
-    edges = edges.localCheckpoint(eager=True)
-    phases["candidates_verify"] = time.time() - t1
+    def timed(name, compute):
+        df = compute()
+        if name == "signatures":
+            df.write.mode("overwrite").parquet(sig_path)
+            df = spark.read.parquet(sig_path)
+        elif name in phase_end:
+            df = df.localCheckpoint(eager=True)
+        if name in phase_end:
+            now = time.time()
+            phases[phase_end[name]] = now - lap[0]
+            lap[0] = now
+        return df
 
-    t2 = time.time()
-    clusters = connected_components(docs.select("doc_id"), edges)
-    n_clusters = clusters.select(F.countDistinct("cluster_id")).collect()[0][0]
-    phases["cluster"] = time.time() - t2
+    out = merge_batch(docs, docs, None, cfg, stage=timed)
+    n_clusters = out["cluster_stats"].count()
 
     total = time.time() - t0
     spark.stop()
