@@ -7,15 +7,16 @@ re-checked with the EXACT shingle Jaccard (and byte-equality for exact dups)
 before it may create a cluster edge — so pipeline precision is 1.0 by
 construction and recall is the only approximation.
 
-Execution shape (signatures path): a byte-equality fast path decides exact
-copies JVM-side (md5+length — they never reach Python); near pairs collapse
-to distinct canonical text pairs; their docs are shingled ONCE EACH in a
-doc-parallel Arrow pass, and a pair-parallel Arrow pass intersects the
-compact int64 shingle arrays.  The two-pass split is what makes the stage
-scale: shipping texts to the pair stage instead makes every partition
-re-tokenize nearly the whole rep-doc set (the id2 side of a pair partition
-spans all docs), so total work grows with partition count and the stage
-hits a parallelism-independent wall.
+One plan, with or without signatures: a byte-equality fast path decides
+exact copies JVM-side (md5+length — they never reach Python); near pairs
+collapse to distinct canonical text pairs; their docs are shingled ONCE
+EACH in a doc-parallel Arrow pass, and a pair-parallel Arrow pass
+intersects the compact int64 shingle arrays.  Text enters only the
+shingle pass.  The two-pass split is what makes the stage scale: shipping
+texts to the pair stage instead makes every partition re-tokenize nearly
+the whole rep-doc set (the id2 side of a pair partition spans all docs),
+so total work grows with partition count and the stage hits a
+parallelism-independent wall.
 
 A pure-JVM variant (``array_intersect`` on the pair join) was measured 8×
 slower at 160k pairs — JVM set-intersection of 400-element arrays loses to
@@ -34,69 +35,6 @@ from pyspark.sql import functions as F
 from ..config import SketchConfig
 from ..functions import hashing as H
 from ..functions.text import tokenize
-
-VERIFY_SCHEMA = (
-    "id1 long, id2 long, jaccard double, exact_match boolean, "
-    "n_shingles_1 int, n_shingles_2 int"
-)
-
-
-def _verify_batches(cfg_json: str):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cfg = SketchConfig.from_json(cfg_json)
-        token_cache: dict[str, int] = {}
-        doc_cache: dict[int, np.ndarray] = {}
-
-        def shingles_of(doc_id: int, text: str) -> np.ndarray:
-            sh = doc_cache.get(doc_id)
-            if sh is None:
-                sh = H.shingle_hashes(
-                    H.hash_tokens(tokenize(text, cfg.normalization), token_cache),
-                    cfg.shingle_k,
-                )
-                if len(doc_cache) > 200_000:
-                    doc_cache.clear()
-                doc_cache[doc_id] = sh
-            return sh
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            jac = np.empty(n, dtype=np.float64)
-            ns1 = np.empty(n, dtype=np.int32)
-            ns2 = np.empty(n, dtype=np.int32)
-            id1s = pdf["id1"].to_numpy()
-            id2s = pdf["id2"].to_numpy()
-            t1 = pdf["text1"].tolist()
-            t2 = pdf["text2"].tolist()
-            exact = pdf["exact_match"].to_numpy()
-            for i in range(n):
-                s1 = shingles_of(int(id1s[i]), t1[i])
-                if exact[i]:
-                    jac[i] = 1.0
-                    ns1[i] = ns2[i] = s1.size
-                    continue
-                s2 = shingles_of(int(id2s[i]), t2[i])
-                inter = np.intersect1d(s1, s2, assume_unique=True).size
-                union = s1.size + s2.size - inter
-                jac[i] = (inter / union) if union else 1.0
-                ns1[i], ns2[i] = s1.size, s2.size
-            if len(token_cache) > 1_000_000:
-                token_cache.clear()
-            yield pd.DataFrame(
-                {
-                    "id1": id1s,
-                    "id2": id2s,
-                    "jaccard": jac,
-                    "exact_match": exact,
-                    "n_shingles_1": ns1,
-                    "n_shingles_2": ns2,
-                }
-            )
-
-    return fn
-
 
 _SHINGLE_SCHEMA = "doc_id long, sh array<bigint>"
 
@@ -171,208 +109,120 @@ def verify_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     signatures: DataFrame | None = None,
-    min_jaccard: float | None = None,
 ) -> DataFrame:
-    """candidates(id1, id2) → verified(id1, id2, jaccard, exact_match, ...).
+    """candidates(id1, id2) → verified(id1, id2, jaccard, exact_match).
 
-    With ``signatures`` + ``min_jaccard``, candidates are pre-pruned by the
-    shingle-count ratio bound J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|): pairs that
-    cannot reach ``min_jaccard`` are dropped BEFORE any text is shuffled —
-    lossless for downstream `duplicate_edges(threshold=min_jaccard)`.
-
-    Two-tier execution — the wide ``text`` payload moves ONLY for pairs
-    that actually need a shingle recompute:
+    With ``signatures``, candidates are pre-pruned by the shingle-count
+    ratio bound J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|): pairs that cannot reach
+    ``cfg.jaccard_threshold`` are dropped before any text is shuffled —
+    lossless for :func:`duplicate_edges`.  Without them every candidate
+    pair is verified.
 
     * **exact tier** (byte-identical, the common case in web corpora):
       decided entirely JVM-side from an md5+length join (32-byte hashes
-      shuffled, never text).  jaccard = 1.0; shingle counts come from the
-      ``signatures`` table when provided (n_shingles is already there),
-      else from a one-sided shingle count of the canonical text.
-    * **near tier**: exact Jaccard recomputed in Arrow batches with a
-      per-doc cache, once per DISTINCT canonical text pair (see below) —
-      texts attached only to those.
+      shuffled, never text); jaccard = 1.0.
+    * **near tier**: Jaccard depends only on the two TEXTS, and web
+      corpora are full of exact-copy families — a cluster {A×3, B×2}
+      yields 6 A-B candidate pairs with the same text pair.  Each doc
+      carries its canonical doc ``cdoc`` (min id with its md5); the
+      shingle recompute runs once per DISTINCT canonical pair and the
+      jaccard is joined back to every member pair.  Lossless: members
+      share byte-identical texts.
 
     Measured at 1.106 M candidate pairs (400 k docs): 315 k pairs decided
     in the exact tier with zero text movement; 791 k near pairs collapse
-    to 251 k canonical recomputes (3.15×); the join ordering keeps
-    double-text rows out of every exchange.  Wall at local[16]:
+    to 251 k canonical recomputes (3.15×).  Wall at local[16]:
     45 s → 27 s for the identical 596,732-edge output.
     """
-    pairs = candidates.select("id1", "id2")
     docs = documents.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).alias("text"),
-        F.md5(F.col(text_col)).alias("text_md5"),
-        F.length(F.col(text_col)).alias("text_len"),
+        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
     )
-    # per-doc metadata assembled ONCE (doc-count-sized join), then attached
-    # to the pair table with a single join per side — the pair table is the
-    # big relation here, so halving its shuffle joins is what matters
-    meta = docs.select("doc_id", "text_md5", "text_len")
+    # per-doc metadata assembled ONCE (doc-count-sized group-by and joins),
+    # then attached to the pair table with a single join per side — the
+    # pair table is the big relation here
+    meta = docs.select(
+        "doc_id", F.md5("text").alias("md5"), F.length("text").alias("len")
+    )
+    meta = meta.join(meta.groupBy("md5").agg(F.min("doc_id").alias("cdoc")), "md5")
     if signatures is not None:
         meta = meta.join(
             signatures.select("doc_id", F.col("n_shingles").alias("ns")), "doc_id"
         )
-    else:
-        meta = meta.withColumn("ns", F.lit(None).cast("int"))
-    # meta feeds m1/m2/canon and tagged feeds both tiers — without the lazy
+    # meta feeds m1/m2 and tagged feeds both tiers — without the lazy
     # checkpoints each subtree is recomputed per consumer (exchange reuse
     # only saves the shuffles, not the map work); ~60 B/doc and ~40 B/pair,
     # executor-local storage
     meta = meta.localCheckpoint(eager=False)
-    m1 = meta.select(
-        F.col("doc_id").alias("id1"),
-        F.col("text_md5").alias("md5_1"),
-        F.col("text_len").alias("len_1"),
-        F.col("ns").alias("ns1"),
-    )
-    m2 = meta.select(
-        F.col("doc_id").alias("id2"),
-        F.col("text_md5").alias("md5_2"),
-        F.col("text_len").alias("len_2"),
-        F.col("ns").alias("ns2"),
-    )
-    tagged = pairs.join(m1, "id1").join(m2, "id2")
-    if signatures is not None and min_jaccard is not None:
+
+    def side(i: int) -> DataFrame:
+        return meta.select(
+            F.col("doc_id").alias(f"id{i}"),
+            *(F.col(c).alias(f"{c}_{i}") for c in meta.columns if c != "doc_id"),
+        )
+
+    tagged = candidates.select("id1", "id2").join(side(1), "id1").join(side(2), "id2")
+    if signatures is not None:
         # integer-vs-float-product comparison: use the overestimate-safe
         # ceiling (see dedup._ceil_safe) so a float artifact like
         # 0.07*100 = 7.000000000000001 cannot prune a boundary pair
         from .dedup import _ceil_safe
 
-        t = float(min_jaccard)
+        t = float(cfg.jaccard_threshold)
         tagged = tagged.where(
-            (F.col("ns1") >= _ceil_safe(F.col("ns2") * t))
-            & (F.col("ns2") >= _ceil_safe(F.col("ns1") * t))
+            (F.col("ns_1") >= _ceil_safe(F.col("ns_2") * t))
+            & (F.col("ns_2") >= _ceil_safe(F.col("ns_1") * t))
         )
-    tagged = tagged.withColumn(
-        "exact_match",
-        (F.col("md5_1") == F.col("md5_2")) & (F.col("len_1") == F.col("len_2")),
-    ).select(
-        "id1", "id2", "exact_match", "ns1", "ns2", "md5_1", "md5_2"
+    tagged = tagged.select(
+        "id1",
+        "id2",
+        ((F.col("md5_1") == F.col("md5_2")) & (F.col("len_1") == F.col("len_2")))
+        .alias("exact_match"),
+        F.least("cdoc_1", "cdoc_2").alias("cid1"),
+        F.greatest("cdoc_1", "cdoc_2").alias("cid2"),
     ).localCheckpoint(eager=False)
 
-    # exact tier: no text, no Python — shingle count rides along from meta
-    exact = tagged.filter(F.col("exact_match"))
-    if signatures is not None:
-        exact_out = exact.select(
-            "id1",
-            "id2",
-            F.lit(1.0).alias("jaccard"),
-            F.lit(True).alias("exact_match"),
-            F.col("ns1").cast("int").alias("n_shingles_1"),
-            F.col("ns1").cast("int").alias("n_shingles_2"),
-        )
-    else:
-        d1_only = docs.select(
-            F.col("doc_id").alias("id1"), F.col("text").alias("text1")
-        )
-        exact_out = (
-            exact.join(d1_only, "id1")
-            .select(
-                "id1", "id2",
-                F.col("text1").alias("text1"),
-                F.col("text1").alias("text2"),
-                F.lit(True).alias("exact_match"),
-            )
-            .mapInPandas(_verify_batches(cfg.to_json()), VERIFY_SCHEMA)
-        )
+    # exact tier: no text, no Python
+    exact_out = tagged.filter(F.col("exact_match")).select(
+        "id1", "id2", F.lit(1.0).alias("jaccard"), F.lit(True).alias("exact_match")
+    )
 
-    # near tier: texts attached only here.  Two volume levers:
-    #
-    # 1. **Canonical text-pair dedup** (signatures path): Jaccard depends
-    #    only on the two TEXTS, and web corpora are full of exact-copy
-    #    families — a cluster {A×3, B×2} yields 6 A-B candidate pairs with
-    #    the same text pair.  Each doc's md5 maps to a canonical doc (min
-    #    id with that text); the shingle recompute runs once per DISTINCT
-    #    canonical pair and the jaccard is joined back to every member
-    #    pair.  Lossless: members share byte-identical texts.
-    # 2. **Join order as the plan**: attach text2 while the pair rows are
-    #    still slim, THEN join text1 so the id1 exchange is the LAST
-    #    shuffle — its output arrives already hash-partitioned by id1,
-    #    the layout the Arrow worker's per-doc shingle cache wants, and
-    #    double-text-laden rows never cross another exchange.  (The
-    #    original join-join-repartition shape moved ~3 GB of duplicated
-    #    text through an extra full exchange at 400 k docs — pure memory-
-    #    bandwidth burn that throttled 4→16-core scaling.)
+    # near tier: ONCE-PER-DOC shingling, then array-join (the scaling-
+    # critical shape): feeding TEXTS to the pair stage makes every partition
+    # re-tokenize nearly every rep doc — its id2 side touches the whole doc
+    # set, so total shingle work grows LINEARLY with partition count and the
+    # stage walls at ~(n_rep_docs × shingle_cost) regardless of cores
+    # (measured: 43 s at local[8] ≈ 62 s at local[2] on 500 k rep pairs).
+    # Splitting into a doc-parallel shingle pass (each of the ~n_rep_docs
+    # computed exactly once) + a pair-parallel intersect over compact int64
+    # arrays restores linear scaling; the array payload (~8B × shingles) is
+    # the price, paid through one exchange.
     near = tagged.filter(~F.col("exact_match"))
-    d1 = docs.select(F.col("doc_id").alias("id1"), F.col("text").alias("text1"))
-    d2 = docs.select(F.col("doc_id").alias("id2"), F.col("text").alias("text2"))
-
-    def _recompute(pair_ids: DataFrame) -> DataFrame:
-        return (
-            pair_ids.join(d2, "id2")
-            .join(d1, "id1")
-            .withColumn("exact_match", F.lit(False))
-            .select("id1", "id2", "text1", "text2", "exact_match")
-            .mapInPandas(_verify_batches(cfg.to_json()), VERIFY_SCHEMA)
-        )
-
-    if signatures is not None:
-        canon = meta.groupBy("text_md5").agg(F.min("doc_id").alias("cdoc"))
-        with_canon = (
-            near.join(
-                canon.select(F.col("text_md5").alias("md5_1"), F.col("cdoc").alias("c1")),
-                "md5_1",
-            )
-            .join(
-                canon.select(F.col("text_md5").alias("md5_2"), F.col("cdoc").alias("c2")),
-                "md5_2",
-            )
-            .select(
-                "id1", "id2", "ns1", "ns2",
-                F.least("c1", "c2").alias("cid1"),
-                F.greatest("c1", "c2").alias("cid2"),
-            )
-        )
-        rep_pairs = with_canon.select(
-            F.col("cid1").alias("id1"), F.col("cid2").alias("id2")
-        ).distinct()
-        # ONCE-PER-DOC shingling, then array-join (the scaling-critical
-        # shape): feeding TEXTS to the pair stage makes every partition
-        # re-tokenize nearly every rep doc — its id2 side touches the whole
-        # doc set, so total shingle work grows LINEARLY with partition
-        # count and the stage walls at ~(n_rep_docs × shingle_cost)
-        # regardless of cores (measured: 43 s at local[8] ≈ 62 s at
-        # local[2] on 500 k rep pairs).  Splitting into a doc-parallel
-        # shingle pass (each of the ~n_rep_docs computed exactly once) +
-        # a pair-parallel intersect over compact int64 arrays restores
-        # linear scaling; the array payload (~8B × shingles) is the price,
-        # paid through one exchange.
-        rep_docs = (
-            rep_pairs.select(F.col("id1").alias("doc_id"))
-            .unionByName(rep_pairs.select(F.col("id2").alias("doc_id")))
-            .distinct()
-        )
-        sh_tbl = (
-            rep_docs.join(docs.select("doc_id", "text"), "doc_id")
-            .mapInPandas(_shingle_batches(cfg.to_json()), _SHINGLE_SCHEMA)
-            .localCheckpoint(eager=False)  # two consumers (sh1/sh2 sides)
-        )
-        sh1 = sh_tbl.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
-        sh2 = sh_tbl.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
-        rep_jaccard = (
-            rep_pairs.join(sh2, "id2")
-            .join(sh1, "id1")
-            .select("id1", "id2", "sh1", "sh2")
-            .mapInPandas(
-                _pair_intersect_batches(), "id1 long, id2 long, jaccard double"
-            )
-            .select(
-                F.col("id1").alias("cid1"), F.col("id2").alias("cid2"), "jaccard"
-            )
-        )
-        # jaccard is symmetric, so the canonical orientation never matters;
-        # per-side shingle counts come from the member's own metadata
-        near_out = with_canon.join(rep_jaccard, ["cid1", "cid2"]).select(
-            "id1",
-            "id2",
-            "jaccard",
-            F.lit(False).alias("exact_match"),
-            F.col("ns1").cast("int").alias("n_shingles_1"),
-            F.col("ns2").cast("int").alias("n_shingles_2"),
-        )
-    else:
-        near_out = _recompute(near.select("id1", "id2"))
+    rep_pairs = near.select(
+        F.col("cid1").alias("id1"), F.col("cid2").alias("id2")
+    ).distinct()
+    rep_docs = (
+        rep_pairs.select(F.col("id1").alias("doc_id"))
+        .unionByName(rep_pairs.select(F.col("id2").alias("doc_id")))
+        .distinct()
+    )
+    sh_tbl = (
+        rep_docs.join(docs, "doc_id")
+        .mapInPandas(_shingle_batches(cfg.to_json()), _SHINGLE_SCHEMA)
+        .localCheckpoint(eager=False)  # two consumers (sh1/sh2 sides)
+    )
+    sh1 = sh_tbl.select(F.col("doc_id").alias("id1"), F.col("sh").alias("sh1"))
+    sh2 = sh_tbl.select(F.col("doc_id").alias("id2"), F.col("sh").alias("sh2"))
+    rep_jaccard = (
+        rep_pairs.join(sh2, "id2")
+        .join(sh1, "id1")
+        .select("id1", "id2", "sh1", "sh2")
+        .mapInPandas(_pair_intersect_batches(), "id1 long, id2 long, jaccard double")
+        .select(F.col("id1").alias("cid1"), F.col("id2").alias("cid2"), "jaccard")
+    )
+    # jaccard is symmetric, so the canonical orientation never matters
+    near_out = near.join(rep_jaccard, ["cid1", "cid2"]).select(
+        "id1", "id2", "jaccard", F.lit(False).alias("exact_match")
+    )
     return exact_out.unionByName(near_out)
 
 

@@ -173,7 +173,7 @@ def merge_batch(
         "verified",
         lambda: verify_pairs(
             candidates, all_documents, cfg, id_col=id_col, text_col=text_col,
-            signatures=all_sigs, min_jaccard=cfg.jaccard_threshold,
+            signatures=all_sigs,
         ),
     )
     edges = stage("edges", lambda: duplicate_edges(verified, cfg))
@@ -261,9 +261,14 @@ def incremental_update(
         store.read(nm("candidates")).unionByName(step["candidates"]).distinct()
     )
     # merge the verified table too — a later resume must never pair a stale
-    # 'verified' commit with the merged candidates/edges written below
+    # 'verified' commit with the merged candidates/edges written below.
+    # Stores committed before verify dropped its two per-side shingle-count
+    # columns still carry them: project onto the columns verify writes now
     merged_verified = (
-        store.read(nm("verified")).unionByName(step["verified"]).distinct()
+        store.read(nm("verified"))
+        .select(*step["verified"].columns)
+        .unionByName(step["verified"])
+        .distinct()
     )
     merged_edges = store.read(nm("edges")).unionByName(step["edges"]).distinct()
     clusters = step["clusters"]

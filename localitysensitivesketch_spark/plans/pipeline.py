@@ -94,9 +94,13 @@ class CheckpointStore:
     For a :meth:`write` commit ``partition_id`` is the index of the write
     task that produced a ``part-NNNNN-…`` file, and the rows come from
     the files' parquet footers; for a sliced commit
-    (:meth:`resume_partitioned`) it is the value of the stage's
-    ``part_col``.
+    (:meth:`resume_partitioned`) it is the value of :attr:`SLICE_COL`.
     """
+
+    #: the input-derived key a sliced commit partitions on; it and the
+    #: ``__slice`` directory column belong to the sliced layout, so
+    #: :meth:`read` drops both
+    SLICE_COL = "part_key"
 
     def __init__(
         self,
@@ -236,7 +240,6 @@ class CheckpointStore:
         stage: str,
         input_df: DataFrame,
         compute_fn,
-        part_col: str = "part_key",
         n_slices: int = 8,
         resume: bool = True,
     ) -> DataFrame:
@@ -247,11 +250,12 @@ class CheckpointStore:
         ``Sub4SketchingKVStream.java:419-452`` — a window there ≈ a slice
         of input partitions here).
 
-        ``input_df`` must carry ``part_col`` — a DETERMINISTIC, input-
+        ``input_df`` must carry :attr:`SLICE_COL` — a DETERMINISTIC, input-
         derived partition key (e.g. ``pmod(xxhash64(doc_id), 256)``), never
         ``spark_partition_id()`` (not stable across runs).  Slice ``s``
-        covers ``part_col % n_slices == s``; ``compute_fn(subset) →
-        DataFrame`` must preserve ``part_col`` on its output.  Each slice
+        covers ``SLICE_COL % n_slices == s``; ``compute_fn(subset) →
+        DataFrame`` must preserve :attr:`SLICE_COL` on its output, and the
+        committed stage reads back without it.  Each slice
         OVERWRITES its own subdirectory ``data.parquet/__slice=s`` and is
         then recorded in ``slices.jsonl`` (the anti-join against completed
         work is the set difference on this ledger).  A re-entry after a
@@ -301,11 +305,11 @@ class CheckpointStore:
             if s in done:
                 continue
             subset = input_df.filter(
-                F.pmod(F.col(part_col), F.lit(n_slices)) == s
+                F.pmod(F.col(self.SLICE_COL), F.lit(n_slices)) == s
             )
             out = compute_fn(subset)
-            # the Hive-style dir name makes the final read partition-
-            # discover a __slice column, dropped on every read below
+            # the Hive-style dir name makes a read partition-discover a
+            # __slice column (dropped by read)
             out.write.mode("overwrite").parquet(
                 os.path.join(data_path, f"__slice={s}")
             )
@@ -321,14 +325,14 @@ class CheckpointStore:
                     )
                     + "\n"
                 )
-        full = self.spark.read.parquet(data_path).drop("__slice")
-        counts = full.groupBy(F.col(part_col).cast("int")).count().collect()
+        full = self.spark.read.parquet(data_path)
+        counts = full.groupBy(F.col(self.SLICE_COL).cast("int")).count().collect()
         parts = sorted([pid, n] for pid, n in counts)
         # sliced commits rewrite slice subdirs in place, so there is no
         # superseded whole-table version to archive — the snapshot row
         # still lands (operation marks it) so lineage stays uniform
         self._commit(stage, full, time.time() - t0, "overwrite-sliced", parts)
-        return full
+        return self.read(stage)
 
     def invalidate(self, stage: str) -> None:
         """Drop a stage's commit marker so a later resume recomputes it
@@ -461,10 +465,11 @@ class CheckpointStore:
         back-to data is re-materialized and the superseded current version
         is itself archived, so a rollback is undoable and the lineage log
         stays strictly append-only)."""
-        df = self.spark.read.parquet(self._snapshot_data_path(stage, snapshot_id))
-        if "__slice" in df.columns:
-            df = df.drop("__slice")
-        return self.write(df=df, stage=stage, operation=f"rollback-to-{snapshot_id}")
+        return self.write(
+            df=self.read(stage, snapshot_id),
+            stage=stage,
+            operation=f"rollback-to-{snapshot_id}",
+        )
 
     def expire_snapshots(self, stage: str, keep_last: int | None = None) -> list[int]:
         """Delete archived versions beyond the newest ``keep_last``
@@ -522,8 +527,9 @@ class CheckpointStore:
             df = self.spark.read.parquet(
                 os.path.join(self._stage_dir(stage), "data.parquet")
             )
-        # sliced stages carry the internal __slice partition-dir column
-        return df.drop("__slice") if "__slice" in df.columns else df
+        if "__slice" in df.columns:  # a sliced commit's layout columns
+            df = df.drop("__slice", self.SLICE_COL)
+        return df
 
     def lineage(self) -> DataFrame:
         p = os.path.join(self.root, "lineage.jsonl")
@@ -630,17 +636,18 @@ class DedupPipeline:
                 return self._stage(key, compute, resume, ran, reused)
             if resume and self.store.is_committed(key):
                 reused.append(key)
-                return self.store.read(key).drop("part_key")
+                return self.store.read(key)
             # cast to long BEFORE hashing — xxhash64 is type-sensitive, and
             # the output-side key is derived from the (long) doc_id
             pk = F.pmod(
                 F.xxhash64(F.col(id_col).cast("long")), F.lit(self.N_PART_KEYS)
             ).cast("int")
+            col = self.store.SLICE_COL
             sigs = self.store.resume_partitioned(
                 key,
-                documents.withColumn("part_key", pk),
-                lambda sub: compute(sub.drop("part_key")).withColumn(
-                    "part_key",
+                documents.withColumn(col, pk),
+                lambda sub: compute(sub.drop(col)).withColumn(
+                    col,
                     F.pmod(
                         F.xxhash64(F.col("doc_id")), F.lit(self.N_PART_KEYS)
                     ).cast("int"),
@@ -649,7 +656,7 @@ class DedupPipeline:
                 resume=resume,
             )
             ran.append(key)
-            return sigs.drop("part_key")
+            return sigs
 
         out = merge_batch(
             documents, documents, None, self.cfg,

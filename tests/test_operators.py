@@ -538,7 +538,7 @@ def test_sketch_accuracy_report(spark):
     docs = with_doc_id(corpus_to_spark(spark, corpus)).cache()
     sigs = compute_signatures(docs, CFG).localCheckpoint(eager=True)
     cands, _ = band_candidates(sigs, CFG)
-    verified = verify_pairs(cands, docs, CFG, signatures=sigs)
+    verified = verify_pairs(cands, docs, CFG)
     r = A.sketch_accuracy_report(verified, sigs, CFG.jaccard_threshold).collect()[0]
     assert r["n_pairs"] > 0
     assert r["p50_err"] <= 0.12          # 128 hashes: median rel err small

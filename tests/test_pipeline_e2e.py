@@ -7,6 +7,8 @@ construction, cluster labels == oracle union-find components.
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 import pytest
 
 from localitysensitivesketch_spark import oracle as O
@@ -89,6 +91,30 @@ def test_dedup_recall_and_precision(spark, corpus, docs_df):
     assert not false_pos, f"precision violation: {len(false_pos)} false pairs"
     recall = len(got & truth) / len(truth)
     assert recall >= 0.99, f"recall {recall:.4f} < 0.99 ({len(truth)} truth pairs)"
+
+    # every verified row against the oracle: jaccard is the exact shingle
+    # Jaccard of the two texts, exact_match is byte equality, both tiers
+    # occur
+    text_of = dict(docs_df.select("doc_id", "text").collect())
+    rows = {tuple(r) for r in verified.select(
+        "id1", "id2", "jaccard", "exact_match"
+    ).collect()}
+    for id1, id2, jac, exact in rows:
+        t1, t2 = text_of[id1], text_of[id2]
+        assert jac == O.exact_jaccard(t1, t2, CFG), (id1, id2)
+        assert exact == (t1 == t2), (id1, id2)
+    assert {exact for *_, exact in rows} == {True, False}
+
+    # with signatures: exactly the rows that pass the shingle-count ratio
+    # bound min(|A|,|B|) ≥ t·max(|A|,|B|), same jaccard, same edges
+    t = Fraction(str(CFG.jaccard_threshold))
+    ns = dict(sigs.select("doc_id", "n_shingles").collect())
+    pruned = verify_pairs(cands, docs_df, CFG, signatures=sigs)
+    assert {tuple(r) for r in pruned.collect()} == {
+        r for r in rows
+        if min(ns[r[0]], ns[r[1]]) >= t * max(ns[r[0]], ns[r[1]])
+    }
+    assert {tuple(r) for r in duplicate_edges(pruned, CFG).collect()} == got
 
 
 def test_clusters_match_oracle_components(spark, corpus, docs_df):

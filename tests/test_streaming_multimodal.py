@@ -128,9 +128,12 @@ def test_incremental_update_equals_full_run(spark, tmp_path):
     """The same old/new split through the three routes — the batch MERGE
     on a committed run, two stream micro-batches, a from-scratch run —
     gives the same cluster partition (labels are min doc_ids, so equal
-    labels are equal partitions).  On the second input the MERGE first
-    crashes right after its first commit and is then retried, so the
-    assertions below also hold for a retried merge."""
+    labels are equal partitions).  On the first input the MERGE runs on
+    a store whose signatures were committed in slices and whose verified
+    table carries the two int columns verify wrote before it dropped
+    them.  On the second input the MERGE first crashes right after its
+    first commit and is then retried, so the assertions below also hold
+    for a retried merge."""
     from localitysensitivesketch_spark.operators.cluster import (
         connected_components,
     )
@@ -145,7 +148,14 @@ def test_incremental_update_equals_full_run(spark, tmp_path):
         root = tmp_path / f"seed{seed}"
 
         pipe = DedupPipeline(spark, str(root / "inc"), CFG)
-        pipe.run(old_docs)
+        if seed == 31:
+            pipe.run(old_docs, signature_slices=2)
+            legacy = pipe.store.read("verified")
+            for c in ("n_shingles_1", "n_shingles_2"):
+                legacy = legacy.withColumn(c, F.lit(1).cast("int"))
+            pipe.store.write("verified", legacy)
+        else:
+            pipe.run(old_docs)
         if seed == 37:
             write = pipe.store.write
 

@@ -8,6 +8,8 @@ Checks, per representative operator:
   * small dimensions broadcast (BroadcastHashJoin, not SortMergeJoin);
   * no Python row UDFs (BatchEvalPython must never appear; ArrowEvalPython /
     MapInPandas are the only Python operators allowed);
+  * verify moves text only into its once-per-doc shingle pass (no plan
+    carries a per-pair text1/text2 column);
   * whole-stage codegen present in JVM-side pipelines;
   * no Python-list scans in the bookkeeping tables (the stream's per-batch
     metrics row and the curation funnel audit must plan as LocalRelation
@@ -118,6 +120,17 @@ def main() -> int:
     pairs, _ = band_candidates(sigs, SketchConfig())
     p = plan_of(pairs)
     check("band-join-no-cartesian", "CartesianProduct" not in p)
+
+    # 6b. verify, with and without signatures: text enters only the once-
+    # per-doc shingle pass, so no plan carries a per-pair text1/text2
+    from localitysensitivesketch_spark.operators.verify import verify_pairs
+
+    bad = []
+    for label, s in (("signatures", sigs), ("no-signatures", None)):
+        p = plan_of(verify_pairs(pairs, docs, SketchConfig(), signatures=s))
+        if "text1" in p or "text2" in p:
+            bad.append(label)
+    check("verify-text-once", not bad, ", ".join(bad))
 
     # 7. top_k plans TakeOrderedAndProject (per-partition heap + driver merge
     # of k rows), never a global single-partition window sort
