@@ -143,12 +143,14 @@ def verify_pairs(
     meta = docs.select(
         "doc_id", F.md5("text").alias("md5"), F.length("text").alias("len")
     )
+    # cdoc: the canonical doc of each text.  A null text has no md5, so
+    # its doc drops out here and no pair with it verifies
     meta = meta.join(meta.groupBy("md5").agg(F.min("doc_id").alias("cdoc")), "md5")
     if signatures is not None:
         meta = meta.join(
             signatures.select("doc_id", F.col("n_shingles").alias("ns")), "doc_id"
         )
-    # meta feeds m1/m2 and tagged feeds both tiers — without the lazy
+    # meta feeds both pair sides and tagged feeds both tiers — without the lazy
     # checkpoints each subtree is recomputed per consumer (exchange reuse
     # only saves the shuffles, not the map work); ~60 B/doc and ~40 B/pair,
     # executor-local storage
