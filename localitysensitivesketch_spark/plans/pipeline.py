@@ -94,12 +94,13 @@ class CheckpointStore:
     For a :meth:`write` commit ``partition_id`` is the index of the write
     task that produced a ``part-NNNNN-…`` file, and the rows come from
     the files' parquet footers; for a sliced commit
-    (:meth:`resume_partitioned`) it is the value of :attr:`SLICE_COL`.
+    (:meth:`resume_partitioned`) it is the slice index.
     """
 
-    #: the input-derived key a sliced commit partitions on; it and the
-    #: ``__slice`` directory column belong to the sliced layout, so
-    #: :meth:`read` drops both
+    #: the key column that sliced commits written before the slice key
+    #: became an argument of :meth:`resume_partitioned` carry in their
+    #: data; it and the ``__slice`` directory column belong to the sliced
+    #: layout, so :meth:`read` drops both
     SLICE_COL = "part_key"
 
     def __init__(
@@ -240,6 +241,7 @@ class CheckpointStore:
         stage: str,
         input_df: DataFrame,
         compute_fn,
+        key,
         n_slices: int = 8,
         resume: bool = True,
     ) -> DataFrame:
@@ -250,12 +252,11 @@ class CheckpointStore:
         ``Sub4SketchingKVStream.java:419-452`` — a window there ≈ a slice
         of input partitions here).
 
-        ``input_df`` must carry :attr:`SLICE_COL` — a DETERMINISTIC, input-
-        derived partition key (e.g. ``pmod(xxhash64(doc_id), 256)``), never
+        ``key`` is a Column over ``input_df`` — a DETERMINISTIC, input-
+        derived integer (e.g. ``pmod(xxhash64(doc_id), 256)``), never
         ``spark_partition_id()`` (not stable across runs).  Slice ``s``
-        covers ``SLICE_COL % n_slices == s``; ``compute_fn(subset) →
-        DataFrame`` must preserve :attr:`SLICE_COL` on its output, and the
-        committed stage reads back without it.  Each slice
+        covers ``key % n_slices == s``, and ``compute_fn(subset) →
+        DataFrame`` computes the stage's rows for it.  Each slice
         OVERWRITES its own subdirectory ``data.parquet/__slice=s`` and is
         then recorded in ``slices.jsonl`` (the anti-join against completed
         work is the set difference on this ledger).  A re-entry after a
@@ -304,10 +305,7 @@ class CheckpointStore:
         for s in range(n_slices):
             if s in done:
                 continue
-            subset = input_df.filter(
-                F.pmod(F.col(self.SLICE_COL), F.lit(n_slices)) == s
-            )
-            out = compute_fn(subset)
+            out = compute_fn(input_df.filter(F.pmod(key, F.lit(n_slices)) == s))
             # the Hive-style dir name makes a read partition-discover a
             # __slice column (dropped by read)
             out.write.mode("overwrite").parquet(
@@ -326,8 +324,8 @@ class CheckpointStore:
                     + "\n"
                 )
         full = self.spark.read.parquet(data_path)
-        counts = full.groupBy(F.col(self.SLICE_COL).cast("int")).count().collect()
-        parts = sorted([pid, n] for pid, n in counts)
+        counts = full.groupBy("__slice").count().collect()
+        parts = sorted([int(s), n] for s, n in counts)
         # sliced commits rewrite slice subdirs in place, so there is no
         # superseded whole-table version to archive — the snapshot row
         # still lands (operation marks it) so lineage stays uniform
@@ -637,20 +635,13 @@ class DedupPipeline:
             if resume and self.store.is_committed(key):
                 reused.append(key)
                 return self.store.read(key)
-            # cast to long BEFORE hashing — xxhash64 is type-sensitive, and
-            # the output-side key is derived from the (long) doc_id
-            pk = F.pmod(
-                F.xxhash64(F.col(id_col).cast("long")), F.lit(self.N_PART_KEYS)
-            ).cast("int")
-            col = self.store.SLICE_COL
             sigs = self.store.resume_partitioned(
                 key,
-                documents.withColumn(col, pk),
-                lambda sub: compute(sub.drop(col)).withColumn(
-                    col,
-                    F.pmod(
-                        F.xxhash64(F.col("doc_id")), F.lit(self.N_PART_KEYS)
-                    ).cast("int"),
+                documents,
+                compute,
+                # cast to long BEFORE hashing — xxhash64 is type-sensitive
+                F.pmod(
+                    F.xxhash64(F.col(id_col).cast("long")), F.lit(self.N_PART_KEYS)
                 ),
                 n_slices=signature_slices,
                 resume=resume,

@@ -357,14 +357,10 @@ def test_per_partition_resume_reuses_completed_slices(spark, tmp_path):
 
     corpus = generate_corpus(n_docs=120, seed=23)
     docs = with_doc_id(corpus_to_spark(spark, corpus)).cache()
-    pk = F.pmod(F.xxhash64(F.col("doc_id").cast("long")), F.lit(256)).cast("int")
-    keyed = docs.withColumn("part_key", pk)
+    pk = F.pmod(F.xxhash64(F.col("doc_id").cast("long")), F.lit(256))
 
     def compute(sub):
-        return compute_signatures(sub.drop("part_key"), CFG).withColumn(
-            "part_key",
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(256)).cast("int"),
-        )
+        return compute_signatures(sub, CFG)
 
     calls: list[int] = []
 
@@ -377,7 +373,7 @@ def test_per_partition_resume_reuses_completed_slices(spark, tmp_path):
     store = CheckpointStore(spark, str(tmp_path / "ckpt"), CFG)
     with pytest.raises(RuntimeError):
         store.resume_partitioned(
-            "signatures", keyed, failing_compute, n_slices=4
+            "signatures", docs, failing_compute, pk, n_slices=4
         )
     # two slices landed durably before the crash
     ledger = tmp_path / "ckpt" / "signatures" / "slices.jsonl"
@@ -393,7 +389,7 @@ def test_per_partition_resume_reuses_completed_slices(spark, tmp_path):
         return compute(sub)
 
     out = store.resume_partitioned(
-        "signatures", keyed, counting_compute, n_slices=4
+        "signatures", docs, counting_compute, pk, n_slices=4
     )
     assert len(calls2) == 2  # slices 2 and 3 only
     assert store.is_committed("signatures")
@@ -415,8 +411,8 @@ def test_per_partition_resume_reuses_completed_slices(spark, tmp_path):
     # second entry after commit: pure reuse, zero compute calls
     calls3: list[int] = []
     out2 = store.resume_partitioned(
-        "signatures", keyed, lambda sub: calls3.append(1) or compute(sub),
-        n_slices=4,
+        "signatures", docs, lambda sub: calls3.append(1) or compute(sub),
+        pk, n_slices=4,
     )
     assert calls3 == [] and out2.count() == 120
 
@@ -443,16 +439,10 @@ def test_per_partition_resume_idempotent_after_ledger_crash(spark, tmp_path):
 
     corpus = generate_corpus(n_docs=80, seed=29)
     docs = with_doc_id(corpus_to_spark(spark, corpus)).cache()
-    keyed = docs.withColumn(
-        "part_key",
-        F.pmod(F.xxhash64(F.col("doc_id").cast("long")), F.lit(256)).cast("int"),
-    )
+    pk = F.pmod(F.xxhash64(F.col("doc_id").cast("long")), F.lit(256))
 
     def compute(sub):
-        return compute_signatures(sub.drop("part_key"), CFG).withColumn(
-            "part_key",
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(256)).cast("int"),
-        )
+        return compute_signatures(sub, CFG)
 
     calls: list[int] = []
 
@@ -464,7 +454,7 @@ def test_per_partition_resume_idempotent_after_ledger_crash(spark, tmp_path):
 
     store = CheckpointStore(spark, str(tmp_path / "ckpt"), CFG)
     with pytest.raises(RuntimeError):
-        store.resume_partitioned("signatures", keyed, failing, n_slices=4)
+        store.resume_partitioned("signatures", docs, failing, pk, n_slices=4)
 
     # simulate the worst crash window: slice 1's data is durable but its
     # ledger line vanished (crash between the two writes)
@@ -477,7 +467,7 @@ def test_per_partition_resume_idempotent_after_ledger_crash(spark, tmp_path):
     slice1 = tmp_path / "ckpt" / "signatures" / "data.parquet" / "__slice=1"
     assert slice1.exists()
 
-    out = store.resume_partitioned("signatures", keyed, compute, n_slices=4)
+    out = store.resume_partitioned("signatures", docs, compute, pk, n_slices=4)
     got = sorted(
         (r["doc_id"], tuple(r["minhash"])) for r in out.collect()
     )
@@ -942,27 +932,22 @@ def test_resume_partitioned_resume_false_recomputes(spark, tmp_path):
 
     corpus = generate_corpus(n_docs=40, seed=31)
     docs = with_doc_id(corpus_to_spark(spark, corpus)).cache()
-    pk = F.pmod(F.xxhash64(F.col("doc_id").cast("long")), F.lit(256)).cast("int")
-    keyed = docs.withColumn("part_key", pk)
+    pk = F.pmod(F.xxhash64(F.col("doc_id").cast("long")), F.lit(256))
 
     def compute(sub):
-        return compute_signatures(sub.drop("part_key"), CFG).withColumn(
-            "part_key",
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(256)).cast("int"),
-        )
+        return compute_signatures(sub, CFG)
 
     store = CheckpointStore(spark, str(tmp_path / "ckpt_rf"), CFG)
-    store.resume_partitioned("signatures", keyed, compute, n_slices=2)
+    store.resume_partitioned("signatures", docs, compute, pk, n_slices=2)
     assert store.is_committed("signatures")
 
     # "replace the input": only the first 10 docs remain
     keep = docs.limit(10).cache()
-    keep_keyed = keep.withColumn("part_key", pk)
     calls: list[int] = []
     out = store.resume_partitioned(
-        "signatures", keep_keyed,
+        "signatures", keep,
         lambda sub: calls.append(1) or compute(sub),
-        n_slices=2, resume=False,
+        pk, n_slices=2, resume=False,
     )
     assert len(calls) == 2  # both slices recomputed, nothing served stale
     assert out.count() == 10

@@ -94,23 +94,38 @@ def test_dedup_recall_and_precision(spark, corpus, docs_df):
 
     # every verified row against the oracle: jaccard is the exact shingle
     # Jaccard of the two texts, exact_match is byte equality, both tiers
-    # occur
+    # occur, and no pair comes back twice
     text_of = dict(docs_df.select("doc_id", "text").collect())
-    rows = {tuple(r) for r in verified.select(
+    row_list = [tuple(r) for r in verified.select(
         "id1", "id2", "jaccard", "exact_match"
-    ).collect()}
+    ).collect()]
+    rows = set(row_list)
+    assert len(rows) == len(row_list) == len({r[:2] for r in rows})
     for id1, id2, jac, exact in rows:
         t1, t2 = text_of[id1], text_of[id2]
         assert jac == O.exact_jaccard(t1, t2, CFG), (id1, id2)
         assert exact == (t1 == t2), (id1, id2)
     assert {exact for *_, exact in rows} == {True, False}
+    # near pairs are settled once per pair of canonical docs (the least
+    # doc_id of each byte-identical group) and joined back: some near row
+    # must name a non-canonical member, or that join-back goes untested
+    canon: dict[str, int] = {}
+    for i, t in text_of.items():
+        if t is not None:
+            canon[t] = min(i, canon.get(t, i))
+    assert any(
+        not exact and (canon[text_of[id1]] != id1 or canon[text_of[id2]] != id2)
+        for id1, id2, _, exact in rows
+    )
 
     # with signatures: exactly the rows that pass the shingle-count ratio
     # bound min(|A|,|B|) ≥ t·max(|A|,|B|), same jaccard, same edges
     t = Fraction(str(CFG.jaccard_threshold))
     ns = dict(sigs.select("doc_id", "n_shingles").collect())
     pruned = verify_pairs(cands, docs_df, CFG, signatures=sigs)
-    assert {tuple(r) for r in pruned.collect()} == {
+    pruned_rows = [tuple(r) for r in pruned.collect()]
+    assert len(set(pruned_rows)) == len(pruned_rows)
+    assert set(pruned_rows) == {
         r for r in rows
         if min(ns[r[0]], ns[r[1]]) >= t * max(ns[r[0]], ns[r[1]])
     }
