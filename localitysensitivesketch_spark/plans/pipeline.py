@@ -639,7 +639,8 @@ class DedupPipeline:
                 key,
                 documents,
                 compute,
-                # cast to long BEFORE hashing — xxhash64 is type-sensitive
+                # cast to long BEFORE hashing — xxhash64 is type-sensitive,
+                # so a doc's slice does not depend on the id column's type
                 F.pmod(
                     F.xxhash64(F.col(id_col).cast("long")), F.lit(self.N_PART_KEYS)
                 ),
