@@ -416,6 +416,16 @@ def test_per_partition_resume_reuses_completed_slices(spark, tmp_path):
     )
     assert calls3 == [] and out2.count() == 120
 
+    # stores sliced before the key became an argument kept it in every
+    # slice as a part_key column; read strips it along with __slice
+    legacy = CheckpointStore(spark, str(tmp_path / "legacy"), CFG)
+    legacy.resume_partitioned(
+        "signatures", docs,
+        lambda sub: compute(sub).withColumn(CheckpointStore.SLICE_COL, pk),
+        pk, n_slices=2,
+    )
+    assert legacy.read("signatures").columns == out.columns
+
     # the pipeline wiring: sliced signature stage, same end-to-end clusters
     p = DedupPipeline(spark, str(tmp_path / "ckpt2"), CFG)
     r_sliced = p.run(docs, signature_slices=4)
