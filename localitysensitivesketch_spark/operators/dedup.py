@@ -40,6 +40,14 @@ def _ceil_safe(x) -> F.Column:
     return F.ceil(F.round(x, 6))
 
 
+def token_set(text: F.Column) -> F.Column:
+    """The distinct lower-cased whitespace tokens of ``text``: the one
+    tokenizer of the token-set joins (:func:`ngram_jaccard_pairs`,
+    :func:`containment_pairs`) and of the curation funnel's containment
+    size rule, which must count the tokens containment compares."""
+    return F.array_distinct(F.split(F.lower(F.trim(text)), r"\s+"))
+
+
 def exact_dup_groups(
     df: DataFrame,
     text_col: str = "text",
@@ -173,9 +181,7 @@ def ngram_jaccard_pairs(
     base = df.select(
         F.col(id_col).alias("doc_id"),
         blk.alias("blk"),
-        F.array_distinct(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias(
-            "toks"
-        ),
+        token_set(F.col(text_col)).alias("toks"),
     ).withColumn("n", F.size("toks"))
 
     if strategy == "auto":
@@ -473,9 +479,7 @@ def containment_pairs(
     base = (
         df.select(
             F.col(id_col).alias("doc_id"),
-            F.array_distinct(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("toks"),
+            token_set(F.col(text_col)).alias("toks"),
         )
         .withColumn("n", F.size("toks"))
         .filter((F.col("n") > 0) & ~((F.col("n") == 1) & (F.element_at("toks", 1) == "")))

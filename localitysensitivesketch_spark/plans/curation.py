@@ -52,6 +52,7 @@ from ..operators.dedup import (
     containment_pairs,
     exact_dedup,
     latest_capture,
+    token_set,
 )
 from ..operators.signatures import with_doc_id
 from ..operators.urls import normalize_urls
@@ -264,11 +265,7 @@ class CurationPipeline:
                 # parallelism
                 sizes = survivors.select(
                     F.col("doc_id"),
-                    F.size(
-                        F.array_distinct(
-                            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-                        )
-                    ).alias("n_toks"),
+                    F.size(token_set(F.col(text_col))).alias("n_toks"),
                 )
                 # the materialize decision is made from the ROOT scan:
                 # `survivors` is a store-reconstruction/semi-join view

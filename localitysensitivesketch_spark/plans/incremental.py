@@ -1,5 +1,5 @@
 """The near-dup spine, written once: signatures → candidates → verify →
-edges → clusters → cluster stats.
+edges → clusters, plus cluster stats as a view over the clusters.
 
 Reference analogue: the one insert path every writer goes through
 (``Sketching/LSSFingerprintAtomic.java:591-690``) — the stream consumer
@@ -11,7 +11,7 @@ new-vs-new (salted/capped band join) and, when stored signatures are
 passed, new-vs-old (one band-key join against them), the pairs are
 verified, and the cluster labels are computed or merged from the edges.
 It calls one hook, ``stage(name, compute) -> DataFrame``, at each of the
-seven stage boundaries (the names of ``DedupPipeline.STAGES``), and its
+six stage boundaries (the names of ``DedupPipeline.STAGES``), and its
 callers differ only in that hook:
 
 * ``DedupPipeline.run`` — commit-or-resume every stage (the signature
@@ -42,7 +42,6 @@ a drop-in for the ``read``/``write`` surface.
 from __future__ import annotations
 
 import functools
-import time
 from typing import TYPE_CHECKING, Callable
 
 from pyspark.sql import DataFrame
@@ -150,8 +149,9 @@ def merge_batch(
 
     Returns every stage under its name: ``signatures`` (the new docs'
     rows), ``candidates``, ``skew_metrics`` (of the new-vs-new band
-    join), ``verified``, ``edges`` (the new ones), ``clusters`` (all
-    docs) and ``cluster_stats``.
+    join), ``verified``, ``edges`` (the new ones) and ``clusters`` (all
+    docs), plus ``cluster_stats``: a lazy group-by of the staged
+    ``clusters``, never a stage of its own.
     """
 
     def _signatures(docs: DataFrame = new_documents) -> DataFrame:
@@ -203,7 +203,6 @@ def merge_batch(
         )
 
     labels = stage("clusters", _clusters)
-    stats = stage("cluster_stats", lambda: cluster_stats(labels))
     return {
         "signatures": sigs,
         "candidates": candidates,
@@ -211,7 +210,7 @@ def merge_batch(
         "verified": verified,
         "edges": edges,
         "clusters": labels,
-        "cluster_stats": stats,
+        "cluster_stats": cluster_stats(labels),
     }
 
 
@@ -238,7 +237,6 @@ def incremental_update(
     fail to find the tables or, worse, merge into a stale lineage.
     """
     cfg = cfg or store.cfg
-    t0 = time.time()
 
     def nm(stage: str) -> str:
         return stage + stage_suffix
@@ -256,61 +254,37 @@ def incremental_update(
         new_documents, all_documents, old_sigs, cfg,
         clusters=store.read(nm("clusters")), id_col=id_col, text_col=text_col,
     )
-    merged_sigs = old_sigs.unionByName(step["signatures"])
-    merged_cands = (
-        store.read(nm("candidates")).unionByName(step["candidates"]).distinct()
-    )
-    # merge the verified table too — a later resume must never pair a stale
-    # 'verified' commit with the merged candidates/edges written below.
-    # Stores committed before verify dropped its two per-side shingle-count
-    # columns still carry them: project onto the columns verify writes now
-    merged_verified = (
-        store.read(nm("verified"))
-        .select(*step["verified"].columns)
-        .unionByName(step["verified"])
-        .distinct()
-    )
-    merged_edges = store.read(nm("edges")).unionByName(step["edges"]).distinct()
-    clusters = step["clusters"]
-    stats = step["cluster_stats"]
 
-    # materialize every frame whose plan reads a stage about to be
-    # rewritten — commits below swap the underlying files (on Iceberg the
-    # snapshot isolation makes this a no-op)
-    merged_sigs = merged_sigs.localCheckpoint(eager=True)
-    merged_cands = merged_cands.localCheckpoint(eager=True)
-    merged_verified = merged_verified.localCheckpoint(eager=True)
-    merged_edges = merged_edges.localCheckpoint(eager=True)
-    clusters = clusters.localCheckpoint(eager=True)
-    stats = stats.localCheckpoint(eager=True)
+    def union(stage: str) -> DataFrame:
+        # projected: 'verified' in older stores has two more columns
+        stored = store.read(nm(stage)).select(*step[stage].columns)
+        return stored.unionByName(step[stage]).distinct()
 
-    wall = time.time() - t0
-    out = {}
-    out["signatures"] = store.write(nm("signatures"), merged_sigs, wall)
-    out["candidates"] = store.write(nm("candidates"), merged_cands, wall)
-    out["verified"] = store.write(nm("verified"), merged_verified, wall)
-    out["edges"] = store.write(nm("edges"), merged_edges, wall)
-    out["clusters"] = store.write(nm("clusters"), clusters, wall)
-    out["cluster_stats"] = store.write(nm("cluster_stats"), stats, wall)
-    # the per-run skew metrics describe only the batch that produced them —
-    # invalidate so a resume recomputes instead of reusing a stale table.
-    # Use the SUFFIXED key (the one this lineage committed under); also
-    # drop the bare key for checkpoints written before suffix-awareness.
+    # every stage is merged — a later resume must never pair a stale
+    # 'verified' commit with the merged candidates/edges — and pinned,
+    # because its plan reads the stage about to be rewritten (commits
+    # swap the underlying files; on Iceberg snapshot isolation makes the
+    # pin a no-op); each commit then records the wall of its own write
+    merged = {
+        "signatures": old_sigs.unionByName(step["signatures"]),
+        "candidates": union("candidates"),
+        "verified": union("verified"),
+        "edges": union("edges"),
+        "clusters": step["clusters"],
+    }
+    merged = {s: df.localCheckpoint(eager=True) for s, df in merged.items()}
+    out = {s: store.write(nm(s), df) for s, df in merged.items()}
+    # the skew metrics describe only the batch that produced them, and a
+    # cluster_stats table (a stage in older stores) the pre-merge clusters:
+    # invalidate both, plus the bare skew key of pre-suffix checkpoints
     store.invalidate(nm("skew_metrics"))
+    store.invalidate(nm("cluster_stats"))
     if stage_suffix:
         store.invalidate("skew_metrics")
-    # cascade: any downstream stage (curation's survivors / containment /
-    # span / funnel tables, keyed via this spine's suffix) now holds
-    # pre-merge content — invalidate every commit whose recorded
-    # dependency chain reaches a table rewritten above, so a later
-    # resume=True recomputes them over the merged spine instead of
-    # silently serving stale survivors
-    rewritten = [
-        nm(s)
-        for s in (
-            "signatures", "candidates", "verified", "edges",
-            "clusters", "cluster_stats", "skew_metrics",
-        )
-    ]
+    # cascade: downstream stages (curation's survivors / containment /
+    # span / funnel tables) whose recorded dependency chain reaches a
+    # table rewritten above hold pre-merge content — invalidate them so
+    # resume=True recomputes them over the merged spine
+    rewritten = [nm(s) for s in (*merged, "skew_metrics")]
     store.invalidate_downstream(rewritten, exclude=rewritten)
     return out

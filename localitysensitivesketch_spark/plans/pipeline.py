@@ -4,8 +4,8 @@ Reference analogue: the sketch window flush + serialize + resume protocol
 (``Sketching/Sub4SketchingKVStream.java:419-452`` — on window boundary,
 serialize the whole sketch state and publish; ``LSSFingerprintAtomic.java:
 1278-1336`` write / ``:1405-1483`` read).  Here every stage boundary is a
-durable table commit: signatures, candidate pairs, verified pairs, edges,
-cluster labels, cluster stats — plus a ``lineage`` manifest recording
+durable table commit: signatures, candidate pairs, skew metrics, verified
+pairs, edges, cluster labels — plus a ``lineage`` manifest recording
 per-stage and per-partition progress + metrics, so any stage is resumable
 (north_rule).
 
@@ -143,7 +143,6 @@ class CheckpointStore:
         self,
         stage: str,
         df: DataFrame,
-        wall_sec: float | None = None,
         operation: str = "overwrite",
         extra_wall_sec: float = 0.0,
     ) -> DataFrame:
@@ -167,12 +166,9 @@ class CheckpointStore:
         publishes a flushed window without re-reading it
         (``Sub4SketchingKVStream.java:419-452``).
 
-        ``wall_sec=None`` (the default for stage runners) records the
-        materialization wall measured around the parquet write itself —
-        callers used to pass ``time.time() - t0`` captured BEFORE the
-        write ran, which timed lazy plan construction (~0 s), not the job.
-        ``extra_wall_sec`` is added on top for stages whose plan
-        CONSTRUCTION runs real jobs (broadcast-guard counts, bloom
+        The lineage's ``wall_sec`` is the wall measured around the parquet
+        write itself; ``extra_wall_sec`` is added on top for stages whose
+        plan CONSTRUCTION runs real jobs (broadcast-guard counts, bloom
         builds in the containment/span tiers) so per-tier walls in the
         lineage log stay honest.
         """
@@ -181,8 +177,7 @@ class CheckpointStore:
         staging = os.path.join(d, f"data.parquet.staging-{uuid.uuid4().hex[:8]}")
         t_write = time.time()
         df.write.mode("overwrite").parquet(staging)
-        if wall_sec is None:
-            wall_sec = time.time() - t_write + extra_wall_sec
+        wall_sec = time.time() - t_write + extra_wall_sec
         if os.path.exists(data_path):
             # archive the superseded version under the snapshot id that
             # produced it (a pre-snapshot-era table gets id 0)
@@ -197,14 +192,10 @@ class CheckpointStore:
         out = self.spark.read.schema(df.schema).parquet(data_path)
         self._commit(stage, out, wall_sec, operation, _footer_rows(data_path))
         self.expire_snapshots(stage)
-        # a stage commit is the natural point where the PREVIOUS stage's
-        # dropped DataFrames stop being reachable, but their
-        # localCheckpoint blocks stay pinned on the executors until the
-        # driver's Python GC releases the py4j refs (only then does
-        # Spark's ContextCleaner unpersist them).  One gc.collect() per
-        # commit (a handful per pipeline run, driver-side, no Spark job)
-        # keeps long multi-stage runs from dragging a growing tail of
-        # dead blocks into every later tier's memory budget.
+        # the previous stages' dropped frames keep their localCheckpoint
+        # blocks pinned until the driver's GC frees the py4j refs (only
+        # then does the ContextCleaner unpersist them): one driver-side
+        # gc.collect() per commit keeps dead blocks from piling up
         gc.collect()
         return out
 
@@ -323,14 +314,21 @@ class CheckpointStore:
                     )
                     + "\n"
                 )
-        full = self.spark.read.parquet(data_path)
-        counts = full.groupBy("__slice").count().collect()
-        parts = sorted([int(s), n] for s, n in counts)
+        # slice rows from the footers (empty slices left out): the read
+        # below, which infers the schema, is the only job beyond the writes
+        parts = []
+        for name in os.listdir(data_path):
+            if name.startswith("__slice="):
+                n = sum(r for _, r in _footer_rows(os.path.join(data_path, name)))
+                if n:
+                    parts.append([int(name.split("=", 1)[1]), n])
+        parts.sort()
+        full = self.read(stage)
         # sliced commits rewrite slice subdirs in place, so there is no
         # superseded whole-table version to archive — the snapshot row
         # still lands (operation marks it) so lineage stays uniform
         self._commit(stage, full, time.time() - t0, "overwrite-sliced", parts)
-        return self.read(stage)
+        return full
 
     def invalidate(self, stage: str) -> None:
         """Drop a stage's commit marker so a later resume recomputes it
@@ -570,7 +568,8 @@ class DedupPipeline:
     """documents → signatures → candidates → verify → edges → clusters,
     every arrow a committed stage table (SURVEY §3.4): :meth:`run` is the
     spine :func:`~.incremental.merge_batch` with a commit-or-resume
-    hook."""
+    hook.  ``PipelineResult.cluster_stats`` is a lazy group-by of the
+    committed clusters, not a stage."""
 
     STAGES = (
         "signatures",
@@ -579,7 +578,6 @@ class DedupPipeline:
         "verified",
         "edges",
         "clusters",
-        "cluster_stats",
     )
 
     def __init__(

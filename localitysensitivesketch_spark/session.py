@@ -47,39 +47,65 @@ def ensure_min_partitions(df, min_partitions: int | None = None):
 
     Guards the operators whose next phase does EXPENSIVE per-row map work
     (Arrow signature kernels, tokenize+explode, the quadratic in-block
-    intersect): Spark sizes a parquet scan's partitions by bytes
-    (``maxPartitionBytes``), so a small-file input — one ~MB file, a
-    coalesced upstream stage, a single unsplittable row group — lands on
-    ONE task and serializes the whole pass while every other core idles
-    (measured: the sf0.1 bench's 5 k-doc single-file scan ran the block
-    Jaccard join and the MinHash signature pass on 1 of 32 cores).
+    intersect): a small-file scan lands on ONE task and serializes the
+    pass while every other core idles (measured: the sf0.1 bench's 5 k-doc
+    single-file scan ran the block Jaccard join and the MinHash signature
+    pass on 1 of 32 cores).  At scale it is a no-op: a 100 TB scan has
+    more partitions than any cluster has cores.  When it fires, it
+    shuffles the caller's column-pruned projection, which can itself be
+    the wide payload (``(doc_id, text)`` for the signature pass and the
+    corpus Arrow scans, whole vectors for ``hyperplane_buckets``).
+    Spark sorts before round-robin (``sortBeforeRepartition``), so
+    retries are deterministic, and every guarded operator is
+    partition-layout-invariant (pinned by the scaling tests).
 
-    At scale this is a no-op by construction: a 100 TB scan has ~10^5+
-    partitions ≥ any cluster's parallelism, so the guard never inserts a
-    shuffle where the input is already wide.  When it does fire, it
-    shuffles the caller's column-pruned projection, and that projection
-    can itself be the wide payload: the signature pass and the corpus
-    Arrow scans round-robin ``(doc_id, text)`` — full document text —
-    and ``hyperplane_buckets`` round-robins whole embedding vectors.
-    Only the columns the caller did not select stay put.  Round-robin
-    keeps sizes balanced regardless of key skew; Spark sorts batches
-    before round-robin (``spark.sql.execution.sortBeforeRepartition``),
-    so retries are deterministic.  All guarded operators are
-    partition-layout-invariant (pinned by the scaling tests), so outputs
-    are unchanged.
-
-    ``None``-safe on non-classic backends: if partition introspection
-    fails, the input is returned untouched.
+    Deciding starts no job.  ``.rdd`` is read only for an exchange-free
+    plan (scans, ``LocalRelation``, checkpointed ``LogicalRDD``): under
+    AQE it runs the stages below an exchange.  A plan whose only
+    exchanges are ``repartition(k)`` keeps ``k`` partitions; any other
+    exchange is coalesced by AQE to partitions of at least
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize``, so it is
+    widened when :func:`estimated_plan_bytes` (unknown = large) puts it
+    below ``n`` of those.  If introspection fails (non-classic
+    backends), the input is returned untouched.
     """
     try:
-        sc = df.sparkSession.sparkContext
-        n = int(min_partitions or sc.defaultParallelism)
-        cur = df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 — connect backend: no RDD access
+        spark = df.sparkSession
+        n = int(min_partitions or spark.sparkContext.defaultParallelism)
+        plan, origins = _exchanges(df)
+        if not origins:
+            narrow = 0 < df.rdd.getNumPartitions() < n
+        elif origins == {"REPARTITION_BY_NUM"}:
+            narrow = plan.outputPartitioning().numPartitions() < n
+        else:
+            est = estimated_plan_bytes(df)
+            parse = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+            min_bytes = parse.byteStringAsBytes(spark.conf.get(
+                "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB"
+            ))
+            narrow = est is not None and est < n * min_bytes
+    except Exception:  # noqa: BLE001 — connect backend: no plan access
         return df
-    if cur >= n or cur <= 0:
-        return df
-    return df.repartition(n)
+    return df.repartition(n) if narrow else df
+
+
+def _exchanges(df):
+    """``df``'s physical plan as planned (under AQE, the adaptive plan's
+    initial one; no job runs) and the origins of its exchanges: each
+    shuffle's ``shuffleOrigin``, ``BROADCAST`` for a broadcast."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    origins, stack = set(), [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "BroadcastExchange":
+            origins.add("BROADCAST")
+        elif node.nodeName() == "Exchange":
+            origins.add(node.shuffleOrigin().toString())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return plan, origins
 
 
 #: inputs estimated below this take the plain two-stage plan — the bloom

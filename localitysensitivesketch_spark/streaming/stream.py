@@ -150,6 +150,7 @@ def process_incremental_batch(
     batch_id: int,
     cfg: SketchConfig,
     store_root: str,
+    all_documents: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
@@ -158,40 +159,41 @@ def process_incremental_batch(
     201-269``): the batch goes through the shared incremental step
     (:func:`~..plans.incremental.merge_batch` — sketch, new-vs-new and
     new-vs-old candidates, verify, cluster merge) against the state
-    accumulated under ``store_root``, and the batch's signatures, docs
-    and edges plus a fresh global cluster snapshot are stored.
+    accumulated under ``store_root``, and the batch's signatures and
+    edges plus a fresh global cluster snapshot are stored.
     Module-level so the replay contract is directly unit-testable;
     :func:`stream_curation` ``dedup=True`` calls it per micro-batch.
 
-    State lives in parquet dirs under ``store_root`` (sigs/, docs/,
-    edges/ per batch, clusters/ the snapshot), so a restart resumes from
-    the stream checkpoint like the reference's deserialize-and-continue
-    path (``LSSFingerprintAtomic.java:1405-1483``).  Other dirs under
-    ``store_root`` (such as the ``pairs/`` table older stores hold) are
-    never read.
+    ``all_documents`` holds every document the state covers, this batch
+    included, once each (old-vs-new pairs verify against its texts, as
+    in :func:`~..plans.incremental.incremental_update`); the store keeps
+    no copy — :func:`stream_curation` passes its curated corpus.
 
-    **Idempotent by construction**: the per-batch tables are partitioned
-    by batch_id and written with DYNAMIC partition overwrite, so when
-    Structured Streaming replays the last uncommitted batch after a
-    failure/restart (same batch_id, same rows), the replay rewrites ITS
-    OWN partition instead of appending duplicate rows (duplicate doc_ids
-    would otherwise inflate every downstream candidate join).  Every
-    state read below excludes rows with the CURRENT batch_id, so a replay
-    sees exactly the pre-batch store state — without this, the batch's
-    own signatures (written by the failed attempt) would re-enter through
-    the uncapped new-vs-old join and re-add intra-batch pairs the width
-    cap deliberately dropped.  An empty batch (e.g. an all-dropped
-    curation batch) adds no state and is a no-op.
+    State lives in parquet dirs under ``store_root`` (sigs/ and edges/
+    per batch, clusters/ the snapshot), so a restart resumes from the
+    stream checkpoint like the reference's deserialize-and-continue
+    path (``LSSFingerprintAtomic.java:1405-1483``).  Other dirs under
+    ``store_root`` (such as the ``docs/`` and ``pairs/`` tables older
+    stores hold) are never read.
+
+    **Idempotent by construction**: the per-batch tables are written by
+    batch_id with DYNAMIC partition overwrite, so a Structured Streaming
+    replay of the last uncommitted batch (same batch_id, same rows)
+    rewrites ITS OWN partition instead of appending duplicates.  Every
+    state read excludes the CURRENT batch_id, so a replay sees exactly
+    the pre-batch state — otherwise the failed attempt's signatures
+    would re-enter through the uncapped new-vs-old join and re-add the
+    intra-batch pairs the width cap dropped.  An empty batch (e.g. an
+    all-dropped curation batch) adds no state and is a no-op.
     """
     from ..plans.incremental import merge_batch
 
     # one signature row per batch row, so an empty batch would add no
     # state: return before anything is sketched, verified or rewritten;
-    # the probe also settles the emptiness of the sigs and docs writes
+    # the probe also settles the emptiness of the sigs write
     if batch_df.isEmpty():
         return
     sig_path = os.path.join(store_root, "sigs")
-    doc_path = os.path.join(store_root, "docs")
     edge_path = os.path.join(store_root, "edges")
     cluster_path = os.path.join(store_root, "clusters")
 
@@ -206,18 +208,12 @@ def process_incremental_batch(
             .drop("batch_id")
         )
 
-    batch_docs = batch_df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).alias("text"),
-    )
-    old_docs = prior(doc_path)
-    all_docs = batch_docs if old_docs is None else old_docs.unionByName(batch_docs)
     old_clusters = None
     if os.path.exists(cluster_path):
         old_clusters = spark.read.parquet(cluster_path)
     step = merge_batch(
-        batch_docs, all_docs, prior(sig_path), cfg,
-        clusters=old_clusters,
+        batch_df, all_documents, prior(sig_path), cfg,
+        clusters=old_clusters, id_col=id_col, text_col=text_col,
         # no snapshot (first window, or a crash between the two renames
         # below): the labels are rebuilt from the durably stored edges
         old_edges=None if old_clusters is not None else prior(edge_path),
@@ -225,7 +221,6 @@ def process_incremental_batch(
     # pinned: its plan reads the snapshot rewritten below
     clusters = step["clusters"].localCheckpoint(eager=True)
     _write_by_batch(step["signatures"], sig_path, batch_id, empty=False)
-    _write_by_batch(batch_docs, doc_path, batch_id, empty=False)
     _write_by_batch(step["edges"], edge_path, batch_id)
     # global snapshot via staged write + rename swap: a bare
     # mode("overwrite") clears the old directory BEFORE the new data
@@ -233,9 +228,8 @@ def process_incremental_batch(
     # that a replay would silently merge against.  With the swap, every
     # crash point is safe: mid-staging ⇒ stale staging removed on next
     # entry; between the two renames ⇒ cluster_path absent and the replay
-    # rebuilds the snapshot from the durably stored per-batch docs+edges.
-    # (On an object store / Iceberg this is a snapshot commit instead of
-    # a rename.)
+    # rebuilds it from ``all_documents`` and the stored per-batch edges.
+    # (On an object store / Iceberg this is a snapshot commit instead.)
     import shutil
 
     staging = cluster_path + "__staging"
@@ -408,10 +402,13 @@ def stream_curation(
             id_col=id_col, text_col=text_col, gopher_kwargs=gopher_kwargs,
             blocklist=blocklist, url_col=url_col, redact=redact,
         )
-        if dedup:
+        # no curated/ yet means every batch so far was all-dropped: there
+        # is nothing to dedup (a later empty batch returns inside the step)
+        if dedup and os.path.isdir(os.path.join(store_root, "curated")):
             process_incremental_batch(
                 spark, curated, batch_id, cfg or SketchConfig(),
                 os.path.join(store_root, "dedup"),
+                read_curated(spark, store_root),
                 id_col=id_col, text_col=text_col,
             )
 

@@ -544,8 +544,7 @@ def test_stage_keys_are_stable(all_tiers):
     releases resumes, and a full-row commit from the removed wide format
     (its keys lacked the ``fmt`` param) can never be read as a keep-list."""
     assert sorted(all_tiers[3].stages_run) == [
-        "candidates@4775d8d4", "captures@6cc9cb4c", "cluster_stats@4775d8d4",
-        "clusters@4775d8d4", "containment_kept@3e7be0a7", "edges@4775d8d4",
+        "candidates@4775d8d4", "captures@6cc9cb4c", "clusters@4775d8d4", "containment_kept@3e7be0a7", "edges@4775d8d4",
         "exact_kept@6a5f2cf7", "funnel@adfb2c68", "quality@c30fe20d",
         "signatures@4775d8d4", "skew_metrics@4775d8d4",
         "span_cleaned@6e81b90b", "survivors@f9d8dda0", "verified@4775d8d4",

@@ -1033,6 +1033,32 @@ def test_ensure_min_partitions_widens_narrow_input_only(spark):
     assert ensure_min_partitions(narrow, 7).rdd.getNumPartitions() == 7
 
 
+def test_signatures_over_a_join_start_no_job_at_plan_time(spark, tmp_path, job_ids):
+    """Building compute_signatures over an input with an exchange (the
+    curation funnel's quality-gated semi-join) starts no Spark job: the
+    widening decision reads the plan, never ``.rdd``."""
+    from localitysensitivesketch_spark.operators.signatures import (
+        compute_signatures,
+    )
+
+    cfg = SketchConfig(n_hashes=16, bands=4, rows=4)
+    path = str(tmp_path / "docs")
+    with_doc_id(corpus_to_spark(spark, generate_corpus(60, seed=9))).write.parquet(
+        path
+    )
+    docs = spark.read.parquet(path)
+    passed = docs.join(
+        docs.filter(F.col("doc_id") % 3 != 0).select("doc_id"), "doc_id", "left_semi"
+    )
+    with job_ids("signatures-over-semi-join") as ids:
+        sigs = compute_signatures(passed, cfg)
+    assert ids == []
+    want = compute_signatures(docs, cfg).filter(F.col("doc_id") % 3 != 0)
+    assert sorted(map(tuple, sigs.select("doc_id", "minhash").collect())) == sorted(
+        map(tuple, want.select("doc_id", "minhash").collect())
+    )
+
+
 def test_signature_pass_parallelizes_single_partition_scan(spark):
     """A one-file/one-partition corpus must not serialize the Arrow
     signature kernel on a single core: compute_signatures widens the

@@ -208,10 +208,32 @@ def test_commit_starts_no_job_beyond_its_data_write(spark, tmp_path, job_ids):
     assert [s["rows"] for s in store.snapshots("t")] == [7, 7]
 
 
+def test_sliced_commit_counts_slice_rows_from_footers(spark, tmp_path, job_ids):
+    """A sliced commit starts the jobs of its slice writes plus one: the
+    schema-inferring read-back.  Its per-slice rows come from the slice
+    directories' footers and leave out slices without rows."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(400).withColumn("k", F.col("id") % 3)
+    key = F.col("k")  # k == 3 never holds: slice 3 has no rows
+    with job_ids("bare-slices") as bare:
+        for s in range(4):
+            df.filter(F.pmod(key, F.lit(4)) == s).write.mode("overwrite").parquet(
+                str(tmp_path / "bare" / f"__slice={s}")
+            )
+    store = CheckpointStore(spark, str(tmp_path / "sliced"), CFG)
+    with job_ids("sliced-commit") as sliced:
+        out = store.resume_partitioned("t", df, lambda d: d, key, n_slices=4)
+    assert len(bare) == 4 and len(sliced) <= len(bare) + 1, (bare, sliced)
+    assert _marker(store, "t")["partitions"] == [[0, 134], [1, 133], [2, 133]]
+    assert _marker(store, "t")["rows"] == out.count() == 400
+    assert sorted(out.columns) == ["id", "k"]
+
+
 def _assert_stage_markers(spark, pipe, res) -> dict[str, int]:
     frames = (
         res.signatures, res.candidates, res.skew_metrics, res.verified,
-        res.edges, res.clusters, res.cluster_stats,
+        res.edges, res.clusters,
     )
     rows = {}
     for stage, frame in zip(DedupPipeline.STAGES, frames):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -133,7 +135,11 @@ def test_incremental_update_equals_full_run(spark, tmp_path):
     table carries the two int columns verify wrote before it dropped
     them.  On the second input the MERGE first crashes right after its
     first commit and is then retried, so the assertions below also hold
-    for a retried merge."""
+    for a retried merge.  Each merge commit records the wall of its own
+    write, so together they never exceed the merge's wall."""
+    import json
+    import time
+
     from localitysensitivesketch_spark.operators.cluster import (
         connected_components,
     )
@@ -167,12 +173,19 @@ def test_incremental_update_equals_full_run(spark, tmp_path):
             with pytest.raises(RuntimeError, match="between commits"):
                 incremental_update(pipe.store, docs, new_docs, CFG)
             del pipe.store.write
+        lineage = root / "inc" / "lineage.jsonl"
+        n_before = len(lineage.read_text().splitlines())
+        t0 = time.time()
         out = incremental_update(pipe.store, docs, new_docs, CFG)
+        merge_wall = time.time() - t0
+        merge_rows = lineage.read_text().splitlines()[n_before:]
+        assert sum(json.loads(r)["wall_sec"] for r in merge_rows) <= merge_wall
+        assert len(merge_rows) == 5, seed
         inc_clusters = _labels(out["clusters"])
 
         store = str(root / "stream")
-        ST.process_incremental_batch(spark, old_docs, 0, CFG, store)
-        ST.process_incremental_batch(spark, new_docs, 1, CFG, store)
+        ST.process_incremental_batch(spark, old_docs, 0, CFG, store, old_docs)
+        ST.process_incremental_batch(spark, new_docs, 1, CFG, store, docs)
         stream_clusters = _labels(spark.read.parquet(f"{store}/clusters"))
 
         full = DedupPipeline(spark, str(root / "full"), CFG).run(docs)
@@ -322,23 +335,28 @@ def test_incremental_candidates_replay_is_idempotent(spark, tmp_path):
     b0 = docs.filter(F.xxhash64("doc_id") % 2 == 0)
     b1 = docs.filter(F.xxhash64("doc_id") % 2 != 0)
 
-    ST.process_incremental_batch(spark, b0, 0, CFG, store)
-    ST.process_incremental_batch(spark, b1, 1, CFG, store)
+    ST.process_incremental_batch(spark, b0, 0, CFG, store, b0)
+    ST.process_incremental_batch(spark, b1, 1, CFG, store, docs)
     tables = {
         "sigs": ["doc_id", "simhash", "batch_id"],
-        "docs": ["doc_id", "text", "batch_id"],
         "edges": ["id1", "id2", "batch_id"],
         "clusters": ["doc_id", "cluster_id"],
     }
     before = {t: _stored(spark, store, t, c) for t, c in tables.items()}
-    assert len(before["sigs"]) == 60 and len(before["docs"]) == 60
+    assert len(before["sigs"]) == 60 and len(before["clusters"]) == 60
     assert before["edges"]
-    # a store from before pairs/ was dropped still carries that dir
-    spark.createDataFrame([(1, 2, 0)], "id1 long, id2 long, batch_id int") \
-        .write.partitionBy("batch_id").parquet(f"{store}/pairs")
+    # a store from before pairs/ and docs/ were dropped still carries both
+    # dirs; they are never read
+    for table, row, schema in (
+        ("pairs", (1, 2, 0), "id1 long, id2 long, batch_id int"),
+        ("docs", (1, "stale", 0), "doc_id long, text string, batch_id int"),
+    ):
+        spark.createDataFrame([row], schema).write.partitionBy(
+            "batch_id"
+        ).parquet(f"{store}/{table}")
     # replay the last batch (crash-before-commit): same batch_id, same rows,
-    # store already holds batch 1's sigs/docs/edges and the merged snapshot
-    ST.process_incremental_batch(spark, b1, 1, CFG, store)
+    # store already holds batch 1's sigs/edges and the merged snapshot
+    ST.process_incremental_batch(spark, b1, 1, CFG, store, docs)
     after = {t: _stored(spark, store, t, c) for t, c in tables.items()}
     for t, rows in after.items():
         assert len(rows) == len(set(rows)), f"duplicate rows in {t}/"
@@ -373,16 +391,16 @@ def test_bloom_prefilter_members_and_plan(spark):
 
 def _feed_files(spark, path, store):
     """One process_incremental_batch per parquet file of ``path`` — the
-    micro-batches a ``maxFilesPerTrigger=1`` stream would cut.  Returns
-    the batches."""
+    micro-batches a ``maxFilesPerTrigger=1`` stream would cut, each with
+    the files read so far as its documents.  Returns the batches."""
     import glob
 
-    batches = [
-        spark.read.parquet(f)
-        for f in sorted(glob.glob(f"{path}/part-*.parquet"))
-    ]
+    files = sorted(glob.glob(f"{path}/part-*.parquet"))
+    batches = [spark.read.parquet(f) for f in files]
     for bid, b in enumerate(batches):
-        ST.process_incremental_batch(spark, b, bid, CFG, store)
+        ST.process_incremental_batch(
+            spark, b, bid, CFG, store, spark.read.parquet(*files[: bid + 1])
+        )
     return batches
 
 
@@ -404,18 +422,22 @@ def test_streaming_full_pipeline_clusters_match_batch(spark, tmp_path):
 
     # replay the LAST batch with the same batch_id against the already-
     # written store: snapshot and per-batch tables must be unchanged
+    edges = _stored(spark, store, "edges", ["id1", "id2", "batch_id"])
     ST.process_incremental_batch(
-        spark, batches[-1], len(batches) - 1, CFG, store
+        spark, batches[-1], len(batches) - 1, CFG, store,
+        spark.read.parquet(path),
     )
     assert _labels(spark.read.parquet(f"{store}/clusters")) == want
-    assert spark.read.parquet(f"{store}/docs").count() == 80  # no dup rows
+    assert spark.read.parquet(f"{store}/sigs").count() == 80  # no dup rows
+    assert _stored(spark, store, "edges", ["id1", "id2", "batch_id"]) == edges
 
 
 def test_streaming_snapshot_crash_between_renames_recovers(spark, tmp_path):
     """The snapshot swap's worst crash point — old snapshot renamed away,
     new one not yet in place (cluster_path absent) — must recover on
-    replay: the shared step rebuilds the snapshot from the durably stored
-    per-batch docs+edges.  Stale staging garbage must also be tolerated."""
+    replay: the shared step rebuilds the snapshot from the documents and
+    the durably stored per-batch edges.  Stale staging garbage must also
+    be tolerated."""
     import os
     import shutil
 
@@ -429,7 +451,8 @@ def test_streaming_snapshot_crash_between_renames_recovers(spark, tmp_path):
     # plus stale staging garbage from the interrupted attempt
     (tmp_path / "store_crash" / "clusters__staging").mkdir()
     ST.process_incremental_batch(
-        spark, batches[-1], len(batches) - 1, CFG, store
+        spark, batches[-1], len(batches) - 1, CFG, store,
+        spark.read.parquet(path),
     )
     assert _labels(spark.read.parquet(f"{store}/clusters")) == want
     assert not os.path.exists(f"{store}/clusters__old")
@@ -571,11 +594,13 @@ def test_stream_curation_end_to_end_with_dedup(spark, tmp_path):
     assert got_md5 == want_md5
     assert len(got_md5) == len(set(got_md5))  # one doc per surviving text
 
-    # the chained near-dup tier ran per batch over survivors only
+    # the chained near-dup tier ran per batch over survivors only, and
+    # reads their texts from curated/ rather than a copy of its own
     clusters = spark.read.parquet(f"{store}/dedup/clusters")
     assert sorted(r["doc_id"] for r in clusters.collect()) == sorted(
         r["doc_id"] for r in curated.collect()
     )
+    assert not os.path.exists(f"{store}/dedup/docs")
 
 
 def test_curation_all_dropped_first_batch_does_not_poison_store(spark, tmp_path):
@@ -717,5 +742,6 @@ def test_stream_curation_all_dropped_first_batch_skips_near_dup_tier(
     _os.remove(f"{commits}/.1.crc")
     run_stream()  # Structured Streaming replays batch 1
     assert clusters() == want
-    assert spark.read.parquet(f"{store}/dedup/docs").count() == len(want)
+    assert spark.read.parquet(f"{store}/dedup/sigs").count() == len(want)
+    assert not _os.path.exists(f"{store}/dedup/docs")
     assert ST.read_curated(spark, store).count() == len(want)

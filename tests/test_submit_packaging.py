@@ -70,7 +70,7 @@ def test_spark_submit_pyfiles_end_to_end(corpus, input_parquet, tmp_path):
     assert 0 < metrics["n_clusters"] < len(corpus)  # fixture plants dups
     assert set(metrics["stages_run"]) == set(
         ("signatures", "candidates", "skew_metrics", "verified", "edges",
-         "clusters", "cluster_stats")
+         "clusters")
     )
     for leaf in ("clusters.parquet", "cluster_stats.parquet", "keep.parquet"):
         assert os.path.exists(os.path.join(out_dir, leaf, "_SUCCESS"))

@@ -13,7 +13,10 @@ Checks, per representative operator:
   * whole-stage codegen present in JVM-side pipelines;
   * no Python-list scans in the bookkeeping tables (the stream's per-batch
     metrics row and the curation funnel audit must plan as LocalRelation
-    or Range, never as a LogicalRDD whose every action runs Python tasks).
+    or Range, never as a LogicalRDD whose every action runs Python tasks);
+  * building an operator over an exchange-bearing input starts no Spark
+    job (the signature pass over the quality gate's semi-join; job ids
+    are read from the application status store).
 
 Usage: python tools/explain_audit.py [sf_dir]
 """
@@ -180,6 +183,21 @@ def main() -> int:
             if "LogicalRDD" in df._jdf.queryExecution().optimizedPlan().toString()
         ]
     check("no-python-list-scans", not bad, ", ".join(bad))
+
+    # 12. plan building starts no job: the signature pass over a semi-join
+    # (the curation funnel's quality-gated input) only builds a plan
+    sc = spark.sparkContext
+    passed = docs.join(
+        docs.filter(F.col("lang") == "en").select("doc_id"), "doc_id", "left_semi"
+    )
+    sc.setJobGroup("plan-time-jobs", "plan-time-jobs")
+    try:
+        compute_signatures(passed, SketchConfig())
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)  # every job start landed
+    started = list(sc.statusTracker().getJobIdsForGroup("plan-time-jobs"))
+    check("no-plan-time-jobs", not started, f"jobs {started}" if started else "")
 
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nall green")
     spark.stop()

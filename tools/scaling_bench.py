@@ -81,7 +81,7 @@ def run_level(cpus: int, data: str) -> dict:
     phase_end = {
         "signatures": "signatures",
         "edges": "candidates_verify",
-        "cluster_stats": "cluster",
+        "clusters": "cluster",
     }
     phases: dict[str, float] = {}
     t0 = time.time()
